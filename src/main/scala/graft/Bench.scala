@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the harness's
   * CPU count.
@@ -34,38 +33,14 @@ import org.apache.spark.sql.SparkSession
   * local[32]/sf0.1 show AQE's partition coalescing beats the tiny-task
   * scheduling overhead of fixed 32-partition shuffles across the ~15
   * multi-stage queries (the round-1 AQE-off default was tuned at
-  * local[4] and inverted at the harness's 32 threads). Override via
-  * SPARK_GRAFT_AQE=false for paired measurements.
+  * local[4] and inverted at the harness's 32 threads).
   *
   * Optional argv(0): comma-separated key filter for targeted timing.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/tests: the events µs derivation casts NTZ→LTZ
-      // through the session timezone; unpinned, Bench would time (and a
-      // user would get) host-tz-dependent values while the UTC-pinned
-      // oracle gate still passed (ADVICE r8).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Single-tenant application: session-artifact ISOLATION off (static
-      // conf, r19). This engine never calls addArtifact, but with
-      // isolation on (the default) every STREAMING query run clones the
-      // session into a fresh artifact classloader — and the codegen cache
-      // is keyed on (context classloader, source), so each stream start
-      // re-Janino-compiles its entire plan (measured: 17–49 compiles per
-      // run, 0 with isolation off; ~0.2–0.5 s per streaming key per run)
-      // and every class resolution probes the RPC artifact chain. Off is
-      // the right production setting for any single-tenant Spark app; a
-      // multi-tenant Connect server would keep it on and pay the tax.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm-up outside the timed region: JVM/codegen, the parquet reader,
     // and the non-parquet codec paths (ORC/CSV/JSON/Avro each lazy-load
     // codec classes on first use — round 1 charged that to the first
@@ -168,8 +143,7 @@ object Bench {
     // single-run artifacts). Rep 1 carries the full attribution meters
     // (exec_detail/gc/peak/retries — and the codegen compile cost, which
     // the median of [cold, warm, warm] correctly strips from wall).
-    // SPARK_GRAFT_REPS=1 restores the old single-run behavior.
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
+    val reps = 3
     def median(v: Seq[Double]): Double = {
       val s = v.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -185,17 +159,14 @@ object Bench {
         var gcDelta = 0L; var peakMb = 0L; var ftD = 0L; var srD = 0L
         var rp = 0
         while (rp < reps && err.isEmpty) {
-          // Collect the previous work's garbage BEFORE resetting the peak
-          // meters (outside the timed region): at -Xmx8g the JVM collects
-          // lazily, so without this a key's "peak" reading rides on
-          // whatever uncollected garbage earlier keys left behind — the
-          // round-5 driver artifact recorded 4.6 GB peaks on llm_* keys
-          // that allocate ~1.5 GB themselves, and the claim/artifact
-          // discrepancy could not be adjudicated. One System.gc() per rep
-          // costs ~10-40 ms of untimed wall and makes peakMb attributable
-          // to the key that actually allocated it. SPARK_GRAFT_KEYGC=false
-          // disables it for paired measurements of the GC's own cost.
-          if (sys.env.getOrElse("SPARK_GRAFT_KEYGC", "true") != "false") System.gc()
+          // Settle the previous work BEFORE resetting the peak meters
+          // (outside the timed region): drop the blocks it left persisted
+          // and collect. At -Xmx8g the JVM collects lazily, so without
+          // this a key's "peak" reading rides on whatever uncollected
+          // garbage earlier keys left behind — the round-5 bench artifact
+          // recorded 4.6 GB peaks on llm_* keys that allocate ~1.5 GB
+          // themselves. The collection costs ~10-40 ms of untimed wall.
+          GraftSession.settle(spark)
           if (rp == 0) heapPools.foreach(_.resetPeakUsage())
           val gc0 = gcMs()
           val cpu0 = cpuSec()
@@ -223,17 +194,12 @@ object Bench {
               // 1028-slot capacity — clamp; the count delta stays exact
               math.max(0L, cgMsTotal() - cgMs0))
           }
-          // outside the timed region: drop any persisted blocks the query
-          // left behind (iterative ops localCheckpoint; builders are pure,
-          // nothing is reused across keys) so one key's artifacts don't
-          // ride the heap into every later key's peak reading
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
           rp += 1
         }
         (name, (walls.min, median(walls.toSeq), walls.max), err, gcDelta,
           peakMb, median(cpuSecs.toSeq), ftD, srD)
       }
+    GraftSession.settle(spark)
     val loadEnd = loadAvg()
     def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
     def r2(v: Double): String = "%.2f".formatLocal(java.util.Locale.US, v)

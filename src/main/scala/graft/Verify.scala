@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,7 @@ object Verify {
     val keep: String => Boolean =
       if (args.length > 2 && args(2).nonEmpty) args(2).split(",").toSet
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: single-tenant app, artifact isolation off (see
-      // Bench.scala — streaming codegen cache stability)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Size-gated dump default (r10 verdict #7): at stress scale the
     // coalesce(1) single-task write dominates (astro at ×100: 505 s →
@@ -89,17 +78,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-key hygiene: drop persisted blocks (localCheckpoints) the
-      // query left behind — builders are pure, nothing is shared
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // ... and nudge the ContextCleaner: broadcast blocks (one or more
-      // per key — dims, planes, digests) are only reclaimed when the JVM
-      // GCs their driver-side references, and at -Xmx8g a 160-key run
-      // accretes enough un-collected broadcast storage that a late heavy
-      // key can hit UNABLE_TO_ACQUIRE_MEMORY (graph_pagerank at the
-      // round-10 full ×100 gate — passed standalone, OOMed mid-suite)
-      System.gc()
+      GraftSession.settle(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

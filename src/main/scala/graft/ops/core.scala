@@ -153,6 +153,44 @@ object GraftTmp {
     java.nio.file.Files.createDirectories(d)
     d.toString
   }
+  /** A new directory `<prefix>_<12 hex chars>` per call: for builders
+    * (stream checkpoints, per-build tables) that must never meet an
+    * earlier run's files. */
+  def fresh(prefix: String): String =
+    dir(s"${prefix}_${java.util.UUID.randomUUID.toString.replace("-", "").take(12)}")
+}
+
+/** The one registration for the shared `graftcat` catalog — every
+  * scored key that touches it (relational catalog keys, the streaming
+  * table source) goes through here so the warehouse location and
+  * catalog options can never drift between call sites. Idempotent:
+  * keys stay order-independent in a shared session. */
+object Graftcat {
+  def register(s: SparkSession, warehouse: String = "graftcat_wh"): Unit = {
+    s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
+    s.conf.set("spark.sql.catalog.graftcat.warehouse", GraftTmp.dir(warehouse))
+  }
+
+  /** The preamble of every flow that owns `graftcat.lake` tables:
+    * register, create the `lake` namespace, drop the named tables so the
+    * flow starts from an empty table whatever ran before it. */
+  def fresh(s: SparkSession, tables: String*): Unit = freshIn(s, "graftcat_wh", tables: _*)
+
+  /** [[fresh]] against a warehouse of its own (a session whose catalog
+    * must not share tables with the default one). */
+  def freshIn(s: SparkSession, warehouse: String, tables: String*): Unit = {
+    register(s, warehouse)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
+    tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS graftcat.lake.$t"))
+  }
+
+  /** The session's `graftcat` instance, for catalog calls with no SQL form. */
+  def instance(s: SparkSession): graft.sources.GraftCatalog =
+    s.sessionState.catalogManager.catalog("graftcat")
+      .asInstanceOf[graft.sources.GraftCatalog]
+
+  def ident(name: String): org.apache.spark.sql.connector.catalog.Identifier =
+    org.apache.spark.sql.connector.catalog.Identifier.of(Array("lake"), name)
 }
 
 /** Determinism helpers (SURVEY §7.3). The DuckDB oracle compare is
@@ -167,18 +205,6 @@ object GraftTmp {
   *    which disagree on shortest-decimal vs binary midpoints.
   *  - Never ORDER BY an unrounded double without a unique tiebreak.
   */
-/** The one registration for the shared `graftcat` catalog — every
-  * scored key that touches it (relational catalog keys, the streaming
-  * table source) goes through here so the warehouse location and
-  * catalog options can never drift between call sites. Idempotent:
-  * keys stay order-independent in a shared session. */
-object Graftcat {
-  def register(s: org.apache.spark.sql.SparkSession): Unit = {
-    s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graftcat.warehouse", GraftTmp.dir("graftcat_wh"))
-  }
-}
-
 object Det {
   /** Exact decimal for 2-dp money columns; wide enough for sums. */
   def money(c: Column): Column = c.cast(DecimalType(18, 2))

@@ -192,8 +192,8 @@ object Joins {
         s.catalog.listTables().collect()
           .filter(_.name.startsWith("graft_bucketed_"))
           .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-        val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-        val tmp = GraftTmp.dir(s"bucket_$tag")
+        val tmp = GraftTmp.fresh("bucket")
+        val tag = tmp.takeRight(12)
         val o = s"graft_bucketed_o_$tag"
         val l = s"graft_bucketed_l_$tag"
         // repartition to the bucket hash BEFORE the write: Spark's
@@ -428,14 +428,9 @@ object Joins {
     * the exact economics Iceberg/Delta bucketing sells. */
   private[graft] def catalogBucketedSpj(s: SparkSession, dir: String): DataFrame = {
     val s2 = spjSession(s)
-    s2.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
-    s2.conf.set("spark.sql.catalog.graftcat.warehouse",
-      graft.ops.GraftTmp.dir("graftcat_spj_wh"))
+    Graftcat.freshIn(s2, "graftcat_spj_wh", "orders_b", "lineitem_b")
     T(s2, dir, "orders").createOrReplaceTempView("graft_bspj_orders")
     T(s2, dir, "lineitem").createOrReplaceTempView("graft_bspj_lineitem")
-    s2.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s2.sql("DROP TABLE IF EXISTS graftcat.lake.orders_b")
-    s2.sql("DROP TABLE IF EXISTS graftcat.lake.lineitem_b")
     s2.sql("""CREATE TABLE graftcat.lake.orders_b
              |(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)
              |PARTITIONED BY (bucket(16, o_orderkey))""".stripMargin)

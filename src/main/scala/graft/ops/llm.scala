@@ -209,9 +209,7 @@ object Llm {
     * hash-exact because signatures, band keys and the verify are the
     * same md5-prefix spelling. */
   private def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
-    Graftcat.register(s)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.lsh_index")
+    Graftcat.fresh(s, "lsh_index")
     s.sql("""CREATE TABLE graftcat.lake.lsh_index
             |(doc_id BIGINT, band INT, bv BIGINT)""".stripMargin)
     val sh = shingled(s, dir).localCheckpoint()
@@ -511,9 +509,7 @@ object Llm {
     * verify are the same md5-prefix spelling. */
   private def simsearchIncremental(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.expressions.dotD
-    Graftcat.register(s)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.ann_index")
+    Graftcat.fresh(s, "ann_index")
     s.sql("""CREATE TABLE graftcat.lake.ann_index
             |(vec_id BIGINT, t INT, code BIGINT)""".stripMargin)
     val all = embedProdFrame(s, dir).localCheckpoint()

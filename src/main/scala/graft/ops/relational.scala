@@ -80,11 +80,8 @@ object Relational {
     * catalog.loadTable. Swapping this catalog for Iceberg/Delta is a
     * conf change; every query in the library runs unchanged. */
   private def catalogV2Plugin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graftcat.warehouse", GraftTmp.dir("graftcat_wh"))
+    Graftcat.fresh(s, "nation_avro")
     T(s, dir, "nation").createOrReplaceTempView("graft_catv2_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_avro")
     s.sql("""CREATE TABLE graftcat.lake.nation_avro AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_catv2_src""".stripMargin)
     s.sql("""SELECT n_nationkey, n_name, n_regionkey
@@ -427,9 +424,16 @@ object Relational {
     s.table("graft_lc_result").orderBy("o_orderstatus")
   }
 
-  /** Pin the GraftCatalog registration confs — the shared helper so the
-    * warehouse can never drift between relational and streaming keys. */
-  private def graftcat(s: SparkSession): Unit = Graftcat.register(s)
+  /** Files a catalog scan plans: force the (possibly adaptive) plan to
+    * its final form — RDD-level, no rows cross to the driver — then sum
+    * the batch scans' input partitions. */
+  private def plannedFiles(q: DataFrame): Long = {
+    q.queryExecution.toRdd.foreachPartition(_ => ())
+    q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.size
+    }.sum.toLong
+  }
 
   /** Catalog-level schema evolution (round-12 verdict #1): ALTER TABLE
     * ADD/RENAME/DROP COLUMN against a GraftCatalog table rewrites ONLY
@@ -442,10 +446,8 @@ object Relational {
     * metadata per ALTER vs an O(table) rewrite — the only evolution
     * model that survives at scale. */
   private def catalogSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_evo")
     T(s, dir, "nation").createOrReplaceTempView("graft_evo_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_evo")
     // v1 shape: (n_nationkey, n_name) — these files are never rewritten
     s.sql("""CREATE TABLE graftcat.lake.nation_evo AS
             |SELECT n_nationkey, n_name FROM graft_evo_src
@@ -473,10 +475,8 @@ object Relational {
     * (AvroFilterEval). The most-used lakehouse write op after append.
     * Null semantics are SQL's: delete iff the predicate is TRUE. */
   private def catalogDeleteWhere(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_del")
     T(s, dir, "nation").createOrReplaceTempView("graft_del_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_del")
     s.sql("""CREATE TABLE graftcat.lake.nation_del AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_del_src""".stripMargin)
     s.sql("""DELETE FROM graftcat.lake.nation_del
@@ -499,10 +499,8 @@ object Relational {
     * one manifest; time travel costs nothing at write time beyond the
     * manifest append — exactly Iceberg's snapshot-log design. */
   private def catalogTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_tt")
     T(s, dir, "nation").createOrReplaceTempView("graft_tt_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_tt")
     // v0 = CREATE (empty), v1 = the CTAS append
     s.sql("""CREATE TABLE graftcat.lake.nation_tt AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_tt_src
@@ -536,19 +534,15 @@ object Relational {
     * additionally asserts orphans are physically gone and expired
     * versions refuse to load. */
   private def catalogSnapshotExpire(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_vac")
     T(s, dir, "nation").createOrReplaceTempView("graft_vac_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_vac")
     s.sql("""CREATE TABLE graftcat.lake.nation_vac AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_vac_src""".stripMargin)
     s.sql("""DELETE FROM graftcat.lake.nation_vac
             |WHERE n_regionkey IN (1, 3) OR n_nationkey > 20""".stripMargin)
-    val cat = s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
+    val cat = Graftcat.instance(s)
     cat.expireSnapshots(
-      org.apache.spark.sql.connector.catalog.Identifier.of(
-        Array("lake"), "nation_vac"), retainLast = 1)
+      Graftcat.ident("nation_vac"), retainLast = 1)
     // TIME-composed flavor (round 17 — Iceberg's
     // expire_snapshots(older_than, retain_last)): one more DML round,
     // then "expire older than now, keep last 1" via the CALL surface —
@@ -577,10 +571,8 @@ object Relational {
     * original names). At 100 TB an UPDATE of one key costs one group,
     * not one table — and every pre-UPDATE version stays readable. */
   private def catalogUpdateWhere(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_upd")
     T(s, dir, "nation").createOrReplaceTempView("graft_upd_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_upd")
     s.sql("""CREATE TABLE graftcat.lake.nation_upd AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_upd_src""".stripMargin)
     s.sql("""UPDATE graftcat.lake.nation_upd
@@ -599,10 +591,8 @@ object Relational {
     * source touches one group rewrites one group. Oracle spells the
     * same three-way outcome as a left join + anti-join union. */
   private def catalogMergeInto(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_mrg")
     T(s, dir, "nation").createOrReplaceTempView("graft_mrg_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_mrg")
     s.sql("""CREATE TABLE graftcat.lake.nation_mrg AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_mrg_src""".stripMargin)
     s.sql("""MERGE INTO graftcat.lake.nation_mrg AS t
@@ -629,10 +619,8 @@ object Relational {
     * to readers. At 100 TB compaction is what keeps file counts O(
     * buckets) instead of O(commits) — planning cost control. */
   private def catalogCompactFiles(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_cmp")
     T(s, dir, "nation").createOrReplaceTempView("graft_cmp_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_cmp")
     s.sql("""CREATE TABLE graftcat.lake.nation_cmp
             |(n_nationkey INT, n_name STRING, n_regionkey INT)
             |PARTITIONED BY (bucket(4, n_nationkey))""".stripMargin)
@@ -641,10 +629,8 @@ object Relational {
       s.sql(s"""INSERT INTO graftcat.lake.nation_cmp
                |SELECT n_nationkey, n_name, n_regionkey FROM graft_cmp_src
                |WHERE n_regionkey = $r""".stripMargin)
-    val cat = s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
-    cat.compactTable(org.apache.spark.sql.connector.catalog.Identifier.of(
-      Array("lake"), "nation_cmp"))
+    val cat = Graftcat.instance(s)
+    cat.compactTable(Graftcat.ident("nation_cmp"))
     s.sql("""SELECT n_nationkey, n_name, n_regionkey
             |FROM graftcat.lake.nation_cmp ORDER BY n_nationkey""".stripMargin)
   }
@@ -658,17 +644,13 @@ object Relational {
     * trained on, reproducible forever regardless of later DML. The
     * scored result reads the same table at the tag and at HEAD. */
   private def catalogVersionRefs(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_ref")
     T(s, dir, "nation").createOrReplaceTempView("graft_ref_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_ref")
     s.sql("""CREATE TABLE graftcat.lake.nation_ref AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_ref_src
             |WHERE n_nationkey < 12""".stripMargin)
-    val cat = s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
-    cat.tagVersion(org.apache.spark.sql.connector.catalog.Identifier.of(
-      Array("lake"), "nation_ref"), "baseline")
+    val cat = Graftcat.instance(s)
+    cat.tagVersion(Graftcat.ident("nation_ref"), "baseline")
     s.sql("""INSERT INTO graftcat.lake.nation_ref
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_ref_src
             |WHERE n_nationkey >= 12""".stripMargin)
@@ -691,8 +673,7 @@ object Relational {
     * compiles into whole-stage codegen — no per-row reflection. Oracle
     * spells the same modular arithmetic. */
   private def catalogV2Function(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
+    Graftcat.fresh(s)
     T(s, dir, "orders").createOrReplaceTempView("graft_fn_orders")
     s.sql("""SELECT graftcat.lake.bucket(8, CAST(o_orderkey AS BIGINT)) AS bucket,
             | COUNT(*) AS n, MIN(o_orderkey) AS min_key
@@ -716,12 +697,6 @@ object Relational {
         max("o_key").as("max_key"))
       .orderBy("bucket")
 
-  private def graftcatInstance(s: SparkSession): graft.sources.GraftCatalog =
-    s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
-  private def lakeIdent(name: String) =
-    org.apache.spark.sql.connector.catalog.Identifier.of(Array("lake"), name)
-
   /** Scan-time DATA SKIPPING (round-13 verdict #1 — the gap between
     * "correct at 100 TB" and "fast at 100 TB"): every Avro write records
     * exact per-file column min/max/null-count stats in the snapshot
@@ -737,13 +712,11 @@ object Relational {
     * instead of O(table) — Iceberg's manifest stats / Delta's file
     * stats, grown on the existing manifest's `\t` convention. */
   private def catalogDataSkipping(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_skip")
     T(s, dir, "orders").createOrReplaceTempView("graft_skip_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_skip")
     s.sql("""CREATE TABLE graftcat.lake.orders_skip
             |(o_orderkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)""".stripMargin)
-    graftcatInstance(s).setSortOrder(lakeIdent("orders_skip"), "o_orderkey")
+    Graftcat.instance(s).setSortOrder(Graftcat.ident("orders_skip"), "o_orderkey")
     s.sql("""INSERT INTO graftcat.lake.orders_skip
             |SELECT o_orderkey, o_totalprice, o_orderpriority
             |FROM graft_skip_src""".stripMargin)
@@ -765,10 +738,8 @@ object Relational {
     * selective read after compaction — correct compaction is invisible
     * to readers; the layout change shows up only in the plan. */
   private def catalogCompactSorted(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_cso")
     T(s, dir, "orders").createOrReplaceTempView("graft_cso_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_cso")
     s.sql("""CREATE TABLE graftcat.lake.orders_cso
             |(o_orderkey BIGINT, o_totalprice DOUBLE)""".stripMargin)
     // interleaved inserts: every file spans ~the full key range
@@ -776,9 +747,9 @@ object Relational {
       s.sql(s"""INSERT INTO graftcat.lake.orders_cso
                |SELECT o_orderkey, o_totalprice FROM graft_cso_src
                |WHERE pmod(o_orderkey, 4) = $i""".stripMargin)
-    val cat = graftcatInstance(s)
-    cat.setSortOrder(lakeIdent("orders_cso"), "o_orderkey")
-    cat.compactTable(lakeIdent("orders_cso"), s)
+    val cat = Graftcat.instance(s)
+    cat.setSortOrder(Graftcat.ident("orders_cso"), "o_orderkey")
+    cat.compactTable(Graftcat.ident("orders_cso"), s)
     s.sql("""SELECT o_orderkey, o_totalprice
             |FROM graftcat.lake.orders_cso
             |WHERE o_orderkey BETWEEN 200 AND 699
@@ -797,13 +768,11 @@ object Relational {
     * is what makes "last week's data" a metadata operation. Day is the
     * epoch-µs integer day (same derivation as the events keys). */
   private def catalogPartitionDays(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "events_days")
     T.eventsUs(s, dir)
       .select(col("user_id"), expr("us div 86400000000").cast("int").as("day"),
         col("event_id"))
       .createOrReplaceTempView("graft_days_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.events_days")
     s.sql("""CREATE TABLE graftcat.lake.events_days
             |(user_id BIGINT, day INT, event_id BIGINT)
             |PARTITIONED BY (truncate(7, day))""".stripMargin)
@@ -830,15 +799,13 @@ object Relational {
     * (pure rewrite) as an EMPTY feed (suite-asserted). Oracle spells
     * the same diff as EXCEPT ALL over the two reconstructed states. */
   private def catalogChangeFeed(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_cdf")
     T(s, dir, "nation").createOrReplaceTempView("graft_cdf_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_cdf")
     s.sql("""CREATE TABLE graftcat.lake.nation_cdf AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_cdf_src
             |WHERE n_nationkey < 15""".stripMargin)
-    val cat = graftcatInstance(s)
-    val ident = lakeIdent("nation_cdf")
+    val cat = Graftcat.instance(s)
+    val ident = Graftcat.ident("nation_cdf")
     val v1 = cat.currentVersion(ident)
     s.sql("""INSERT INTO graftcat.lake.nation_cdf
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_cdf_src
@@ -876,13 +843,11 @@ object Relational {
     * final scan AND the change-feed window; the DuckDB oracle shreds
     * the same JSON text with its native JSON functions. */
   private def catalogVariantColumns(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_var")
     T(s, dir, "orders").createOrReplaceTempView("graft_var_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_var")
     s.sql("CREATE TABLE graftcat.lake.orders_var (id BIGINT, payload VARIANT)")
-    val cat = graftcatInstance(s)
-    val v0 = cat.currentVersion(lakeIdent("orders_var")) // pre-insert
+    val cat = Graftcat.instance(s)
+    val v0 = cat.currentVersion(Graftcat.ident("orders_var")) // pre-insert
     s.sql("""INSERT INTO graftcat.lake.orders_var
             |SELECT o_orderkey,
             |  parse_json(CONCAT('{"c":',
@@ -924,10 +889,8 @@ object Relational {
     * DuckDB oracle. A streaming CDF consumer surviving the mid-stream
     * column add is ChangeFeedStreamSuite's case. */
   private def catalogMergeSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_mse")
     T(s, dir, "orders").createOrReplaceTempView("graft_mse_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_mse")
     s.sql("""CREATE TABLE graftcat.lake.orders_mse
             |(o_orderkey BIGINT, o_orderpriority STRING)""".stripMargin)
     s.sql("""INSERT INTO graftcat.lake.orders_mse
@@ -944,8 +907,8 @@ object Relational {
             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     // INSERT-path auto-merge: a late batch carries a FOURTH column
     // (flag) and LACKS price2 — added / null-filled respectively
-    val cat = graftcatInstance(s)
-    cat.appendWithSchemaMerge(lakeIdent("orders_mse"),
+    val cat = Graftcat.instance(s)
+    cat.appendWithSchemaMerge(Graftcat.ident("orders_mse"),
       s.sql("""SELECT o_orderkey, o_orderpriority, 'late' AS flag
               |FROM graft_mse_src WHERE o_orderkey % 6 = 5""".stripMargin))
     s.sql("""SELECT o_orderkey, o_orderpriority, price2, flag
@@ -976,10 +939,8 @@ object Relational {
     // the pruning rule must be present at session BUILD time; sessionWith
     // memoizes one extensions sibling per caller session
     val vs = graft.plans.GraftExtensions.sessionWith(s)
-    graftcat(vs)
+    Graftcat.fresh(vs, "orders_shred")
     T(vs, dir, "orders").createOrReplaceTempView("graft_shred_src")
-    vs.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    vs.sql("DROP TABLE IF EXISTS graftcat.lake.orders_shred")
     vs.sql("CREATE TABLE graftcat.lake.orders_shred (id BIGINT, payload VARIANT)")
     vs.sql("""CALL graftcat.system.set_variant_shredding(
              |'lake.orders_shred', 'payload', '$.k', 'bigint')""".stripMargin)
@@ -1002,18 +963,11 @@ object Relational {
                       |FROM graftcat.lake.orders_shred
                       |WHERE variant_get(payload, '$$.k', 'bigint')
                       |  BETWEEN $slice AND ${2 * slice - 1}""".stripMargin)
-    // finalize the (possibly adaptive) plan before reading it — RDD-level
-    // force, O(0) rows cross to the driver (a collect() here would
-    // materialize the full scored slice driver-side at scale)
-    q.queryExecution.toRdd.foreachPartition(_ => ())
-    val planned = q.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
-    val total = graftcatInstance(vs)
-      .currentFileCount(lakeIdent("orders_shred"))
+    val planned = plannedFiles(q)
+    val total = Graftcat.instance(vs)
+      .currentFileCount(Graftcat.ident("orders_shred"))
     q.unionByName(vs.range(1).select(
-      lit(-1L).as("id"), lit(planned.toLong).as("k"),
+      lit(-1L).as("id"), lit(planned).as("k"),
       lit("files_planned").as("p")))
       .unionByName(vs.range(1).select(
         lit(-2L).as("id"), lit(total.toLong).as("k"),
@@ -1041,10 +995,8 @@ object Relational {
     * recompute over a year of data reads two boundary files, not the
     * year. */
   private def catalogReplaceWhere(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_rw")
     T(s, dir, "orders").createOrReplaceTempView("graft_rw_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_rw")
     s.sql("CREATE TABLE graftcat.lake.orders_rw (k BIGINT, p STRING)")
     // quartiles of the dense key domain — the slice shape holds at
     // every SF (keys are dense 0..max)
@@ -1057,7 +1009,7 @@ object Relational {
                |FROM graft_rw_src
                |WHERE o_orderkey >= ${i * slice}
                |  AND o_orderkey < ${(i + 1) * slice}""".stripMargin)
-    val v0 = graftcatInstance(s).currentVersion(lakeIdent("orders_rw"))
+    val v0 = Graftcat.instance(s).currentVersion(Graftcat.ident("orders_rw"))
     // (1) boundary-crossing replace: [s/2, s + s/2) spans files 1+2
     val lo1 = slice / 2
     val hi1 = slice + slice / 2
@@ -1121,13 +1073,10 @@ object Relational {
     * remains is Delta's own: retention ON THE SOURCE does not know its
     * clones. */
   private def catalogClone(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_cl", "orders_cl2")
     T(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))
       .localCheckpoint() // settled once: the quartile INSERTs below re-scanned orders per slice
       .createOrReplaceTempView("graft_cl_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_cl")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_cl2")
     s.sql("CREATE TABLE graftcat.lake.orders_cl (k BIGINT, p STRING)")
     val slice = s.sql(
       "SELECT (MAX(o_orderkey) DIV 4) + 1 FROM graft_cl_src")
@@ -1218,10 +1167,8 @@ object Relational {
     * commit log; deriving from row lineage gets the same contract
     * with zero contention and zero storage. */
   private def catalogGeneratedIdentity(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_gi")
     T(s, dir, "orders").createOrReplaceTempView("graft_gi_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_gi")
     s.sql("""CREATE TABLE graftcat.lake.orders_gi (
             |  id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 1000 INCREMENT BY 3),
             |  k BIGINT, p STRING,
@@ -1255,16 +1202,12 @@ object Relational {
     // bounds plan exactly 1 file
     val probe = 1000L + 3 * (3 * cnt / 4)
     val q = s.sql(s"SELECT id, k FROM graftcat.lake.orders_gi WHERE id = $probe")
-    q.queryExecution.toRdd.foreachPartition(_ => ())
-    val planned = q.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
-    val total = graftcatInstance(s).currentFileCount(lakeIdent("orders_gi"))
+    val planned = plannedFiles(q)
+    val total = Graftcat.instance(s).currentFileCount(Graftcat.ident("orders_gi"))
     s.table("graftcat.lake.orders_gi")
       .select(col("id"), col("k"), col("p"), col("kmod"), col("ptag"),
         lit("final").as("tag"))
-      .unionByName(s.range(1).select(lit(-1L).as("id"), lit(planned.toLong).as("k"),
+      .unionByName(s.range(1).select(lit(-1L).as("id"), lit(planned).as("k"),
         lit("").as("p"), lit(null: String).cast("bigint").as("kmod"),
         lit(s"$total").as("ptag"), lit("point_lookup_planned").as("tag")))
       .orderBy("id", "tag")
@@ -1290,10 +1233,8 @@ object Relational {
     * written) distributed in the writers; constraint-free tables pay
     * one null check per writer. */
   private def catalogCheckConstraints(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_ck")
     T(s, dir, "orders").createOrReplaceTempView("graft_ck_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_ck")
     s.sql("CREATE TABLE graftcat.lake.orders_ck (k BIGINT, p STRING)")
     s.sql("""INSERT INTO graftcat.lake.orders_ck
             |SELECT o_orderkey, o_orderpriority FROM graft_ck_src""".stripMargin)
@@ -1357,10 +1298,8 @@ object Relational {
     * pushed min/max row). 100-TB note: the alternative is a full
     * rewrite of every historical file; this is a metadata flip. */
   private def catalogTypeWidening(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_tw")
     T(s, dir, "orders").createOrReplaceTempView("graft_tw_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_tw")
     s.sql("CREATE TABLE graftcat.lake.orders_tw (k INT, f FLOAT, d DECIMAL(12,2))")
     // narrow file: the float value derives from o_orderkey % 2^20 so
     // it is EXACTLY representable in FLOAT at every fixture/stress SF
@@ -1381,18 +1320,11 @@ object Relational {
             |  CAST(o_orderkey AS DOUBLE) + 0.25,
             |  CAST(o_orderkey AS DECIMAL(18,2)) + 100000000000.00
             |FROM graft_tw_src""".stripMargin)
-    def planned(q: DataFrame): Long = {
-      q.queryExecution.toRdd.foreachPartition(_ => ())
-      q.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum.toLong
-    }
     // data skipping across the widened stats domain: each slice plans
     // exactly its one covering file of the two
-    val narrow = planned(s.sql(
+    val narrow = plannedFiles(s.sql(
       "SELECT k FROM graftcat.lake.orders_tw WHERE k < 1000"))
-    val wide = planned(s.sql(
+    val wide = plannedFiles(s.sql(
       "SELECT k FROM graftcat.lake.orders_tw WHERE k >= 5000000000"))
     // complete MIN/MAX pushdown over mixed narrow/wide files
     val t = s.table("graftcat.lake.orders_tw")
@@ -1406,10 +1338,10 @@ object Relational {
         col("d").cast("decimal(18,2)").as("d")))
       .unionByName(s.range(1).select(lit("narrow_files_planned").as("tag"),
         lit(narrow).as("k"), lit(null).cast("double").as("f"),
-        lit(null).cast("decimal(18,2)").as("d")))
+        lit(0).cast("decimal(18,2)").as("d")))
       .unionByName(s.range(1).select(lit("wide_files_planned").as("tag"),
         lit(wide).as("k"), lit(null).cast("double").as("f"),
-        lit(null).cast("decimal(18,2)").as("d")))
+        lit(0).cast("decimal(18,2)").as("d")))
       .orderBy("tag", "k")
   }
 
@@ -1431,11 +1363,8 @@ object Relational {
     * exists. */
   private def catalogMvRewrite(s: SparkSession, dir: String): DataFrame = {
     val vs = graft.plans.GraftExtensions.sessionWith(s)
-    graftcat(vs)
+    Graftcat.fresh(vs, "orders_mvb", "mv_prio_rw")
     T(vs, dir, "orders").createOrReplaceTempView("graft_mvr_src")
-    vs.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    vs.sql("DROP TABLE IF EXISTS graftcat.lake.orders_mvb")
-    vs.sql("DROP TABLE IF EXISTS graftcat.lake.mv_prio_rw")
     vs.sql("""CREATE TABLE graftcat.lake.orders_mvb
              |(o_orderpriority STRING, o_totalprice DOUBLE)""".stripMargin)
     vs.sql("""INSERT INTO graftcat.lake.orders_mvb
@@ -1443,8 +1372,8 @@ object Relational {
              |WHERE o_orderkey % 3 != 0""".stripMargin)
     vs.sql("""CREATE TABLE graftcat.lake.mv_prio_rw
              |(prio STRING, n BIGINT, total DECIMAL(18,2))""".stripMargin)
-    val cat = graftcatInstance(vs)
-    val baseIdent = lakeIdent("orders_mvb")
+    val cat = Graftcat.instance(vs)
+    val baseIdent = Graftcat.ident("orders_mvb")
     def materialize(): Unit = {
       val w = cat.currentVersion(baseIdent)
       graft.sources.AvroSnapshots.withCommitProps(
@@ -1488,7 +1417,7 @@ object Relational {
     val (q3, used3) = ask("q3")
     def marker(tag: String, v: Long) = vs.range(1).select(
       lit(tag).as("tag"), lit("").as("p"), lit(v).as("n"),
-      lit(null).cast("decimal(18,2)").as("total"))
+      lit(0).cast("decimal(18,2)").as("total"))
     q1.unionByName(q2).unionByName(q3)
       .unionByName(marker("q1_mv_used", used1))
       .unionByName(marker("q2_mv_used", used2))
@@ -1515,15 +1444,13 @@ object Relational {
     * per task — the driver hands each side only the other side's
     * id-hull-overlapping files. */
   private def catalogRowLineage(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_lin")
     T(s, dir, "orders").createOrReplaceTempView("graft_rl_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_lin")
     s.sql("""CREATE TABLE graftcat.lake.orders_lin AS
             |SELECT /*+ REPARTITION(4) */ o_orderkey, o_orderpriority
             |FROM graft_rl_src WHERE o_orderkey < 4000""".stripMargin)
-    val cat = graftcatInstance(s)
-    val ident = lakeIdent("orders_lin")
+    val cat = Graftcat.instance(s)
+    val ident = Graftcat.ident("orders_lin")
     val v0 = cat.currentVersion(ident)
     s.sql("""UPDATE graftcat.lake.orders_lin
             |SET o_orderpriority = 'ROWLIN' WHERE o_orderkey % 50 = 7""".stripMargin)
@@ -1560,10 +1487,8 @@ object Relational {
     * pair), rewritten-second = 0 (idempotence) and 0 overlapping hull
     * pairs after the pass (full clustering reached). */
   private def catalogCompactClustered(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_cc")
     T(s, dir, "orders").createOrReplaceTempView("graft_cc_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_cc")
     s.sql("CREATE TABLE graftcat.lake.orders_cc (id BIGINT, p STRING)")
     val slice = s.sql(
       "SELECT (MAX(o_orderkey) DIV 4) + 1 FROM graft_cc_src")
@@ -1622,10 +1547,8 @@ object Relational {
     * incremental consumer's resume cursor — `WHERE
     * _last_updated_version > w` replaces a full-table diff. */
   private def catalogRowLineageV2(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_rt")
     T(s, dir, "orders").createOrReplaceTempView("graft_rt_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_rt")
     s.sql("CREATE TABLE graftcat.lake.orders_rt (id BIGINT, priority STRING)")
     val slice = s.sql(
       "SELECT (MAX(o_orderkey) DIV 4) + 1 FROM graft_rt_src")
@@ -1638,8 +1561,8 @@ object Relational {
                |  AND o_orderkey < ${(i + 1) * slice}""".stripMargin)
     s.sql(s"""UPDATE graftcat.lake.orders_rt SET priority = 'RT'
              |WHERE id >= $slice AND id < ${2 * slice}""".stripMargin)
-    val cat = graftcatInstance(s)
-    val vUpd = cat.currentVersion(lakeIdent("orders_rt"))
+    val cat = Graftcat.instance(s)
+    val vUpd = cat.currentVersion(Graftcat.ident("orders_rt"))
     def phase(tag: String): DataFrame =
       s.sql(s"""SELECT '$tag' AS phase,
                |  CASE WHEN _last_updated_version = $vUpd THEN 'updated'
@@ -1663,18 +1586,16 @@ object Relational {
     * pins divergence after post-rollback writes and tag-pinned expiry
     * of the abandoned branch). */
   private def catalogRollback(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_rb")
     T(s, dir, "nation").createOrReplaceTempView("graft_rb_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_rb")
     s.sql("""CREATE TABLE graftcat.lake.nation_rb AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_rb_src
             |WHERE n_nationkey < 13""".stripMargin)
     s.sql("""INSERT INTO graftcat.lake.nation_rb
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_rb_src
             |WHERE n_nationkey >= 13""".stripMargin)
-    val cat = graftcatInstance(s)
-    val ident = lakeIdent("nation_rb")
+    val cat = Graftcat.instance(s)
+    val ident = Graftcat.ident("nation_rb")
     val vGood = cat.currentVersion(ident)
     s.sql("DELETE FROM graftcat.lake.nation_rb WHERE n_regionkey = 2") // oops
     cat.rollbackTo(ident, vGood)
@@ -1694,10 +1615,8 @@ object Relational {
     * row-counted stats, any pushed filter, grouping, DISTINCT, or an
     * unanswerable function declines — Spark falls back to scan+agg. */
   private def catalogAggPushdown(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_meta")
     T(s, dir, "orders").createOrReplaceTempView("graft_meta_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_meta")
     s.sql("""CREATE TABLE graftcat.lake.orders_meta AS
             |SELECT o_orderkey, o_totalprice, o_orderpriority
             |FROM graft_meta_src""".stripMargin)
@@ -1720,10 +1639,8 @@ object Relational {
     * mistake never happened — the write-audit-publish recovery loop,
     * grantable/auditable/schedulable without shipping Scala. */
   private def catalogProcedures(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_proc")
     T(s, dir, "nation").createOrReplaceTempView("graft_proc_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_proc")
     s.sql("""CREATE TABLE graftcat.lake.nation_proc AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_proc_src
             |WHERE n_nationkey < 13""".stripMargin)
@@ -1758,10 +1675,8 @@ object Relational {
     * two DELETEs merge-on-read, then compacts (vectors cleared) and
     * reads the final state. */
   private def catalogDeleteVectors(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_dv")
     T(s, dir, "orders").createOrReplaceTempView("graft_dv_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_dv")
     s.sql("""CREATE TABLE graftcat.lake.orders_dv AS
             |SELECT o_orderkey, o_custkey, o_orderpriority
             |FROM graft_dv_src""".stripMargin)
@@ -1791,10 +1706,8 @@ object Relational {
     * publish, fast-forwards, and returns all three phases — publish
     * is an O(1) ref move, no data is copied. */
   private def catalogBranchWap(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_wap")
     T(s, dir, "nation").createOrReplaceTempView("graft_wap_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_wap")
     s.sql("""CREATE TABLE graftcat.lake.nation_wap AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_wap_src
             |WHERE n_nationkey < 15""".stripMargin)
@@ -1840,10 +1753,8 @@ object Relational {
     * clustering column. At 100 TB this is how the second-most-filtered
     * column stops costing a full scan. */
   private def catalogCompactZorder(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_zo")
     T(s, dir, "orders").createOrReplaceTempView("graft_zo_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_zo")
     s.sql("""CREATE TABLE graftcat.lake.orders_zo
             |(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)""".stripMargin)
     // interleaved inserts: every file spans ~the full space on both dims
@@ -1880,13 +1791,11 @@ object Relational {
     * layout must never cost an O(table) rewrite — this is the only
     * affordable relayout model. */
   private def catalogPartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "events_pevo")
     T.eventsUs(s, dir)
       .select(col("user_id"), expr("us div 86400000000").cast("int").as("day"),
         col("event_id"))
       .createOrReplaceTempView("graft_pevo_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.events_pevo")
     s.sql("""CREATE TABLE graftcat.lake.events_pevo
             |(user_id BIGINT, day INT, event_id BIGINT)
             |PARTITIONED BY (truncate(7, day))""".stripMargin)
@@ -1924,10 +1833,8 @@ object Relational {
     * `catalog_update_where`'s copy-on-write group rewrite — the two
     * write strategies every lakehouse format offers, both live here. */
   private def catalogUpdateMor(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "cust_umor")
     T(s, dir, "customer").createOrReplaceTempView("graft_umor_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_umor")
     s.sql("""CREATE TABLE graftcat.lake.cust_umor AS
             |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_umor_src""".stripMargin)
     s.sql("CALL graftcat.system.set_delete_mode('lake.cust_umor', 'merge-on-read')")
@@ -1951,10 +1858,8 @@ object Relational {
     * as kind `rewrite` (dataChange=false, what streams/CDF skip). The
     * audit surface: "what happened to this table, in what order". */
   private def catalogMetadataTables(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_meta")
     T(s, dir, "nation").createOrReplaceTempView("graft_meta2_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_meta")
     s.sql("""CREATE TABLE graftcat.lake.nation_meta AS
             |SELECT n_nationkey, n_name, n_regionkey FROM graft_meta2_src
             |WHERE n_nationkey < 15""".stripMargin)
@@ -2002,7 +1907,7 @@ object Relational {
     * lets the training-data pipeline keep raw modalities and event
     * time under time travel without a second (typed) storage system. */
   private def catalogTypedColumns(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "events_typed", "embed_typed")
     // materialized once: the four week-sliced INSERTs below each re-ran
     // this scan + decimal/encode projection (4 passes over events for
     // one pass of useful work — guide §2.4); the checkpoint computes it
@@ -2015,9 +1920,6 @@ object Relational {
       .localCheckpoint()
       .createOrReplaceTempView("graft_typed_ev")
     T(s, dir, "embeddings").createOrReplaceTempView("graft_typed_emb")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.events_typed")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.embed_typed")
     s.sql("""CREATE TABLE graftcat.lake.events_typed
             |(event_id BIGINT, ts TIMESTAMP, day DATE, user_id BIGINT,
             | amount DECIMAL(18,2), payload BINARY)""".stripMargin)
@@ -2085,10 +1987,8 @@ object Relational {
     * re-insert (upsert), a second single-key DELETE, compaction, then
     * head + time-travel + per-key probes — hash-exact vs DuckDB. */
   private def catalogDeleteEquality(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "cust_eqd")
     T(s, dir, "customer").createOrReplaceTempView("graft_eqd_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_eqd")
     s.sql("""CREATE TABLE graftcat.lake.cust_eqd
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_sort_order('lake.cust_eqd', 'c_custkey')")
@@ -2138,10 +2038,8 @@ object Relational {
     * while the small ones coalesced and the sidecar materialized
     * away; content + time travel hash-exact. */
   private def catalogCompactBinpack(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "cust_bp")
     T(s, dir, "customer").createOrReplaceTempView("graft_bp_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_bp")
     s.sql("""CREATE TABLE graftcat.lake.cust_bp
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     // one healthy file (a DISJOINT key range, so the stats exclude the
@@ -2202,10 +2100,8 @@ object Relational {
     * amount-sliced inserts, a range query + manifest-answered
     * MIN/MAX/COUNT, a mid-range DELETE, time travel — hash-exact. */
   private def catalogDecimalStats(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_decs")
     T(s, dir, "orders").createOrReplaceTempView("graft_decs_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_decs")
     s.sql("""CREATE TABLE graftcat.lake.orders_decs
             |(o_orderkey BIGINT, amount DECIMAL(12,2))""".stripMargin)
     // amount-sliced inserts: each file's decimal interval stays inside
@@ -2254,10 +2150,8 @@ object Relational {
     * a DELETE keyed on the defaulted column that must match pre-column
     * rows, head + time-travel probes — hash-exact. */
   private def catalogColumnDefaults(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_dflt")
     T(s, dir, "nation").createOrReplaceTempView("graft_dflt_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_dflt")
     s.sql("""CREATE TABLE graftcat.lake.nation_dflt AS
             |SELECT n_nationkey, n_name FROM graft_dflt_src
             |WHERE n_nationkey < 15""".stripMargin)
@@ -2307,13 +2201,11 @@ object Relational {
     * null-blocks-the-proof case, merge-on-read (no dv written),
     * `_file`-targeted drops, and CDF delete rows. */
   private def catalogRetentionDelete(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "events_ret")
     T.eventsUs(s, dir)
       .select(col("event_id"), col("ts_us").as("ts"),
         col("ts_us").cast("date").as("day"), col("user_id"), col("value"))
       .createOrReplaceTempView("graft_ret_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.events_ret")
     s.sql("""CREATE TABLE graftcat.lake.events_ret
             |(event_id BIGINT, ts TIMESTAMP, day DATE, user_id BIGINT,
             | value DOUBLE)""".stripMargin)
@@ -2369,10 +2261,8 @@ object Relational {
     * IN probe, each planning ≤1 split (suite); at 100 TB this is the
     * needle-in-haystack lookup going from a corpus scan to one file. */
   private def catalogPointLookup(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_blm")
     T(s, dir, "orders").createOrReplaceTempView("graft_blm_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_blm")
     s.sql("""CREATE TABLE graftcat.lake.orders_blm
             |(o_orderkey BIGINT, h STRING, o_totalprice DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_bloom_filter('lake.orders_blm', 'h')")
@@ -2425,11 +2315,8 @@ object Relational {
     * output MV alongside a full recompute — both must match the
     * DuckDB-derived final state, so any drift is a hash mismatch. */
   private def catalogIncrementalMv(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "orders_imv", "mv_prio")
     T(s, dir, "orders").createOrReplaceTempView("graft_imv_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_imv")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.mv_prio")
     s.sql("""CREATE TABLE graftcat.lake.orders_imv
             |(o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)""".stripMargin)
     s.sql("""INSERT INTO graftcat.lake.orders_imv
@@ -2438,9 +2325,9 @@ object Relational {
     s.sql("CALL graftcat.system.set_delete_mode('lake.orders_imv', 'merge-on-read')")
     s.sql("""CREATE TABLE graftcat.lake.mv_prio
             |(priority STRING, n BIGINT, total DECIMAL(18,2))""".stripMargin)
-    val cat = graftcatInstance(s)
-    val ident = lakeIdent("orders_imv")
-    val mvIdent = lakeIdent("mv_prio")
+    val cat = Graftcat.instance(s)
+    val ident = Graftcat.ident("orders_imv")
+    val mvIdent = Graftcat.ident("mv_prio")
     val WmKey = "graft.mv.watermark"
     /** Run `body` with `k=v` stamped on every commit it makes — via
       * the THREAD-scoped stamp (ADVICE r16: the session conf is
@@ -2541,13 +2428,11 @@ object Relational {
     * semantics, an upsert of one deleted line, compaction, time
     * travel — hash-exact. */
   private def catalogDeleteEqualityMulti(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "line_eqm")
     T(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber").cast("int").as("l_linenumber"),
         col("l_quantity"))
       .createOrReplaceTempView("graft_eqm_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.line_eqm")
     s.sql("""CREATE TABLE graftcat.lake.line_eqm
             |(l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_sort_order('lake.line_eqm', 'l_orderkey')")
@@ -2607,10 +2492,8 @@ object Relational {
     * hash-exact vs DuckDB; each batch must advance exactly ONE
     * version (required in-flow). */
   private def catalogCdcApply(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "cust_cdcap")
     T(s, dir, "customer").createOrReplaceTempView("graft_cdcap_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_cdcap")
     s.sql("""CREATE TABLE graftcat.lake.cust_cdcap
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_sort_order('lake.cust_cdcap', 'c_custkey')")
@@ -2618,8 +2501,8 @@ object Relational {
             |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_cdcap_src""".stripMargin)
     s.sql("CALL graftcat.system.set_delete_mode('lake.cust_cdcap', 'merge-on-read-equality')")
     s.sql("CALL graftcat.system.tag('lake.cust_cdcap', 'pre_cdc')")
-    val cat = graftcatInstance(s)
-    val ident = lakeIdent("cust_cdcap")
+    val cat = Graftcat.instance(s)
+    val ident = Graftcat.ident("cust_cdcap")
     val v0 = cat.currentVersion(ident)
     val r1 = s.sql("""CALL graftcat.system.apply_cdc('lake.cust_cdcap', 'c_custkey',
            | 'SELECT c_custkey, c_nationkey,
@@ -2674,10 +2557,8 @@ object Relational {
     * REPLACE that is not atomic is an outage — readers must never see
     * a dropped table or half a new one. */
   private def catalogRtas(s: SparkSession, dir: String): DataFrame = {
-    graftcat(s)
+    Graftcat.fresh(s, "nation_rtas")
     T(s, dir, "nation").createOrReplaceTempView("graft_rtas_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.nation_rtas")
     s.sql("""CREATE TABLE graftcat.lake.nation_rtas AS
             |SELECT n_nationkey, n_name FROM graft_rtas_src
             |WHERE n_nationkey < 10""".stripMargin)
@@ -2721,10 +2602,8 @@ object Relational {
     * through the view still prune files (it is the same scan). */
   private def catalogViews(s: SparkSession, dir: String): DataFrame = {
     val vs = graft.plans.GraftViewSessions.forSession(s)
-    Graftcat.register(vs)
+    Graftcat.fresh(vs, "orders_vw")
     T(vs, dir, "orders").createOrReplaceTempView("graft_views_src")
-    vs.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    vs.sql("DROP TABLE IF EXISTS graftcat.lake.orders_vw")
     vs.sql("CALL graftcat.system.drop_view('lake.v_urgent')")
     vs.sql("CALL graftcat.system.drop_view('lake.v_urgent_big')")
     vs.sql("CALL graftcat.system.drop_view('lake.v_pinned')")
@@ -3258,9 +3137,9 @@ object Relational {
         |SELECT 'q1' AS tag, p, n, total FROM q1
         |UNION ALL SELECT 'q2', p, n, total FROM q2
         |UNION ALL SELECT 'q3', p, n, total FROM q2
-        |UNION ALL SELECT 'q1_mv_used', '', 1, NULL
-        |UNION ALL SELECT 'q2_mv_used', '', 0, NULL
-        |UNION ALL SELECT 'q3_mv_used', '', 1, NULL
+        |UNION ALL SELECT 'q1_mv_used', '', 1, CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'q2_mv_used', '', 0, CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'q3_mv_used', '', 1, CAST(0 AS DECIMAL(18,2))
         |ORDER BY tag, p""".stripMargin,
     "catalog_type_widening" ->
       """WITH nar AS (SELECT o_orderkey AS k,
@@ -3276,8 +3155,8 @@ object Relational {
         |  CAST(MIN(d) AS DECIMAL(18,2)) FROM allr
         |UNION ALL SELECT 'max', MAX(k), MAX(f),
         |  CAST(MAX(d) AS DECIMAL(18,2)) FROM allr
-        |UNION ALL SELECT 'narrow_files_planned', 1, NULL, NULL
-        |UNION ALL SELECT 'wide_files_planned', 1, NULL, NULL
+        |UNION ALL SELECT 'narrow_files_planned', 1, NULL, CAST(0 AS DECIMAL(18,2))
+        |UNION ALL SELECT 'wide_files_planned', 1, NULL, CAST(0 AS DECIMAL(18,2))
         |ORDER BY tag, k""".stripMargin,
     "catalog_compact_clustered" ->
       """WITH m AS (SELECT (MAX(o_orderkey) // 4) + 1 AS s FROM orders)

@@ -33,8 +33,7 @@ object Streaming {
     * atomically per epoch. */
   private def streamFileSink(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_$tag")
+    val root = GraftTmp.fresh("stream")
     // the fixture table is a single parquet file; the file source wants a
     // directory
     val src = java.nio.file.Paths.get(s"$root/in")
@@ -80,8 +79,7 @@ object Streaming {
     * against the keyed target, scaling with keys, not event volume. */
   private def streamForeachBatchUpsert(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"upsert_$tag")
+    val root = GraftTmp.fresh("upsert")
     val src = java.nio.file.Paths.get(s"$root/in")
     java.nio.file.Files.createDirectories(src)
     for (f <- Seq("e1.parquet", "e2.parquet"))
@@ -178,8 +176,7 @@ object Streaming {
         org.apache.spark.sql.Dataset[graft.streaming.Streams.PSession]): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"${tagPrefix}_$tag")
+    val root = GraftTmp.fresh(tagPrefix)
     val src = java.nio.file.Paths.get(s"$root/in")
     java.nio.file.Files.createDirectories(src)
     java.nio.file.Files.copy(
@@ -334,8 +331,7 @@ object Streaming {
     * batch interval join — that batch query is the oracle. */
   private def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"ssjoin_$tag")
+    val root = GraftTmp.fresh("ssjoin")
     val src = java.nio.file.Paths.get(s"$root/in")
     java.nio.file.Files.createDirectories(src)
     java.nio.file.Files.copy(
@@ -391,8 +387,7 @@ object Streaming {
     * the deterministic tick ledger from range(n). */
   private def streamCustomSource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_src_$tag")
+    val root = GraftTmp.fresh("stream_src")
     val q = s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
@@ -419,8 +414,7 @@ object Streaming {
     * connector; oracle re-derives the ledger from range(n). */
   private def streamCustomSink(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_sink_$tag")
+    val root = GraftTmp.fresh("stream_sink")
     val q = s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
@@ -453,18 +447,15 @@ object Streaming {
     * listing. */
   private def streamTableSource(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "orders_feed")
     T(s, dir, "orders").createOrReplaceTempView("graft_feed_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_feed")
     s.sql("""CREATE TABLE graftcat.lake.orders_feed AS
             |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
             |FROM graft_feed_src WHERE o_orderkey % 3 = 0""".stripMargin)
     s.sql("""INSERT INTO graftcat.lake.orders_feed
             |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
             |FROM graft_feed_src WHERE o_orderkey % 3 <> 0""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_tbl_$tag")
+    val root = GraftTmp.fresh("stream_tbl")
     val q = s.readStream.table("graftcat.lake.orders_feed")
       .writeStream.format("parquet")
       .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
@@ -506,10 +497,8 @@ object Streaming {
     * no table scan, no state store. */
   private def streamTableCdf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "cust_cdfs")
     T(s, dir, "customer").createOrReplaceTempView("graft_cdfs_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_cdfs")
     s.sql("""CREATE TABLE graftcat.lake.cust_cdfs AS
             |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_cdfs_src
             |WHERE c_custkey % 2 = 0""".stripMargin)
@@ -524,8 +513,7 @@ object Streaming {
     s.sql("""UPDATE graftcat.lake.cust_cdfs
             |SET c_acctbal = c_acctbal + 500.0
             |WHERE c_nationkey = 3""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_cdf_$tag")
+    val root = GraftTmp.fresh("stream_cdf")
     val q = s.readStream.table("graftcat.lake.cust_cdfs.changes")
       .writeStream.format("parquet")
       .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
@@ -556,11 +544,8 @@ object Streaming {
     * moves O(changed rows), never O(table). */
   private def streamCdcReplicate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "cust_repl_src", "cust_repl_dst")
     T(s, dir, "customer").createOrReplaceTempView("graft_repl_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_repl_src")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_repl_dst")
     s.sql("""CREATE TABLE graftcat.lake.cust_repl_src AS
             |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_repl_src
             |WHERE c_custkey % 2 = 0""".stripMargin)
@@ -574,8 +559,7 @@ object Streaming {
     s.sql("""CREATE TABLE graftcat.lake.cust_repl_dst
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.set_delete_mode('lake.cust_repl_dst', 'merge-on-read-equality')")
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_repl_$tag")
+    val root = GraftTmp.fresh("stream_repl")
     def drain(): Unit = {
       val q = s.readStream.table("graftcat.lake.cust_repl_src.changes")
         .writeStream
@@ -583,7 +567,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           val bs = b.sparkSession // the micro-batch session owns the view
-          val view = s"graft_repl_batch_$tag"
+          val view = s"graft_repl_batch_${root.takeRight(12)}"
           // settle the batch ONCE: apply_cdc takes three passes over its
           // source (key collect, upsert write, validation) and each
           // would otherwise re-run the whole CDF scan + window
@@ -651,11 +635,8 @@ object Streaming {
     * versions in turn. */
   private def streamTableSink(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "orders_tsink", "orders_tsink_dst")
     T(s, dir, "orders").createOrReplaceTempView("graft_tsink_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_tsink")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_tsink_dst")
     s.sql("""CREATE TABLE graftcat.lake.orders_tsink
             |(o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)""".stripMargin)
     for (i <- 0 until 5)
@@ -664,8 +645,7 @@ object Streaming {
                |FROM graft_tsink_src WHERE o_orderkey % 5 = $i""".stripMargin)
     s.sql("""CREATE TABLE graftcat.lake.orders_tsink_dst
             |(o_orderkey BIGINT, o_orderpriority STRING, price2 DOUBLE)""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_tsink_$tag")
+    val root = GraftTmp.fresh("stream_tsink")
     def drain(): Unit = {
       val q = s.readStream.table("graftcat.lake.orders_tsink")
         .where(col("o_totalprice") > 150000.0)
@@ -713,11 +693,8 @@ object Streaming {
     * without pausing the stream's writer. */
   private def streamBranchWap(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "orders_swap_in", "orders_swap")
     T(s, dir, "orders").createOrReplaceTempView("graft_swap_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_swap_in")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_swap")
     s.sql("""CREATE TABLE graftcat.lake.orders_swap_in
             |(o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)""".stripMargin)
     for (i <- 0 until 3)
@@ -727,8 +704,7 @@ object Streaming {
     s.sql("""CREATE TABLE graftcat.lake.orders_swap
             |(o_orderkey BIGINT, o_orderpriority STRING, price2 DOUBLE)""".stripMargin)
     s.sql("CALL graftcat.system.create_branch('lake.orders_swap', 'staging')")
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_swap_$tag")
+    val root = GraftTmp.fresh("stream_swap")
     def summary(): (Long, Double) = {
       val r = s.sql("""SELECT CAST(COUNT(*) AS BIGINT),
                       |CAST(COALESCE(SUM(CAST(price2 AS DECIMAL(18,2))), 0.0)
@@ -789,11 +765,8 @@ object Streaming {
     * both must hash-match the DuckDB-derived final state. */
   private def streamIncrementalMv(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "orders_smv", "smv_prio")
     T(s, dir, "orders").createOrReplaceTempView("graft_smv_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.orders_smv")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.smv_prio")
     s.sql("""CREATE TABLE graftcat.lake.orders_smv
             |(o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)""".stripMargin)
     s.sql("""INSERT INTO graftcat.lake.orders_smv
@@ -802,10 +775,8 @@ object Streaming {
     s.sql("CALL graftcat.system.set_delete_mode('lake.orders_smv', 'merge-on-read')")
     s.sql("""CREATE TABLE graftcat.lake.smv_prio
             |(priority STRING, n BIGINT, total DECIMAL(18,2))""".stripMargin)
-    val cat = s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
-    val mvIdent = org.apache.spark.sql.connector.catalog.Identifier.of(
-      Array("lake"), "smv_prio")
+    val cat = Graftcat.instance(s)
+    val mvIdent = Graftcat.ident("smv_prio")
     val BKey = "graft.smv.batch"
     def fold(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
       val sess = batch.sparkSession
@@ -835,8 +806,7 @@ object Streaming {
         ()
       }
     }
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_smv_$tag")
+    val root = GraftTmp.fresh("stream_smv")
     def drain(): Unit =
       s.readStream.table("graftcat.lake.orders_smv.changes")
         .writeStream.option("checkpointLocation", s"$root/cp")
@@ -872,18 +842,15 @@ object Streaming {
 
   private def streamTableRatelimit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    Graftcat.register(s)
+    Graftcat.fresh(s, "cust_rate")
     T(s, dir, "customer").createOrReplaceTempView("graft_rate_src")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.cust_rate")
     s.sql("""CREATE TABLE graftcat.lake.cust_rate
             |(c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE)""".stripMargin)
     for (i <- 0 until 5)
       s.sql(s"""INSERT INTO graftcat.lake.cust_rate
                |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_rate_src
                |WHERE c_custkey % 5 = $i""".stripMargin)
-    val tag = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val root = GraftTmp.dir(s"stream_rate_$tag")
+    val root = GraftTmp.fresh("stream_rate")
     val q = s.readStream
       .option("maxFilesPerTrigger", "2")
       .table("graftcat.lake.cust_rate")

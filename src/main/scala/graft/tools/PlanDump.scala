@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the physical plan for one or more query keys
   * (the `.explain` snapshots PLANS.md / plans/r19 carry). Not part of
   * the shipped library surface.
@@ -18,14 +16,7 @@ object PlanDump {
     val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val outDir = if (args.length > 2) Some(args(2)) else None
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     for (k <- keys) {
       val df = graft.SparkEntry.queries(k)(spark, dir)
       outDir match {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic local scale-up generator for the stress bench
@@ -49,20 +49,14 @@ object StressGen {
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     def want(t: String): Boolean = only.isEmpty || only(t)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     // Fixture-format armor, mirroring graft.ops.T: a legacy nanos-typed
     // events column reads as a raw long (and the scaled copy carries the
     // BIGINT); the current naive-µs fixture reads as TIMESTAMP_NTZ and
     // round-trips as timestamp[us] unchanged. T.usCol handles both on
-    // the read side, and UTC keeps any NTZ↔LTZ crossing deterministic.
+    // the read side, and the session's UTC keeps any NTZ↔LTZ crossing
+    // deterministic.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     val reps = spark.range(r).select(col("id").as("rep"))
     def tbl(name: String): DataFrame =

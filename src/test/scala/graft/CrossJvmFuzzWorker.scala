@@ -29,14 +29,9 @@ object CrossJvmFuzzWorker {
   def main(args: Array[String]): Unit = {
     val Array(wh, seedS, tagS, opsS) = args.take(4)
     val seed = seedS.toLong; val tag = tagS.toLong; val ops = opsS.toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.xcat", "graft.sources.GraftCatalog")
-      .config("spark.sql.catalog.xcat.warehouse", wh)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(2)
+    spark.conf.set("spark.sql.catalog.xcat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.xcat.warehouse", wh)
     val out = new StringBuilder
     var refused = 0
     val rnd = new scala.util.Random(seed)

@@ -327,9 +327,7 @@ class ManifestTreeSuite extends SparkSuiteBase {
 
   test("selective catalog scan reads fewer manifest groups than exist") {
     val s = spark
-    graft.ops.Graftcat.register(s)
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.lake")
-    s.sql("DROP TABLE IF EXISTS graftcat.lake.mt_groups")
+    graft.ops.Graftcat.fresh(s, "mt_groups")
     s.sql("CREATE TABLE graftcat.lake.mt_groups (k BIGINT, v DOUBLE)")
     // four commits, each a DISJOINT key range → four groups whose
     // hulls are disjoint on k
@@ -337,8 +335,7 @@ class ManifestTreeSuite extends SparkSuiteBase {
       s.sql(s"""INSERT INTO graftcat.lake.mt_groups
                |SELECT id AS k, CAST(id AS DOUBLE) AS v
                |FROM range(${r * 1000}, ${r * 1000 + 1000})""".stripMargin)
-    val cat = s.sessionState.catalogManager.catalog("graftcat")
-      .asInstanceOf[graft.sources.GraftCatalog]
+    val cat = graft.ops.Graftcat.instance(s)
     val whDir = s.conf.get("spark.sql.catalog.graftcat.warehouse")
     val tdir = new File(new File(whDir, "lake"), "mt_groups").getPath
     val totalGroups = AvroSnapshots.head(tdir).get.groups.size

@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared session for every suite (Test/fork runs them in one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4)
 }
 
 trait SparkSuiteBase extends AnyFunSuite
@@ -29,8 +20,7 @@ trait SparkSuiteBase extends AnyFunSuite
     * assignment) must not ride the shared session's storage into later
     * tests — blocks accrete across 200+ tests otherwise (ADVICE r7). */
   override protected def afterEach(): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    GraftSession.settle(spark)
     super.afterEach()
   }
 }
