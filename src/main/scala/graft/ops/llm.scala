@@ -20,8 +20,11 @@ import Params._
   *    `llm_dedup_near` blocks on shared shingles (zero false negatives →
   *    oracle-exact); `llm_dedup_minhash_lsh` is the 100-TB path (banded
   *    signatures bound candidate pairs independent of corpus size) and
-  *    `llm_dedup_simhash` the cheaper bit-sketch variant. All three end
-  *    in the same exact verification join.
+  *    `llm_dedup_simhash` the cheaper bit-sketch variant. The two
+  *    Jaccard keys end in the same exact verification join; SimHash
+  *    needs none — its hamming is exact on the packed fingerprints, and
+  *    it enumerates candidates among distinct fingerprints, so its cost
+  *    follows fingerprint diversity, not duplicate-cluster size.
   *  - simsearch: `llm_simsearch_topk` is EXACT ball-pruned top-k
   *    (Api.cosineTopKPruned — recall-complete cell pruning, equi-joins
   *    only, byte-identical to the test-only brute-force baseline);
@@ -254,49 +257,89 @@ object Llm {
     pairs
   }
 
-  /** SimHash bit-sketch near-dup: 64-bit fingerprint from token hashes,
-    * 4×16-bit chunk blocking (exact for hamming <= 3 by pigeonhole).
-    * Round 5: the token hash is the md5-prefix 64-bit value
-    * (ShingleUtil.md5Hash64), so the fingerprint — and therefore the
-    * complete hamming<=3 pair set — is oracle-exact; was xxhash64
-    * rows-only. */
+  /** SimHash bit-sketch near-dup: every document pair whose 64-bit
+    * fingerprints differ in at most 3 bits. The token hash is the
+    * md5-prefix 64-bit value (ShingleUtil.md5Hash64), so the fingerprint
+    * — and therefore the complete hamming<=3 pair set — is oracle-exact.
+    * Candidates come from [[simhashPairs]]. */
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
     // Fingerprints come from the compiled SimHashChunks expression: one
     // codegen pass per document over its distinct tokens — no token
-    // explode, no 64-column aggregation shuffle (that relational
-    // spelling was the 5 s floor of this query at sf0.1; equivalence is
-    // asserted bit-for-bit in LlmOpsSuite).
-    // The 4 chunks also pack into ONE long (disjoint 16-bit lanes —
-    // shift+OR, no ANSI-overflow risk), so the per-candidate hamming is
-    // a single codegen'd bit_count(xor) instead of an interpreted HOF
-    // fold over the chunk array: the fixture's big near-dup clusters
-    // collide on all 4 band positions (1.5 M raw candidates at sf0.1)
-    // and the per-candidate cost is what dominates (5.7 s → ~0.3 s).
-    // Fingerprints materialize once (localCheckpoint) — the self-join
-    // would otherwise run the fingerprint pass per side.
+    // explode, no 64-column aggregation shuffle (equivalence is asserted
+    // bit-for-bit in LlmOpsSuite). The 4 chunks pack into ONE long
+    // (disjoint 16-bit lanes — shift+OR, no ANSI-overflow risk), so every
+    // hamming is a single codegen'd bit_count(xor).
     val packed = (0 to 3)
       .map(i => shiftleft(element_at(col("chunks"), i + 1), 16 * i))
       .reduce((a, b) => a.bitwiseOR(b))
-    // deliberately NOT fanned (T.fan): the chunk projection is cheap next
-    // to the candidate join, and the extra raw-text exchange measured a
-    // net +0.44 s at local[32]/sf0.1 (r19 paired runs)
-    val chunked = T(s, dir, "documents")
+    // Materialized once (localCheckpoint): the distinct-fingerprint pass
+    // and the three document joins in simhashPairs all read it.
+    val docs = T(s, dir, "documents")
       .select(col("doc_id"),
         graft.plans.expressions.simhashChunks(
           array_distinct(split(col("text"), " "))).as("chunks"))
-      .select(col("doc_id"), packed.as("fp"),
-        posexplode(col("chunks")).as(Seq("c", "chunk")))
+      .select(col("doc_id"), packed.as("fp"))
       .localCheckpoint()
-    chunked.as("x").join(chunked.as("y"),
+    simhashPairs(docs)
+  }
+
+  /** Ordered `(d1, d2, hamming)` pairs with hamming <= 3 over a
+    * `(doc_id, fp)` frame, each pair exactly once.
+    *
+    * Candidates are enumerated among DISTINCT fingerprints, not
+    * documents: the near-dup clusters share whole fingerprints, so a
+    * document-level lane join is quadratic in cluster size, while the
+    * fingerprint-level one is quadratic only in distinct fingerprints
+    * per lane value. Each fingerprint contributes 4 lanes
+    * `(c, (fp >>> 16c) & 0xFFFF)`; by pigeonhole every pair within
+    * hamming 3 agrees on at least one lane. A pair is kept only on the
+    * LOWEST lane it shares (every lane j < c of the xor is non-zero), so
+    * it is emitted once and no aggregate de-duplicates the output.
+    * Fingerprint pairs then expand to their documents; documents with
+    * equal fingerprints pair at hamming 0 through an fp equi-join.
+    *
+    * Both shuffles are explicit repartitions, which AQE never coalesces:
+    *  - the lanes on (c, chunk), so a shuffled lane join needs no
+    *    further exchange and the small distinct-fingerprint shuffle is
+    *    not folded into one task that serializes the enumeration;
+    *  - the fingerprint pairs on (fa, fb), because they leave the lane
+    *    join clustered by lane value, so one large near-dup cluster
+    *    would expand into documents inside one task. The stage boundary
+    *    also keeps the sort's range sampling from re-running the lane
+    *    join.
+    *
+    * 100-TB note: the lane exchange carries 4 rows per distinct
+    * fingerprint; skew follows the largest set of distinct fingerprints
+    * sharing one lane value, not the largest duplicate cluster. */
+  private[graft] def simhashPairs(docs: DataFrame): DataFrame = {
+    val n = docs.sparkSession.sparkContext.defaultParallelism
+    def lane(fp: Column, i: Int): Column =
+      shiftrightunsigned(fp, 16 * i).bitwiseAND(0xFFFFL)
+    val lanes = docs.select(col("fp")).distinct()
+      .select(col("fp"),
+        posexplode(array((0 to 3).map(lane(col("fp"), _)): _*)).as(Seq("c", "chunk")))
+      .repartition(n, col("c"), col("chunk"))
+    val xor = col("x.fp").bitwiseXOR(col("y.fp"))
+    val lowestShared = (0 to 2)
+      .map(j => col("x.c") <= j || lane(xor, j) =!= 0L)
+      .reduce(_ && _)
+    val fpPairs = lanes.as("x").join(lanes.as("y"),
         col("x.c") === col("y.c") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long").as("hamming"))
-      // filter BEFORE distinct: near-identical fingerprints make the raw
-      // candidate set large, the surviving pair set small
+          col("x.fp") < col("y.fp") && lowestShared)
+      .select(col("x.fp").as("fa"), col("y.fp").as("fb"),
+        bit_count(xor).cast("long").as("hamming"))
       .where(col("hamming") <= 3)
-      .distinct()
-      .orderBy("d1", "d2")
+      .repartition(n, col("fa"), col("fb"))
+    val a = docs.select(col("doc_id").as("da"), col("fp").as("fa"))
+    val b = docs.select(col("doc_id").as("db"), col("fp").as("fb"))
+    val near = fpPairs.join(a, "fa").join(b, "fb")
+      .select(least(col("da"), col("db")).as("d1"),
+        greatest(col("da"), col("db")).as("d2"), col("hamming"))
+    val same = docs.as("x").join(docs.as("y"),
+        col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        lit(0L).as("hamming"))
+    near.unionByName(same).orderBy("d1", "d2")
   }
 
   /** Embedding-cosine near-dup pairs (exact, oracled).

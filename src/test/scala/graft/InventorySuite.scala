@@ -130,7 +130,8 @@ class InventorySuite extends SparkSuiteBase {
     "llm_bpe_merge_step",
     // join_dpp_partitioned writes the partitioned parquet fixture whose
     // partitions DPP must prune; llm_dedup_simhash localCheckpoints the
-    // fingerprint pass so the self-join computes it once, not per side;
+    // fingerprint pass so its distinct-fingerprint lanes and its three
+    // document joins compute it once, not per reader;
     // stat_crosstab: DataFrameStatFunctions.crosstab is an eager API
     "join_dpp_partitioned", "llm_dedup_simhash", "stat_crosstab",
     // r19 optimization round: llm_dedup_substring localCheckpoints the

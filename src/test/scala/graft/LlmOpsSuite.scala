@@ -266,11 +266,91 @@ class LlmOpsSuite extends SparkSuiteBase {
       s"LSH produced pairs outside the exact J>=0.8 set: ${lsh -- exact}")
   }
 
+  /** The document-level spelling Llm.simhashPairs replaced, kept as its
+    * reference: 4 lanes per DOCUMENT, self-join on (c, chunk), hamming
+    * filter, then distinct() to fold pairs sharing several lanes. */
+  private def simhashPairsReference(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val chunked = docs.select(col("doc_id"), col("fp"),
+      posexplode(array((0 to 3).map(i =>
+        shiftrightunsigned(col("fp"), 16 * i).bitwiseAND(0xFFFFL)): _*))
+        .as(Seq("c", "chunk")))
+    chunked.as("x").join(chunked.as("y"),
+        col("x.c") === col("y.c") && col("x.chunk") === col("y.chunk") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long").as("hamming"))
+      .where(col("hamming") <= 3)
+      .distinct()
+  }
+
+  private def simhashRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().toSeq.map(r =>
+      (r.getAs[Long]("d1"), r.getAs[Long]("d2"), r.getAs[Long]("hamming")))
+
   test("simhash near-dups have hamming <= 3 and ordered pairs") {
-    run("llm_dedup_simhash").collect().foreach { r =>
-      assert(r.getAs[Long]("d1") < r.getAs[Long]("d2"))
-      assert(r.getAs[Long]("hamming") <= 3)
+    val df = run("llm_dedup_simhash")
+    val rows = simhashRows(df)
+    rows.foreach { case (d1, d2, h) =>
+      assert(d1 < d2)
+      assert(h <= 3)
     }
+    // each pair exactly once: nothing de-duplicates the output
+    assert(rows.map(r => (r._1, r._2)).distinct.length == rows.length,
+      "a (d1, d2) pair was emitted more than once")
+    assert(rows == rows.sortBy(r => (r._1, r._2)), "output not ordered by (d1, d2)")
+    // …and the same set as the document-level reference spelling over
+    // the same compiled fingerprints
+    val packed = (0 to 3)
+      .map(i => shiftleft(element_at(col("chunks"), i + 1), 16 * i))
+      .reduce(_.bitwiseOR(_))
+    val docs = T(spark, SF, "documents")
+      .select(col("doc_id"),
+        graft.plans.expressions.simhashChunks(
+          array_distinct(split(col("text"), " "))).as("chunks"))
+      .select(col("doc_id"), packed.as("fp"))
+    val ref = simhashRows(simhashPairsReference(docs))
+    assert(rows.nonEmpty && rows.toSet == ref.toSet,
+      s"diverged from the reference: ${rows.toSet.diff(ref.toSet).take(5)} / " +
+        s"${ref.toSet.diff(rows.toSet).take(5)}")
+  }
+
+  test("simhashPairs on crafted fingerprints: lowest shared lane, each pair once") {
+    val a = 0x0123456789ABCDEFL
+    val b = 0x1111222233334444L
+    val c = 0x5555666677778888L
+    val e = 0x2222333344445555L
+    val g = 0x6666777700009999L
+    val i = Long.MinValue | 0x0000123456789ABCL
+    val fps = Seq(
+      // 3-document cluster with one fingerprint: hamming-0 pairs
+      1L -> a, 2L -> a, 3L -> a,
+      // 3 bits off, all in lane 0: shares lanes 1-3, emitted once
+      4L -> b, 5L -> (b ^ 0x7L),
+      // 1 bit off in each of lanes 0-2: shares only lane 3
+      6L -> c, 7L -> (c ^ (1L | 1L << 16 | 1L << 32)),
+      // hamming 4 inside lane 0: shares lanes 1-3, excluded
+      8L -> e, 9L -> (e ^ 0xFL),
+      // 1 bit off in every lane: hamming 4, no shared lane, excluded
+      10L -> g, 11L -> (g ^ (1L | 1L << 16 | 1L << 32 | 1L << 48)),
+      // bit 63: a negative fingerprint pairs with its positive flip and
+      // a lane-3 neighbour; doc order runs against the signed fp order;
+      // 15 shares only lane 3 (0x8000) with it
+      14L -> i, 13L -> (i ^ Long.MinValue), 12L -> (i ^ (1L << 50)),
+      15L -> (i ^ (1L | 1L << 16 | 1L << 32)))
+    val docs = spark.createDataFrame(fps).toDF("doc_id", "fp")
+    val got = simhashRows(Llm.simhashPairs(docs))
+    val brute = (for {
+      (d1, f1) <- fps; (d2, f2) <- fps if d1 < d2
+      h = java.lang.Long.bitCount(f1 ^ f2).toLong if h <= 3
+    } yield (d1, d2, h)).toSet
+    assert(brute == Set((1L, 2L, 0L), (1L, 3L, 0L), (2L, 3L, 0L), (4L, 5L, 3L),
+      (6L, 7L, 3L), (12L, 13L, 2L), (12L, 14L, 1L), (13L, 14L, 1L),
+      (14L, 15L, 3L)))
+    assert(got.map(r => (r._1, r._2)).distinct.length == got.length,
+      s"duplicate pairs: $got")
+    assert(got.toSet == brute, s"got ${got.toSet}, expected $brute")
+    assert(simhashRows(simhashPairsReference(docs)).toSet == brute)
   }
 
   test("simsearch ranks are 1..5 with non-increasing cosine per query") {

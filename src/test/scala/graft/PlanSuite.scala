@@ -11,21 +11,24 @@ class PlanSuite extends SparkSuiteBase {
   private def plan(name: String): String =
     run(name).queryExecution.executedPlan.toString
 
-  /** Collect scan nodes from an EXECUTED plan, recursing through
-    * materialized AQE query stages (which are leaves to `collect`). */
-  private def leafScans[T](df: org.apache.spark.sql.DataFrame)(
-      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node under `pl`, recursing through materialized AQE query
+    * stages and reused exchanges (which are leaves to `collect`). */
+  private def allNodes(pl: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def go(pl: SparkPlan): Seq[T] = pl.collect {
-      case q: QueryStageExec       => go(q.plan)
-      case p if pf.isDefinedAt(p)  => Seq(pf(p))
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    pl.collect {
+      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+      case q: QueryStageExec        => q +: allNodes(q.plan)
+      case r: ReusedExchangeExec    => r +: allNodes(r.child)
+      case p                        => Seq(p)
     }.flatten
-    go(df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other                    => other
-    })
   }
+
+  /** Collect scan nodes from an EXECUTED plan, through AQE stages. */
+  private def leafScans[T](df: org.apache.spark.sql.DataFrame)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+    allNodes(df.queryExecution.executedPlan).collect(pf)
 
   test("scan_parquet_project_filter pushes filters and prunes columns") {
     val p = plan("scan_parquet_project_filter")
@@ -441,6 +444,39 @@ class PlanSuite extends SparkSuiteBase {
     val df = run("llm_dedup_simhash")
     df.collect()
     assert(!df.queryExecution.executedPlan.toString.contains("aggregate(zip_with"))
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val nodes = allNodes(df.queryExecution.executedPlan)
+    // pairs are emitted once by construction: no aggregate folds
+    // duplicate (d1, d2) rows
+    val pairAggs = nodes.collect { case a: BaseAggregateExec =>
+      a.groupingExpressions.flatMap(_.references.map(_.name)).toSet }
+      .filter(g => g("d1") || g("d2"))
+    assert(pairAggs.isEmpty, s"an aggregate groups on the output pair: $pairAggs")
+    // the lane self-join reads the explicit (c, chunk) repartition on
+    // both sides; an AQE-coalescible ENSURE_REQUIREMENTS exchange there
+    // would fold the small distinct-fingerprint shuffle into one task
+    def nearestShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Seq(e)
+      case q: QueryStageExec      => nearestShuffles(q.plan)
+      case r: ReusedExchangeExec  => nearestShuffles(r.child)
+      case other                  => other.children.flatMap(nearestShuffles)
+    }
+    val laneJoins = nodes.collect { case j: BaseJoinExec
+      if j.leftKeys.flatMap(_.references.map(_.name)).toSet == Set("c", "chunk") => j }
+    assert(laneJoins.length == 1,
+      s"expected one (c, chunk) lane join:\n${df.queryExecution.executedPlan}")
+    val laneJoin = laneJoins.head
+    Seq(laneJoin.left, laneJoin.right).foreach { side =>
+      val ex = nearestShuffles(side)
+      assert(ex.nonEmpty && ex.forall(_.shuffleOrigin == REPARTITION_BY_NUM),
+        s"lane join side does not read the explicit repartition: " +
+          ex.map(_.shuffleOrigin).mkString(", "))
+    }
   }
 
   test("merge_upsert plans a single full-outer join on the key") {
