@@ -44,7 +44,7 @@ object T {
       // timezone-INDEPENDENT since round 10 (pure NTZ field arithmetic,
       // ADVICE r9) — the pin only keeps *downstream* LTZ operations on
       // ts_us (window(), date_trunc, formatting) on the oracle's UTC
-      // semantics. Scoping via s.newSession() is not an option here:
+      // semantics. Scoping via a sibling session is not an option here:
       // the returned DataFrame must execute in the caller's session.
       s.conf.set("spark.sql.session.timeZone", "UTC")
     }
@@ -328,17 +328,14 @@ object Params {
   // duplication is < 2× at every SF; a duplication-heavy regen only
   // flips a borderline graph to the big plan, which is the SAFE
   // direction (big-on-small costs one repartition; small-on-big OOMs).
-  // Env-overridable so stress runs can force either path.
-  val PagerankBigPairs: Long =
-    sys.env.get("SPARK_GRAFT_PAGERANK_BIG").map(_.toLong).getOrElse(2000000L)
+  val PagerankBigPairs: Long = 2000000L
   // llm_unigram_nll strategy cutoff on the documents FOOTER row count:
   // above it the keyed-join vocab path runs (the broadcast one-row map's
   // element_at is an interpreted linear scan over the vocab — per-token
   // cost grows with corpus size; ×100 measured pathological, round 10).
   // ×10 (50 k docs) stays broadcast (measured fine in the r9 full ×10
-  // gate); ×100 (500 k docs) joins. Env-overridable for paired runs.
-  val UnigramJoinDocs: Long =
-    sys.env.get("SPARK_GRAFT_UNIGRAM_JOIN_DOCS").map(_.toLong).getOrElse(100000L)
+  // gate); ×100 (500 k docs) joins.
+  val UnigramJoinDocs: Long = 100000L
   val ConeDeg = 5.0 // udf_angular_distance cone radius
   val ZoneEps = 0.5 // astro_crossmatch_zones match radius (deg)
 }

@@ -358,43 +358,13 @@ object Joins {
       .orderBy("o_orderkey")
   }
 
-  /** Storage-partitioned join (SPJ) — the fourth shuffle-elimination
-    * strategy on the scored surface, and the one lakehouse tables
-    * (Iceberg/Delta) live on at 100 TB: both sides are DataSource-V2
-    * tables (graft.sources.BucketedLedgerSource) that REPORT their
-    * bucket layout via KeyGroupedPartitioning + HasPartitionKey, so
-    * EnsureRequirements recognizes them as co-partitioned and plans the
-    * fact-fact join with ZERO exchanges — the storage layout is the
-    * exchange, paid once at write time. Differs from
-    * `join_bucketed_colocated` (Hive bucketed tables) in mechanism:
-    * here the CONNECTOR owns the partition metadata, the contract any
-    * custom table format plugs into. The aggregate groups on a superset
-    * of the bucket key, so it rides the reported partitioning too; the
-    * only exchange in the whole plan is the final presentation sort.
-    * PlanSuite asserts exactly that. Oracle: both ledgers are exact
-    * modular arithmetic over range(n), re-derived in DuckDB. */
-  // One SPJ-configured session per caller session (not per call): a
-  // fresh newSession each invocation would pile up SessionStates over
-  // repeated scoring and silently drop the caller's runtime confs.
-  private val spjSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  /** The memoized SPJ-configured twin of the caller's session. The two
-    * harness-level runtime confs are RE-SYNCED from the caller on every
-    * call (cheap conf.sets), not only at creation — a harness that
-    * changes timezone or shuffle partitions mid-session must see the
-    * change reach the scored SPJ plan (ADVICE r12). */
-  private def spjSession(s: SparkSession): SparkSession = {
-    val s2 = spjSessions.computeIfAbsent(s, base => {
-      val n = base.newSession()
-      n.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      n.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      n
-    })
-    for (k <- Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions"))
-      s.conf.getOption(k).foreach(s2.conf.set(k, _))
-    s2
-  }
+  /** The caller's memoized SPJ sibling (v2 bucketing on,
+    * requireAllClusterKeysForCoPartition off) — one SessionState per
+    * caller session, never the caller's SQLConf. */
+  private def spjSession(s: SparkSession): SparkSession =
+    graft.GraftSession.sibling(s, Map(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false"))
 
   /** Bench warm-up hook: materialize the memoized SPJ session and run
     * one tiny co-partitioned join through it. The one-time cost (fresh
@@ -449,6 +419,21 @@ object Joins {
              |GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus""".stripMargin)
   }
 
+  /** Storage-partitioned join (SPJ) — the fourth shuffle-elimination
+    * strategy on the scored surface, and the one lakehouse tables
+    * (Iceberg/Delta) live on at 100 TB: both sides are DataSource-V2
+    * tables (graft.sources.BucketedLedgerSource) that REPORT their
+    * bucket layout via KeyGroupedPartitioning + HasPartitionKey, so
+    * EnsureRequirements recognizes them as co-partitioned and plans the
+    * fact-fact join with ZERO exchanges — the storage layout is the
+    * exchange, paid once at write time. Differs from
+    * `join_bucketed_colocated` (Hive bucketed tables) in mechanism:
+    * here the CONNECTOR owns the partition metadata, the contract any
+    * custom table format plugs into. The aggregate groups on a superset
+    * of the bucket key, so it rides the reported partitioning too; the
+    * only exchange in the whole plan is the final presentation sort.
+    * PlanSuite asserts exactly that. Oracle: both ledgers are exact
+    * modular arithmetic over range(n), re-derived in DuckDB. */
   private[graft] def joinStoragePartitioned(s: SparkSession, dir: String): DataFrame = {
     // The production SPJ conf pair, scoped to an isolated session
     // (shared SparkContext, fresh SQLConf) so no other key's planning

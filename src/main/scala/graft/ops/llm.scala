@@ -222,8 +222,9 @@ object Llm {
       .createOrReplaceTempView("graft_lshinc_base")
     s.sql("""INSERT INTO graftcat.lake.lsh_index
             |SELECT doc_id, band, bv FROM graft_lshinc_base""".stripMargin)
-    val v0 = s.sql("SELECT MAX(version) FROM graftcat.lake.lsh_index.snapshots")
-      .collect().head.getLong(0)
+    val cat = Graftcat.instance(s)
+    val index = Graftcat.ident("lsh_index")
+    val v0 = cat.currentVersion(index)
     // the arriving batch: bands computed once, probed twice, appended
     val batch = bandedOf(sh.where(col("doc_id") % 3 === 0)).localCheckpoint()
     val idx = s.table("graftcat.lake.lsh_index")
@@ -250,8 +251,7 @@ object Llm {
     batch.createOrReplaceTempView("graft_lshinc_batch")
     s.sql("""INSERT INTO graftcat.lake.lsh_index
             |SELECT doc_id, band, bv FROM graft_lshinc_batch""".stripMargin)
-    val v1 = s.sql("SELECT MAX(version) FROM graftcat.lake.lsh_index.snapshots")
-      .collect().head.getLong(0)
+    val v1 = cat.currentVersion(index)
     require(v1 == v0 + 1,
       s"index append must be exactly one version: v$v0 -> v$v1")
     pairs
@@ -382,20 +382,20 @@ object Llm {
     // the enumerated-pair count exceeds the budget, pointing at the
     // banded-LSH production variant. Sizing comes from parquet footers
     // (no job); the bound is overridable for deliberate stress runs via
-    // system property or env. Default 1e11 pairs ≈ n 450 k — well above
-    // every fixture/stress scale (×100 is 2·10¹⁰), well below any real
-    // corpus (n = 10⁹ ⇒ 5·10¹⁷ pairs ⇒ refused).
+    // the graft.embed.allpairs.max system property. Default 1e11 pairs
+    // ≈ n 450 k — well above every fixture/stress scale (×100 is
+    // 2·10¹⁰), well below any real corpus (n = 10⁹ ⇒ 5·10¹⁷ pairs ⇒
+    // refused).
     val nVec = Meta.parquetRowCount(s, s"$dir/embeddings.parquet")
     val enumPairs = nVec * (nVec + 1) / 2
-    val maxPairs = sys.props.get("graft.embed.allpairs.max")
-      .orElse(sys.env.get("SPARK_GRAFT_EMBED_ALLPAIRS_MAX")).map(_.toLong)
+    val maxPairs = sys.props.get("graft.embed.allpairs.max").map(_.toLong)
       .getOrElse(100000000000L)
     Diag.note("llm_dedup_embed_guard", s"n=$nVec pairs=$enumPairs max=$maxPairs")
     require(enumPairs <= maxPairs,
       s"llm_dedup_embed would enumerate $enumPairs vector pairs (n=$nVec), " +
         s"over the all-pairs budget $maxPairs. At production thresholds use " +
         "llm_dedup_embed_prod (banded sign-code LSH, Θ(n) candidates); to " +
-        "force the exact demo anyway set SPARK_GRAFT_EMBED_ALLPAIRS_MAX.")
+        "force the exact demo anyway set the graft.embed.allpairs.max system property.")
     val B = 16
     // Explicit partition counts on BOTH join inputs, keyed exactly like
     // the join: the block-pair join's shuffle INPUT is a few MB even
@@ -563,8 +563,9 @@ object Llm {
       .createOrReplaceTempView("graft_ann_base")
     s.sql("""INSERT INTO graftcat.lake.ann_index
             |SELECT vec_id, t, code FROM graft_ann_base""".stripMargin)
-    val v0 = s.sql("SELECT MAX(version) FROM graftcat.lake.ann_index.snapshots")
-      .collect().head.getLong(0)
+    val cat = Graftcat.instance(s)
+    val index = Graftcat.ident("ann_index")
+    val v0 = cat.currentVersion(index)
     // the arriving batch: codes computed once, probed twice, appended
     val bCodes = embedProdCodes(all.where(pmod(col("vec_id"), lit(3)) === 0)
       .select(col("vec_id"), col("v")), planes).localCheckpoint()
@@ -594,8 +595,7 @@ object Llm {
     bCodes.createOrReplaceTempView("graft_ann_batch")
     s.sql("""INSERT INTO graftcat.lake.ann_index
             |SELECT vec_id, t, code FROM graft_ann_batch""".stripMargin)
-    val v1 = s.sql("SELECT MAX(version) FROM graftcat.lake.ann_index.snapshots")
-      .collect().head.getLong(0)
+    val v1 = cat.currentVersion(index)
     require(v1 == v0 + 1,
       s"index append must be exactly one version: v$v0 -> v$v1")
     pairs
@@ -621,20 +621,16 @@ object Llm {
     * map pass, the self-join shuffles on cluster id with ~64-row
     * groups — no stage is quadratic in n. */
   private def semDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.expressions.{dotD, norm2D}
-    val e = T(s, dir, "embeddings")
+    import graft.plans.expressions.dotD
     // k from the parquet FOOTER row count (round-13 verdict #7): same
     // exact n as count(), zero Spark jobs at plan-build time — at scale
     // this number comes from catalog/manifest stats, never a scan
     val k = math.max(4L, Meta.parquetRowCount(s, s"$dir/embeddings.parquet") / 64L)
-    val base = e.select(col("vec_id"),
+    // seeds come from the base vectors alone, so the aug join is not
+    // re-planned for them
+    val base = T(s, dir, "embeddings").select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
-    val nxt = base.select((col("vec_id") - 1).as("aid"), col("v").as("w"))
-    val aug = base.where(pmod(col("vec_id"), lit(5)) === 0)
-      .join(nxt, col("vec_id") === col("aid"))
-      .select((col("vec_id") + lit(EmbedAugOffset)).as("vec_id"),
-        zip_with(col("v"), col("w"), (x, y) => lit(0.9) * x + lit(0.1) * y).as("v"))
-    val all = base.unionByName(aug).withColumn("n2", norm2D(col("v")))
+    val all = embedProdFrame(s, dir)
     // the 1-row seed list joins on a constant-but-unfoldable key (the
     // llm_kmeans_assign discipline) so the plan stays a broadcast HASH
     // join — a foldable lit(0) key erases the equi-condition and the
@@ -1389,15 +1385,8 @@ object Llm {
     * cost of exact substring dedup (a suffix array is the same
     * O(chars) with a smaller constant). Boilerplate shared by k docs
     * yields k(k−1)/2 pairs — that quadratic is the DECLARED output
-    * semantics; `capPerGram` bounds it for production runs (a gram's
-    * doc list is truncated to its lowest-id members, trading recall on
-    * mega-shared boilerplate for a hard output bound — default OFF to
-    * keep the exact declared semantics). */
-  private def dedupSubstring(s: SparkSession, dir: String): DataFrame =
-    dedupSubstringImpl(s, dir, capPerGram = None)
-
-  private[ops] def dedupSubstringImpl(s: SparkSession, dir: String,
-      capPerGram: Option[Int]): DataFrame = {
+    * semantics. */
+  private def dedupSubstring(s: SparkSession, dir: String): DataFrame = {
     val L = SubstrGramLen
     // gram → 128-bit fingerprint (two seed-separated xxhash64 lanes —
     // ~2⁻¹²⁸ collision odds, far cheaper per gram than md5) BEFORE the
@@ -1416,22 +1405,12 @@ object Llm {
     // dedups per document inside the projection, so no aggregation
     // exchange remains at all. Per-doc dedup ≡ the removed
     // DISTINCT(doc_id, g1, g2) because doc_id was part of its key.
-    val grams0 = T.fan(T(s, dir, "documents"), "doc_id")
+    val grams = T.fan(T(s, dir, "documents"), "doc_id")
       .where(length(col("text")) >= L)
       .select(col("doc_id"),
         explode(graft.plans.expressions.gramHashPairs(col("text"), L)).as("p"))
       .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
       .localCheckpoint()
-    val grams = capPerGram match {
-      case None => grams0
-      case Some(cap) =>
-        // hot-gram cap: keep each gram's `cap` lowest doc_ids — bounds a
-        // gram's pair fan-out to cap(cap-1)/2 regardless of boilerplate
-        import org.apache.spark.sql.expressions.Window
-        grams0.withColumn("rk",
-          row_number().over(Window.partitionBy("g1", "g2").orderBy("doc_id")))
-          .where(col("rk") <= cap).drop("rk")
-    }
     val b = grams.select(col("doc_id").as("doc_b"),
       col("g1").as("h1"), col("g2").as("h2"))
     grams.select(col("doc_id").as("doc_a"), col("g1"), col("g2"))

@@ -936,9 +936,9 @@ object Relational {
     * 100-TB note: the rule+shadow-stats pair is the variant twin of
     * ordinary data skipping — metadata-only, no file opened to decide. */
   private def catalogVariantShredded(s: SparkSession, dir: String): DataFrame = {
-    // the pruning rule must be present at session BUILD time; sessionWith
-    // memoizes one extensions sibling per caller session
-    val vs = graft.plans.GraftExtensions.sessionWith(s)
+    // the pruning rule must be present at session BUILD time: run in the
+    // memoized extensions sibling of the caller's session
+    val vs = graft.GraftSession.sibling(s, extensions = true)
     Graftcat.fresh(vs, "orders_shred")
     T(vs, dir, "orders").createOrReplaceTempView("graft_shred_src")
     vs.sql("CREATE TABLE graftcat.lake.orders_shred (id BIGINT, payload VARIANT)")
@@ -1362,7 +1362,7 @@ object Relational {
     * caught up — the other half of why incremental MV maintenance
     * exists. */
   private def catalogMvRewrite(s: SparkSession, dir: String): DataFrame = {
-    val vs = graft.plans.GraftExtensions.sessionWith(s)
+    val vs = graft.GraftSession.sibling(s, extensions = true)
     Graftcat.fresh(vs, "orders_mvb", "mv_prio_rw")
     T(vs, dir, "orders").createOrReplaceTempView("graft_mvr_src")
     vs.sql("""CREATE TABLE graftcat.lake.orders_mvb
@@ -2601,7 +2601,7 @@ object Relational {
     * costs nothing to store, and optimizes WITH the query — filters
     * through the view still prune files (it is the same scan). */
   private def catalogViews(s: SparkSession, dir: String): DataFrame = {
-    val vs = graft.plans.GraftViewSessions.forSession(s)
+    val vs = graft.GraftSession.sibling(s, extensions = true)
     Graftcat.fresh(vs, "orders_vw")
     T(vs, dir, "orders").createOrReplaceTempView("graft_views_src")
     vs.sql("CALL graftcat.system.drop_view('lake.v_urgent')")

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import graft.GraftSession
 import Det._
 import Params._
 
@@ -20,6 +22,34 @@ import Params._
   */
 object Streaming {
 
+  /** 8 shuffle partitions: a stream's stateful operators get one state
+    * store per shuffle partition at query start, and the fixture's state
+    * is tiny, so 8 stores instead of the session's 32 cut per-batch
+    * store/commit overhead. At real scale size this to state volume — it
+    * is fixed for the checkpoint's lifetime. */
+  private val Stores8 = Map("spark.sql.shuffle.partitions" -> "8")
+
+  /** `$root/in` holding one copy of the events fixture per name: the
+    * fixture is a single parquet file, the file source wants a directory. */
+  private def stageEvents(dir: String, root: String,
+      names: Seq[String] = Seq("events.parquet")): String = {
+    val src = java.nio.file.Paths.get(s"$root/in")
+    java.nio.file.Files.createDirectories(src)
+    for (f <- names)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), src.resolve(f))
+    src.toString
+  }
+
+  /** Drain `df` under AvailableNow into an append-mode `format` sink at
+    * `$root/out`, checkpointed at `$root/cp`; returns the sink path. */
+  private def drainTo(df: DataFrame, root: String, format: String = "parquet"): String = {
+    df.writeStream.format(format)
+      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
+      .outputMode("append").trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    s"$root/out"
+  }
+
   /** True Structured-Streaming pipeline end-to-end INSIDE the scored
     * surface (the twins in graft.streaming cover semantics; this one
     * covers the sink): file source → watermarked tumbling aggregation →
@@ -32,38 +62,19 @@ object Streaming {
     * shape: state shuffles on (window, event_type); output files commit
     * atomically per epoch. */
   private def streamFileSink(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = GraftTmp.fresh("stream")
-    // the fixture table is a single parquet file; the file source wants a
-    // directory
-    val src = java.nio.file.Paths.get(s"$root/in")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      src.resolve("events.parquet"))
-    val sch = T(s, dir, "events").schema // also sets nanosAsLong
-    // the stateful agg's store count = shuffle partitions at query
-    // start; (window × event_type) state is tiny, so 8 stores instead
-    // of the session's 32 cuts per-batch store/commit overhead (conf
-    // restored after the stream finishes — at real scale size this to
-    // state volume, it is fixed for the checkpoint's lifetime)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(sch).parquet(src.toString)
+    val src = stageEvents(dir, root)
+    // (window × event_type) state: 8 stores, on a sibling session
+    val ss = GraftSession.sibling(s, Stores8)
+    val sch = T(ss, dir, "events").schema // also sets nanosAsLong
+    val out = drainTo(ss.readStream.schema(sch).parquet(src)
       .withColumn("ts_us", timestamp_micros(T.usCol(sch("ts").dataType)))
       .withWatermark("ts_us", "1 hour")
       .groupBy(window(col("ts_us"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sumMoneyD(col("value")).as("sum_value"))
       .select(to_date(col("w.start")).as("win_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.read.parquet(s"$root/out").orderBy("win_start", "event_type")
+        col("n"), col("sum_value")), root)
+    s.read.parquet(out).orderBy("win_start", "event_type")
   }
 
   /** foreachBatch idempotent upsert — the production CDC-sink pattern
@@ -78,14 +89,12 @@ object Streaming {
     * the merge joins the batch's latest rows (bounded by keys-per-batch)
     * against the keyed target, scaling with keys, not event volume. */
   private def streamForeachBatchUpsert(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = GraftTmp.fresh("upsert")
-    val src = java.nio.file.Paths.get(s"$root/in")
-    java.nio.file.Files.createDirectories(src)
-    for (f <- Seq("e1.parquet", "e2.parquet"))
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), src.resolve(f))
-    val sch = T(s, dir, "events").schema // also sets nanosAsLong
+    val src = stageEvents(dir, root, Seq("e1.parquet", "e2.parquet"))
+    // per-batch volumes are small (keys-per-batch rows): 8 shuffle
+    // partitions cut per-batch task overhead, on a sibling session
+    val ss = GraftSession.sibling(s, Stores8)
+    val sch = T(ss, dir, "events").schema // also sets nanosAsLong
     val tgt = s"$root/target"
     def latest(df: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
@@ -95,35 +104,27 @@ object Streaming {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
     }
-    // per-batch volumes are small (keys-per-batch rows); 8 shuffle
-    // partitions instead of the session's 32 cuts per-batch task
-    // overhead — same sizing note as streamFileSink
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .select(col("user_id"), col("event_id").as("last_event"),
-          col("event_type").as("last_type"), col("value").as("last_value"),
-          T.usCol(sch("ts").dataType).as("last_us"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val batchLatest = latest(batch)
-          val merged =
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(tgt)))
-              latest(sp.read.parquet(tgt).unionByName(batchLatest))
-            else batchLatest
-          merged.write.mode("overwrite").parquet(s"$root/target_tmp")
-          rm(new java.io.File(tgt))
-          new java.io.File(s"$root/target_tmp").renameTo(new java.io.File(tgt))
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    ss.readStream.schema(sch).option("maxFilesPerTrigger", "1")
+      .parquet(src)
+      .select(col("user_id"), col("event_id").as("last_event"),
+        col("event_type").as("last_type"), col("value").as("last_value"),
+        T.usCol(sch("ts").dataType).as("last_us"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", s"$root/cp")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val sp = batch.sparkSession
+        val batchLatest = latest(batch)
+        val merged =
+          if (java.nio.file.Files.exists(java.nio.file.Paths.get(tgt)))
+            latest(sp.read.parquet(tgt).unionByName(batchLatest))
+          else batchLatest
+        merged.write.mode("overwrite").parquet(s"$root/target_tmp")
+        rm(new java.io.File(tgt))
+        new java.io.File(s"$root/target_tmp").renameTo(new java.io.File(tgt))
+        ()
+      }
+      .start().awaitTermination()
     s.read.parquet(tgt).orderBy("user_id")
   }
 
@@ -146,7 +147,7 @@ object Streaming {
     * the sum is order-insensitive and byte-exact vs DuckDB's
     * SUM(DECIMAL). */
   private def streamCustomState(s: SparkSession, dir: String): DataFrame =
-    runPurchaseSessionStream(s, dir, "cstate",
+    runPurchaseSessionStream(s, dir, "cstate", Map.empty,
       graft.streaming.Streams.purchaseSessions(_, SessionGapUs))
 
   /** The SAME purchase-session pipeline on Spark 4's transformWithState
@@ -155,55 +156,34 @@ object Streaming {
     * RocksDB state store provider the new API mandates. Same oracle as
     * stream_custom_state: the two APIs share one fold, so the append-mode
     * emission contract is identical. */
-  private def streamTwsState(s: SparkSession, dir: String): DataFrame = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runPurchaseSessionStream(s, dir, "twsstate",
+  private def streamTwsState(s: SparkSession, dir: String): DataFrame =
+    runPurchaseSessionStream(s, dir, "twsstate",
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       graft.streaming.Streams.purchaseSessionsTws(_, SessionGapUs))
-    finally prev match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-  }
 
   /** Shared streaming harness for the two custom-state APIs: file source
     * → watermark → stateful operator → parquet sink under AvailableNow,
-    * then a batch read of the committed output. */
+    * then a batch read of the committed output. The stream runs on a
+    * sibling session carrying 8 state stores (per-user state is 4 longs)
+    * plus `confs`. */
   private def runPurchaseSessionStream(s: SparkSession, dir: String, tagPrefix: String,
+      confs: Map[String, String],
       op: org.apache.spark.sql.Dataset[graft.streaming.Streams.PEvent] =>
         org.apache.spark.sql.Dataset[graft.streaming.Streams.PSession]): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import s.implicits._
+    val ss = GraftSession.sibling(s, Stores8 ++ confs)
+    import ss.implicits._
     val root = GraftTmp.fresh(tagPrefix)
-    val src = java.nio.file.Paths.get(s"$root/in")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      src.resolve("events.parquet"))
-    val sch = T(s, dir, "events").schema // also sets nanosAsLong
-    // per-user state is 4 longs; 8 state stores instead of the session's
-    // 32 cuts per-batch store/commit overhead (same sizing note as
-    // streamFileSink; conf restored after)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val in = s.readStream.schema(sch).parquet(src.toString)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          (Det.money(col("value")) * 100).cast("long").as("cents"),
-          timestamp_micros(T.usCol(sch("ts").dataType)).as("ts_us"),
-          T.usCol(sch("ts").dataType).as("us"))
-        .withWatermark("ts_us", "1 hour")
-        .as[graft.streaming.Streams.PEvent]
-      val q = op(in)
-        .writeStream.format("parquet")
-        .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.read.parquet(s"$root/out")
+    val src = stageEvents(dir, root)
+    val sch = T(ss, dir, "events").schema // also sets nanosAsLong
+    val in = ss.readStream.schema(sch).parquet(src)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        (Det.money(col("value")) * 100).cast("long").as("cents"),
+        timestamp_micros(T.usCol(sch("ts").dataType)).as("ts_us"),
+        T.usCol(sch("ts").dataType).as("us"))
+      .withWatermark("ts_us", "1 hour")
+      .as[graft.streaming.Streams.PEvent]
+    s.read.parquet(drainTo(op(in).toDF(), root))
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"),
         (col("sum_cents").cast("decimal(30,0)") / 100).cast("double").as("sum_value"),
         col("reason"))
@@ -330,32 +310,22 @@ object Streaming {
     * the fixture in one micro-batch the committed result equals the
     * batch interval join — that batch query is the oracle. */
   private def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = GraftTmp.fresh("ssjoin")
-    val src = java.nio.file.Paths.get(s"$root/in")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      src.resolve("events.parquet"))
-    // join state is keyed on user_id: 8 state stores instead of the
-    // session's 32 — same sizing note as streamFileSink. The override
-    // lives on a FORKED session (shared SparkContext, isolated SQLConf):
-    // the previous set/finally-restore on the shared session conf was a
-    // race if two builders ever run concurrently (round-6 verdict #4).
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    // An INNER stream-stream join emits every row on arrival; the
-    // trailing no-data micro-batch exists only to advance the watermark
-    // for append-mode emission and state EVICTION — it commits zero
-    // output rows here. Skipping it (documented Spark conf, scoped to
-    // this forked session) removes a full planning+state-commit batch
-    // per drain; the committed result is identical (oracle-pinned).
-    // Outer joins / watermarked aggregations must NOT do this — their
-    // final windows emit in exactly that batch (streamFileSink keeps it).
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val src = stageEvents(dir, root)
+    // join state is keyed on user_id: 8 state stores. An INNER
+    // stream-stream join emits every row on arrival; the trailing
+    // no-data micro-batch exists only to advance the watermark for
+    // append-mode emission and state EVICTION — it commits zero output
+    // rows here. Skipping it (documented Spark conf, scoped to this
+    // sibling session) removes a full planning+state-commit batch per
+    // drain; the committed result is identical (oracle-pinned). Outer
+    // joins / watermarked aggregations must NOT do this — their final
+    // windows emit in exactly that batch (streamFileSink keeps it).
+    val ss = GraftSession.sibling(s,
+      Stores8 + ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     val sch = T(ss, dir, "events").schema // also sets nanosAsLong on ss
     def side(tpe: String, idAs: String, tsAs: String) =
-      ss.readStream.schema(sch).parquet(src.toString)
+      ss.readStream.schema(sch).parquet(src)
         .where(col("event_type") === tpe)
         .select(col("user_id"), col("event_id").as(idAs),
           timestamp_micros(T.usCol(sch("ts").dataType)).as(tsAs))
@@ -366,12 +336,7 @@ object Streaming {
       .select(col("l.user_id").as("user_id"), col("purchase_id"),
         col("error_id"), unix_micros(col("p_ts")).as("purchase_us"),
         unix_micros(col("e_ts")).as("error_us"))
-    val q = joined.writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
+    s.read.parquet(drainTo(joined, root))
       .orderBy("user_id", "purchase_id", "error_id")
   }
 
@@ -386,18 +351,12 @@ object Streaming {
     * result aggregates the committed output, and the oracle re-derives
     * the deterministic tick ledger from range(n). */
   private def streamCustomSource(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = GraftTmp.fresh("stream_src")
-    val q = s.readStream.format("graft.sources.LedgerStreamSource")
+    val out = drainTo(s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
-      .load()
-      .writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
+      .load(), root)
+    s.read.parquet(out)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_ticks"), sumMoneyD(col("amount")).as("total"))
       .orderBy("user_id")
@@ -413,18 +372,12 @@ object Streaming {
     * batch-reads the sink's container files back through the same
     * connector; oracle re-derives the ledger from range(n). */
   private def streamCustomSink(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = GraftTmp.fresh("stream_sink")
-    val q = s.readStream.format("graft.sources.LedgerStreamSource")
+    val out = drainTo(s.readStream.format("graft.sources.LedgerStreamSource")
       .option("rows", "10000").option("batchSize", "2500")
       .option("partitions", "4")
-      .load()
-      .writeStream.format("graft.sources.AvroDirSource")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.format("graft.sources.AvroDirSource").option("path", s"$root/out")
+      .load(), root, "graft.sources.AvroDirSource")
+    s.read.format("graft.sources.AvroDirSource").option("path", out)
       .load()
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_ticks"),
@@ -446,7 +399,6 @@ object Streaming {
     * 100 TB planning a batch is O(manifest diff), never a directory
     * listing. */
   private def streamTableSource(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "orders_feed")
     T(s, dir, "orders").createOrReplaceTempView("graft_feed_src")
     s.sql("""CREATE TABLE graftcat.lake.orders_feed AS
@@ -455,14 +407,9 @@ object Streaming {
     s.sql("""INSERT INTO graftcat.lake.orders_feed
             |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
             |FROM graft_feed_src WHERE o_orderkey % 3 <> 0""".stripMargin)
-    val root = GraftTmp.fresh("stream_tbl")
-    val q = s.readStream.table("graftcat.lake.orders_feed")
-      .writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
+    val out = drainTo(s.readStream.table("graftcat.lake.orders_feed"),
+      GraftTmp.fresh("stream_tbl"))
+    s.read.parquet(out)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sum_key"),
         sumMoneyD(col("o_totalprice")).as("total"))
@@ -496,7 +443,6 @@ object Streaming {
     * trigger plans O(changed files) splits from the manifest diff —
     * no table scan, no state store. */
   private def streamTableCdf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "cust_cdfs")
     T(s, dir, "customer").createOrReplaceTempView("graft_cdfs_src")
     s.sql("""CREATE TABLE graftcat.lake.cust_cdfs AS
@@ -513,14 +459,9 @@ object Streaming {
     s.sql("""UPDATE graftcat.lake.cust_cdfs
             |SET c_acctbal = c_acctbal + 500.0
             |WHERE c_nationkey = 3""".stripMargin)
-    val root = GraftTmp.fresh("stream_cdf")
-    val q = s.readStream.table("graftcat.lake.cust_cdfs.changes")
-      .writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
+    val out = drainTo(s.readStream.table("graftcat.lake.cust_cdfs.changes"),
+      GraftTmp.fresh("stream_cdf"))
+    s.read.parquet(out)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"),
         col("_change_type").as("change_type"))
       .orderBy("change_type", "c_custkey")
@@ -543,7 +484,6 @@ object Streaming {
     * At 100 TB this is the incremental-ETL consumer: each trigger
     * moves O(changed rows), never O(table). */
   private def streamCdcReplicate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "cust_repl_src", "cust_repl_dst")
     T(s, dir, "customer").createOrReplaceTempView("graft_repl_src")
     s.sql("""CREATE TABLE graftcat.lake.cust_repl_src AS
@@ -594,11 +534,11 @@ object Streaming {
     drain()
     // replay safety half 1: a drained restart finds no new offsets and
     // must not commit anything to the target
-    val vDst = s.sql("SELECT MAX(version) FROM graftcat.lake.cust_repl_dst.snapshots")
-      .collect().head.getLong(0)
+    val cat = Graftcat.instance(s)
+    val dst = Graftcat.ident("cust_repl_dst")
+    val vDst = cat.currentVersion(dst)
     drain()
-    val vDst2 = s.sql("SELECT MAX(version) FROM graftcat.lake.cust_repl_dst.snapshots")
-      .collect().head.getLong(0)
+    val vDst2 = cat.currentVersion(dst)
     require(vDst2 == vDst,
       s"drained restart committed to the target: v$vDst -> v$vDst2")
     // the replica must BE the source, row for row
@@ -634,7 +574,6 @@ object Streaming {
     * sink stays time-travelable, and downstream consumers stream ITS
     * versions in turn. */
   private def streamTableSink(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "orders_tsink", "orders_tsink_dst")
     T(s, dir, "orders").createOrReplaceTempView("graft_tsink_src")
     s.sql("""CREATE TABLE graftcat.lake.orders_tsink
@@ -658,13 +597,11 @@ object Streaming {
       q.awaitTermination()
     }
     drain()
-    val vDst = s.sql(
-      "SELECT MAX(version) FROM graftcat.lake.orders_tsink_dst.snapshots")
-      .collect().head.getLong(0)
+    val cat = Graftcat.instance(s)
+    val dst = Graftcat.ident("orders_tsink_dst")
+    val vDst = cat.currentVersion(dst)
     drain() // exactly-once: a drained restart commits nothing
-    val vDst2 = s.sql(
-      "SELECT MAX(version) FROM graftcat.lake.orders_tsink_dst.snapshots")
-      .collect().head.getLong(0)
+    val vDst2 = cat.currentVersion(dst)
     require(vDst2 == vDst,
       s"drained restart committed to the sink table: v$vDst -> v$vDst2")
     s.sql("""SELECT 'dst' AS side, o_orderpriority AS k, COUNT(*) AS n,
@@ -692,7 +629,6 @@ object Streaming {
     * is how a continuous ingest pipeline gets atomic daily publishes
     * without pausing the stream's writer. */
   private def streamBranchWap(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "orders_swap_in", "orders_swap")
     T(s, dir, "orders").createOrReplaceTempView("graft_swap_src")
     s.sql("""CREATE TABLE graftcat.lake.orders_swap_in
@@ -764,7 +700,6 @@ object Streaming {
     * (pre/post images), dv DELETE. Output = MV ‖ full recompute —
     * both must hash-match the DuckDB-derived final state. */
   private def streamIncrementalMv(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "orders_smv", "smv_prio")
     T(s, dir, "orders").createOrReplaceTempView("graft_smv_src")
     s.sql("""CREATE TABLE graftcat.lake.orders_smv
@@ -841,7 +776,6 @@ object Streaming {
   }
 
   private def streamTableRatelimit(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     Graftcat.fresh(s, "cust_rate")
     T(s, dir, "customer").createOrReplaceTempView("graft_rate_src")
     s.sql("""CREATE TABLE graftcat.lake.cust_rate
@@ -851,20 +785,14 @@ object Streaming {
                |SELECT c_custkey, c_nationkey, c_acctbal FROM graft_rate_src
                |WHERE c_custkey % 5 = $i""".stripMargin)
     val root = GraftTmp.fresh("stream_rate")
-    val q = s.readStream
-      .option("maxFilesPerTrigger", "2")
-      .table("graftcat.lake.cust_rate")
-      .writeStream.format("parquet")
-      .option("path", s"$root/out").option("checkpointLocation", s"$root/cp")
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = drainTo(s.readStream.option("maxFilesPerTrigger", "2")
+      .table("graftcat.lake.cust_rate"), root)
     // the rate limit must have engaged: several bounded batches, not one
     val offsets = Option(new java.io.File(s"$root/cp/offsets").listFiles())
       .map(_.count(!_.getName.startsWith("."))).getOrElse(0)
     require(offsets > 2,
       s"maxFilesPerTrigger did not split the drain: $offsets offset entries")
-    s.read.parquet(s"$root/out")
+    s.read.parquet(out)
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n"), sum("c_custkey").as("sum_key"),
         sumMoneyD(col("c_acctbal")).as("total_bal"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.connector.catalog.Identifier
-import org.apache.spark.sql.graftshim.Shim
 
 import graft.sources.GraftCatalog
 
@@ -26,9 +25,9 @@ import graft.sources.GraftCatalog
   * clear error instead of an analyzer-fixpoint blowup).
   *
   * Activate with `spark.sql.extensions=graft.plans.GraftExtensions` at
-  * session build, or [[GraftViewSessions.forSession]] for a live
-  * session (a sibling session on the same context with the rule
-  * injected — the harness sessions are driver-built).
+  * session build, or `graft.GraftSession.sibling(s, extensions = true)`
+  * for a live session (a sibling session on the same context with the
+  * rule injected — the harness sessions are driver-built).
   */
 case class ResolveGraftViews(spark: SparkSession) extends Rule[LogicalPlan] {
   import ResolveGraftViews._
@@ -69,17 +68,4 @@ case class ResolveGraftViews(spark: SparkSession) extends Rule[LogicalPlan] {
 object ResolveGraftViews {
   private[plans] val DepthTag = new TreeNodeTag[Int]("graftViewDepth")
   private[plans] val MaxDepth = 10
-}
-
-/** One view-resolving sibling session per harness session, memoized —
-  * same SparkContext and SharedState, extensions carry
-  * [[ResolveGraftViews]]. */
-object GraftViewSessions {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  def forSession(spark: SparkSession): SparkSession =
-    cache.computeIfAbsent(spark, s =>
-      Shim.sessionWithExtensions(s,
-        ext => ext.injectResolutionRule(sess => ResolveGraftViews(sess))))
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.connector.catalog.{Identifier, ViewInfo}
 import org.apache.spark.sql.types.StructType
 
-import graft.plans.GraftViewSessions
 import graft.sources.GraftCatalog
 
 /** SQL-text views in the graft catalog — round-16 verdict #5:
@@ -19,7 +18,7 @@ class GraftViewSuite extends SparkSuiteBase {
   /** The view-resolving session (rule injected at build). */
   private lazy val vs = {
     wh
-    val s = GraftViewSessions.forSession(spark)
+    val s = GraftSession.sibling(spark, extensions = true)
     s.conf.set("spark.sql.catalog.vwcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.vwcat.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS vwcat.db")

@@ -13,7 +13,7 @@ class MvRewriteSuite extends SparkSuiteBase {
   private lazy val wh =
     java.nio.file.Files.createTempDirectory("graft_mvr_test").toString
   private lazy val vs: SparkSession = {
-    val s = graft.plans.GraftExtensions.sessionWith(spark)
+    val s = GraftSession.sibling(spark, extensions = true)
     s.conf.set("spark.sql.catalog.mcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.mcat.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS mcat.db")

@@ -588,18 +588,18 @@ class PlanSuite extends SparkSuiteBase {
     assert(classOf[org.apache.spark.sql.classic.SparkSession]
       .getDeclaredConstructors.exists(_.getParameterCount == 6),
       "classic SparkSession 6-arg constructor is gone — update Shim")
-    // a FRESH parent (sessionWith memoizes per parent — the suite's
+    // a FRESH parent (siblings are memoized per parent — the suite's
     // shared session may already have a sibling built without this conf)
     val parent = spark.newSession()
     parent.conf.set("spark.sql.shuffle.partitions", "7")
     parent.conf.set("graft.test.carryover", "yes")
-    val sib = graft.plans.GraftExtensions.sessionWith(parent)
+    val sib = GraftSession.sibling(parent, extensions = true)
     assert(sib ne parent)
     assert(sib.conf.get("spark.sql.shuffle.partitions") == "7",
       "parent's SET session confs must carry into the sibling")
     assert(sib.conf.get("graft.test.carryover") == "yes")
     // memoized: second call returns the same sibling
-    assert(graft.plans.GraftExtensions.sessionWith(parent) eq sib)
+    assert(GraftSession.sibling(parent, extensions = true) eq sib)
     // and the sibling carries the injected SQL function registration
     assert(sib.sql("""SELECT graft_dot(CAST(array(1,2) AS ARRAY<FLOAT>),
                      |CAST(array(3,4) AS ARRAY<FLOAT>))""".stripMargin)

@@ -278,6 +278,7 @@ class SemanticsSuite extends SparkSuiteBase {
     try {
       val ex = intercept[IllegalArgumentException](run("llm_dedup_embed"))
       assert(ex.getMessage.contains("llm_dedup_embed_prod"))
+      assert(ex.getMessage.contains(key))
     } finally sys.props.remove(key)
   }
 

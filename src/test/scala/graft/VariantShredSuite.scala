@@ -20,7 +20,7 @@ class VariantShredSuite extends SparkSuiteBase {
     * rule must run BEFORE V2ScanRelationPushDown — extraOptimizations
     * would be too late) and the test catalog registered. */
   private lazy val vs: SparkSession = {
-    val s = graft.plans.GraftExtensions.sessionWith(spark)
+    val s = GraftSession.sibling(spark, extensions = true)
     s.conf.set("spark.sql.catalog.vcat", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.vcat.warehouse", wh)
     s
