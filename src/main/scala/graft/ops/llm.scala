@@ -179,7 +179,11 @@ object Llm {
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
     val sh = shingled(s, dir)
     val banded = bandedOf(sh)
-    val cand = banded.as("x").join(banded.as("y"),
+    // sort-merge, pinned: the exploded band table is 16 rows per
+    // document, but Catalyst sizes it like its input and would broadcast
+    // it (a 48 MiB relation at x4); the merge join is also the plan that
+    // spills at 100 TB
+    val cand = banded.as("x").hint("merge").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
@@ -1274,22 +1278,37 @@ object Llm {
 
   /** Benchmark decontamination — for every eval-split document (same
     * md5-prefix split as [[trainTestSplit]]), how many train documents
-    * share at least one 5-token shingle, and how many of its shingles
-    * leak. Candidates join on the shingle key (the dedup_near shape);
-    * at 100 TB the eval side is the small one — broadcast it, or band
-    * the shingles MinHash-style first. */
+    * share at least one 5-token shingle, and how many of its distinct
+    * shingles leak. Shingles never become strings: each document's
+    * distinct shingles are fingerprinted in place by the compiled
+    * ShingleHashPairs kernel into two xxhash64 lanes (g1, g2), and train
+    * joins eval on those two longs, with eval as the hash-join build
+    * side — the small side at every scale (about 1 document in 16).
+    * The join carries no hint. When the scan is split finely enough to
+    * skip the fan-out shuffle (a multi-file input, such as a seeded
+    * StressGen copy), Spark picks the join from static estimates, which
+    * size both exploded sides like the same scan; on that tie it builds
+    * the right side, which is why eval is written on the right. After a
+    * shuffle, AQE builds on the side that is smaller at run time, again
+    * eval. Above the broadcast limit Spark can still fall back to a
+    * sort-merge join on the 8-byte keys. Leaked shingles are counted as
+    * distinct (g1, g2) pairs, which equals the distinct-string count
+    * unless two shingles collide on both seeded lanes (the 128-bit
+    * argument of `llm_dedup_substring`). */
   private def contaminationCheck(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(s, dir)
+    val docs = T.fan(T(s, dir, "documents"), "doc_id")
       .withColumn("is_eval",
         substring(md5(col("doc_id").cast("string").cast("binary")), 1, 4) < "1000")
-    val ev = sh.where(col("is_eval"))
-      .select(col("doc_id").as("eval_doc"), explode(col("shingles")).as("sh"))
-    val tr = sh.where(!col("is_eval"))
-      .select(col("doc_id").as("train_doc"), explode(col("shingles")).as("sh2"))
-    ev.join(tr, col("sh") === col("sh2"))
+    def fingerprints(d: DataFrame, doc: String, g1: String, g2: String) =
+      d.select(col("doc_id").as(doc), explode(
+          graft.plans.expressions.shingleHashPairs(col("text"), ShingleK)).as("p"))
+        .select(col(doc), col("p.g1").as(g1), col("p.g2").as(g2))
+    val ev = fingerprints(docs.where(col("is_eval")), "eval_doc", "g1", "g2")
+    val tr = fingerprints(docs.where(!col("is_eval")), "train_doc", "t1", "t2")
+    tr.join(ev, col("t1") === col("g1") && col("t2") === col("g2"))
       .groupBy("eval_doc")
       .agg(countDistinct(col("train_doc")).as("n_train_docs"),
-        countDistinct(col("sh")).as("n_shared_shingles"))
+        countDistinct(col("g1"), col("g2")).as("n_shared_shingles"))
       .orderBy("eval_doc")
   }
 

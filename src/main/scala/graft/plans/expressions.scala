@@ -250,6 +250,11 @@ object ShingleUtil {
   val GramSeed2: Long =
     org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(0x9747b28cL, 42L)
 
+  /** Element type of the two fingerprint kernels below. */
+  val HashPairsType: DataType = ArrayType(
+    StructType(Seq(StructField("g1", LongType, nullable = false),
+      StructField("g2", LongType, nullable = false))), containsNull = false)
+
   /** Stride-1 k-CHAR gram fingerprints of `s`, deduplicated per call in
     * first-occurrence order: for every char window [i, i+k) the pair
     *   g1 = xxhash64(bytes)          (seed 42 — the default)
@@ -267,7 +272,6 @@ object ShingleUtil {
   def gramHashPairs(s: org.apache.spark.unsafe.types.UTF8String, k: Int): ArrayData = {
     import org.apache.spark.unsafe.Platform
     import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.expressions.XXH64
     val nBytes = s.numBytes()
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -292,11 +296,48 @@ object ShingleUtil {
       java.util.Arrays.copyOf(tmp, i + 1)
     }
     val numChars = if (ascii) nBytes else offs.length - 1
-    if (numChars < k)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val n = numChars - k + 1
-    // open-addressing set on the (g1,g2) pair; emission order = first
-    // occurrence (deterministic under task retry)
+    windowHashPairs(s, offs, numChars - k + 1, k, 0)
+  }
+
+  /** Stride-1 k-TOKEN shingle fingerprints of `s` (window rule on
+    * [[ShingleHashPairs]]), deduplicated per call in first-occurrence
+    * order. n spaces make n+1 tokens, empty ones included; a space byte
+    * never occurs inside a multi-byte UTF-8 sequence, so cutting at
+    * bytes equals cutting at chars. Fewer than k tokens yield no
+    * shingle. */
+  def shingleHashPairs(s: org.apache.spark.unsafe.types.UTF8String, k: Int): ArrayData = {
+    import org.apache.spark.unsafe.Platform
+    val nBytes = s.numBytes()
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    var nTok = 1
+    var b = 0
+    while (b < nBytes) { if (Platform.getByte(base, off + b) == ' ') nTok += 1; b += 1 }
+    // starts(t) = first byte of token t; starts(nTok) = nBytes + 1, one
+    // past a virtual trailing space, so token t ends at starts(t+1) - 1
+    val starts = new Array[Int](nTok + 1)
+    var t = 1
+    b = 0
+    while (b < nBytes) {
+      if (Platform.getByte(base, off + b) == ' ') { starts(t) = b + 1; t += 1 }
+      b += 1
+    }
+    starts(nTok) = nBytes + 1
+    windowHashPairs(s, starts, nTok - k + 1, k, 1)
+  }
+
+  /** The `n` windows [at(i), at(i+k) - trim) of `s`'s bytes, each hashed
+    * to the (g1, g2) lane pair and deduplicated on that pair in
+    * first-occurrence order (deterministic under task retry);
+    * `at(j)` = `bounds(j)`, or `j` when `bounds` is null. */
+  private def windowHashPairs(s: org.apache.spark.unsafe.types.UTF8String,
+      bounds: Array[Int], n: Int, k: Int, trim: Int): ArrayData = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    if (n <= 0) return new GenericArrayData(Array.empty[Any])
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    // open-addressing set on the (g1,g2) pair
     var cap = 8
     while (cap < n * 2) cap <<= 1
     val mask = cap - 1
@@ -307,8 +348,8 @@ object ShingleUtil {
     var m = 0
     var i = 0
     while (i < n) {
-      val b0 = if (ascii) i else offs(i)
-      val b1 = if (ascii) i + k else offs(i + k)
+      val b0 = if (bounds == null) i else bounds(i)
+      val b1 = (if (bounds == null) i + k else bounds(i + k)) - trim
       val g1 = XXH64.hashUnsafeBytes(base, off + b0, b1 - b0, 42L)
       val g2 = XXH64.hashUnsafeBytes(base, off + b0, b1 - b0, GramSeed2)
       var idx = (java.lang.Long.hashCode(g1 * 0x9e3779b97f4a7c15L + g2) & mask)
@@ -319,13 +360,12 @@ object ShingleUtil {
       }
       if (!dup) {
         usd(idx) = true; tg1(idx) = g1; tg2(idx) = g2
-        out(m) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](g1, g2))
+        out(m) = new GenericInternalRow(Array[Any](g1, g2))
         m += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       if (m == n) out
       else { val t = new Array[Any](m); System.arraycopy(out, 0, t, 0, m); t })
   }
@@ -405,9 +445,7 @@ case class GramHashPairs(child: Expression, k: Int)
 
   require(k >= 1, "gram size must be positive")
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("g1", LongType, nullable = false),
-      StructField("g2", LongType, nullable = false))), containsNull = false)
+  override def dataType: DataType = ShingleUtil.HashPairsType
   override def prettyName: String = "graft_gram_hash_pairs"
 
   override protected def nullSafeEval(in: Any): Any =
@@ -418,6 +456,44 @@ case class GramHashPairs(child: Expression, k: Int)
     defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.gramHashPairs($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): GramHashPairs =
+    copy(child = newChild)
+}
+
+/** Compiled stride-1 k-TOKEN shingle fingerprinting with per-document
+  * dedup ([[ShingleUtil.shingleHashPairs]]): the fingerprint twin of
+  * `shinglesK(split(text, " "), k)` followed by the two xxhash64 lanes.
+  * Window rule: the text is cut at single-space bytes exactly as
+  * `split(text, " ")` cuts it (empty tokens included), and shingle i is
+  * the byte range from the start of token i to the end of token i+k-1,
+  * so each window's bytes are the `concat_ws(" ", …)` shingle string's
+  * bytes and the pair is bit-identical to `xxhash64(sh)` /
+  * `xxhash64(lit(0x9747b28cL), sh)` (pinned in LlmOpsSuite). No token
+  * array and no shingle string is built; windows hash in place over the
+  * text's bytes. Dedup is on the (g1, g2) pair, so the per-document set
+  * equals the distinct-shingle set unless two distinct shingles collide
+  * on BOTH seeded lanes — the 128-bit collision argument documented on
+  * the substring-dedup operator (`llm_dedup_substring`), which decides
+  * joins on the same two lanes. Output rows are
+  * struct<g1: bigint, g2: bigint>; the text must be valid UTF-8 (split
+  * decodes it, the window hash does not).
+  */
+case class ShingleHashPairs(child: Expression, k: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+
+  require(k >= 1, "shingle size must be positive")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ShingleUtil.HashPairsType
+  override def prettyName: String = "graft_shingle_hash_pairs"
+
+  override protected def nullSafeEval(in: Any): Any =
+    ShingleUtil.shingleHashPairs(
+      in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.shingleHashPairs($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleHashPairs =
     copy(child = newChild)
 }
 
@@ -485,6 +561,10 @@ object expressions {
   /** Column-level API for [[GramHashPairs]]. */
   def gramHashPairs(text: Column, k: Int): Column =
     Shim.column(GramHashPairs(Shim.expression(text), k))
+
+  /** Column-level API for [[ShingleHashPairs]]. */
+  def shingleHashPairs(text: Column, k: Int): Column =
+    Shim.column(ShingleHashPairs(Shim.expression(text), k))
 
   /** Column-level API for [[SimHashChunks]]. */
   def simhashChunks(toks: Column): Column =

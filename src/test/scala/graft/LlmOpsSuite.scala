@@ -178,6 +178,77 @@ class LlmOpsSuite extends SparkSuiteBase {
       "GramHashPairs fell out of whole-stage codegen")
   }
 
+  test("compiled ShingleHashPairs equals xxhash64 over ShinglesK's strings") {
+    // fixture docs + hand-built edge cases: leading, trailing and doubled
+    // spaces (empty tokens), fewer than k and exactly k tokens, repeated
+    // shingles (dedup), 2/3/4-byte UTF-8 tokens, blank and empty text
+    import spark.implicits._
+    val edge = Seq(
+      " leading space makes an empty first token",
+      "trailing space makes an empty last token ",
+      "doubled  spaces  make  empty  inner  tokens",
+      "four tokens only here", "exactly five tokens right here",
+      "x y x y x y x y x y x y x y",
+      "café brûlé crème déjà vu encore café brûlé",
+      "中文 处理 测试 中文 处理 测试 中文 处理",
+      "😀 emoji 😀 tokens 𝄞 and 😀 more 𝄞",
+      "   ", "")
+      .toDF("text").withColumn("doc_id", monotonically_increasing_id())
+    val docs = T(spark, SF, "documents").select(col("doc_id"), col("text"))
+      .unionByName(edge.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    for (k <- Seq(1, 2, 5)) {
+      val slow = docs
+        .select(col("doc_id"),
+          explode(graft.plans.expressions.shinglesK(split(col("text"), " "), k)).as("sh"))
+        .select(col("doc_id"), xxhash64(col("sh")).as("g1"),
+          xxhash64(lit(0x9747b28cL), col("sh")).as("g2"))
+      val fast = docs
+        .select(col("doc_id"),
+          explode(graft.plans.expressions.shingleHashPairs(col("text"), k)).as("p"))
+        .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
+      // same SET of (doc, g1, g2) AND same per-doc counts (dedup exactness)
+      assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,
+        s"ShingleHashPairs diverged from xxhash64 over ShinglesK at k=$k")
+      // stays inside whole-stage codegen
+      fast.collect()
+      assert(fast.queryExecution.executedPlan.toString.contains("*("),
+        "ShingleHashPairs fell out of whole-stage codegen")
+    }
+    // the edge cases are not vacuous: per-doc shingle counts at k = 5
+    val counts = edge
+      .select(col("text"),
+        size(graft.plans.expressions.shingleHashPairs(col("text"), 5)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(counts("four tokens only here") == 0)
+    assert(counts("exactly five tokens right here") == 1)
+    assert(counts("x y x y x y x y x y x y x y") == 2)
+    assert(counts("doubled  spaces  make  empty  inner  tokens") == 7)
+    assert(counts("   ") == 0 && counts("") == 0)
+  }
+
+  test("llm_contamination_check rows equal the string-shingle spelling") {
+    // reference: the string-shingle spelling the key used before its
+    // join moved onto shingle fingerprints
+    val sh = T(spark, SF, "documents")
+      .select(col("doc_id"),
+        graft.plans.expressions.shinglesK(split(col("text"), " "), 5).as("shingles"))
+      .withColumn("is_eval",
+        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 4) < "1000")
+    val ev = sh.where(col("is_eval"))
+      .select(col("doc_id").as("eval_doc"), explode(col("shingles")).as("sh"))
+    val tr = sh.where(!col("is_eval"))
+      .select(col("doc_id").as("train_doc"), explode(col("shingles")).as("sh2"))
+    val want = ev.join(tr, col("sh") === col("sh2"))
+      .groupBy("eval_doc")
+      .agg(countDistinct(col("train_doc")).as("n_train_docs"),
+        countDistinct(col("sh")).as("n_shared_shingles"))
+      .orderBy("eval_doc")
+      .collect().toSeq
+    val got = run("llm_contamination_check").collect().toSeq
+    assert(want.nonEmpty, "no contaminated eval document — test vacuous")
+    assert(got == want)
+  }
+
   test("compiled CountInSet equals the interpreted filter+isin spelling and codegens") {
     val words = Seq("the", "a", "join")
     val toks = split(col("text"), " ")

@@ -479,6 +479,50 @@ class PlanSuite extends SparkSuiteBase {
     }
   }
 
+  test("llm_contamination_check: the executed join builds on eval, on LongType keys only") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
+    import org.apache.spark.sql.types.LongType
+    // the fixture is one file, so the scan is fanned out by a shuffle
+    // and AQE picks the join from runtime sizes; an 8-file copy scans
+    // in enough splits to skip the fan, like the benchmark's x4 copy,
+    // and there the join is chosen from the static estimates alone
+    val split = java.nio.file.Files.createTempDirectory("graft_contam8").toString
+    graft.ops.T(spark, SF, "documents").repartition(8)
+      .write.parquet(s"$split/documents.parquet")
+    for (dir <- Seq(SF, split)) {
+      val df = SparkEntry.queries("llm_contamination_check")(spark, dir)
+      df.collect()
+      val executed = df.queryExecution.executedPlan
+      val joins = allNodes(executed).collect { case j: BaseJoinExec => j }
+      assert(joins.length == 1, s"$dir: expected one train x eval join:\n$executed")
+      val j = joins.head
+      j match {
+        case h: HashJoin =>
+          val build = if (h.buildSide == BuildLeft) j.left else j.right
+          // the is_eval branch is the one that names its document eval_doc
+          assert(build.output.exists(_.name == "eval_doc"),
+            s"$dir: join builds on ${h.buildSide}, the train side:\n$executed")
+        case other => fail(s"$dir: not a hash join: ${other.nodeName}\n$executed")
+      }
+      val keyTypes = (j.leftKeys ++ j.rightKeys).map(_.dataType)
+      assert(keyTypes.nonEmpty && keyTypes.forall(_ == LongType),
+        s"$dir: join keys are not all LongType: $keyTypes")
+    }
+  }
+
+  test("llm_dedup_minhash_lsh: the band self-join is a sort-merge join") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    val df = run("llm_dedup_minhash_lsh")
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val bandJoins = allNodes(executed).collect { case j: BaseJoinExec
+      if j.leftKeys.flatMap(_.references.map(_.name)).toSet == Set("band", "bv") => j }
+    assert(bandJoins.length == 1, s"expected one (band, bv) join:\n$executed")
+    assert(bandJoins.head.isInstanceOf[SortMergeJoinExec],
+      s"band join is a ${bandJoins.head.nodeName}:\n$executed")
+  }
+
   test("merge_upsert plans a single full-outer join on the key") {
     val df = run("merge_upsert")
     df.collect()
