@@ -126,32 +126,51 @@ object Api {
   }
 
   /** Exact near-duplicate pairs by k-shingle Jaccard >= num/den.
-    * Candidates come from sharing >= 1 shingle (sound for any threshold
-    * > 0) plus the size-ratio bound; verification is exact integer
-    * Jaccard. At 100 TB swap the candidate stage for MinHash banding
-    * (same verification join). */
+    * A document's shingles are its distinct (g1, g2) fingerprints
+    * ([[shingleFingerprints]]). Candidates are the pairs sharing >= 1
+    * fingerprint (sound for any threshold > 0), found by an equi-join on
+    * the two LongType lanes; [[jaccardPairs]] verifies them with exact
+    * integer Jaccard. Fingerprint sets equal the distinct-shingle sets
+    * unless two distinct shingles collide on BOTH seeded xxhash64 lanes:
+    * for documents of m and n shingles that is one 128-bit collision
+    * among m·n pairs, probability about m·n / 2^128 (below 10^-30 even
+    * at 10^4 shingles per side), so the pairs, `inter` and `uni` are the
+    * string-shingle answer. At 100 TB swap the candidate stage for
+    * MinHash banding (same verification). */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int, num: Int, den: Int): DataFrame = {
     require(k >= 1, s"shingle size must be >= 1, got $k")
     require(num >= 1 && den >= num,
       s"Jaccard threshold num/den must satisfy 0 < num/den <= 1, got $num/$den")
-    val toks = split(col(textCol), " ")
-    // compiled shingling (graft.plans.ShinglesK): same distinct k-gram
-    // set as the array_distinct(transform(…slice+concat_ws)) spelling,
-    // but one codegen'd loop instead of interpreted HOFs (~6× faster —
-    // shingle generation dominated every shingle-dedup query)
-    val sh = T.fan(docs, idCol)
-      .select(col(idCol).as("doc_id"), toks.as("toks"))
-      .where(size(col("toks")) >= k)
-      .select(col("doc_id"),
-        graft.plans.expressions.shinglesK(col("toks"), k).as("shingles"))
-      .withColumn("sz", size(col("shingles")))
-    val e1 = sh.select(col("doc_id").as("d1"), col("sz").as("sz1"), explode(col("shingles")).as("sh"))
-    val e2 = sh.select(col("doc_id").as("d2"), col("sz").as("sz2"), explode(col("shingles")).as("sh2"))
-    e1.join(e2, col("sh") === col("sh2") && col("d1") < col("d2") &&
-        col("sz1") * den >= col("sz2") * num && col("sz2") * den >= col("sz1") * num)
-      .groupBy("d1", "d2", "sz1", "sz2")
+    val fp = shingleFingerprints(T.fan(docs, idCol), idCol, textCol, k)
+    val inter = fp.as("a").join(fp.as("b"), col("a.g1") === col("b.g1") &&
+        col("a.g2") === col("b.g2") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
+    jaccardPairs(inter, fp, num, den)
+  }
+
+  /** `(doc_id, g1, g2)`: one row per distinct k-token shingle
+    * fingerprint of each document (graft.plans.ShingleHashPairs; texts
+    * of fewer than k tokens have none). The explode runs over the kernel
+    * call itself, not over a column holding its result: for an explode
+    * of a column Catalyst infers a `size(col) > 0` filter, and pushdown
+    * copies the kernel into that filter, so it would run twice per
+    * document. */
+  private[graft] def shingleFingerprints(docs: DataFrame, idCol: String,
+      textCol: String, k: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        explode(graft.plans.expressions.shingleHashPairs(col(textCol), k)).as("p"))
+      .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
+
+  /** The `(d1, d2, inter)` shared-fingerprint counts whose Jaccard
+    * inter / uni >= num/den, exact in integers; `uni` adds the two
+    * documents' fingerprint counts in `fp` and subtracts `inter`. Output
+    * `(d1, d2, inter, uni, jaccard)`. */
+  private[graft] def jaccardPairs(inter: DataFrame, fp: DataFrame,
+      num: Int, den: Int): DataFrame = {
+    val sz = fp.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    inter.join(sz.toDF("d1", "sz1"), "d1").join(sz.toDF("d2", "sz2"), "d2")
       .withColumn("uni", col("sz1") + col("sz2") - col("inter"))
       .where(col("inter") * den >= col("uni") * num)
       .select(col("d1"), col("d2"), col("inter"), col("uni"),

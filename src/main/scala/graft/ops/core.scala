@@ -285,7 +285,9 @@ object Params {
   val IntervalUs: Long = 3600L * 1000000L // join_range_interval: 1 hour
   val SessionGapUs: Long = 30L * 60L * 1000000L // stream_session_window
   val HistBucket = 50000.0 // agg_histogram bucket width on o_totalprice
-  val ShingleK = 5 // llm_dedup_near shingle size
+  // shingle size (tokens) of the five k-token shingle keys: llm_dedup_near,
+  // _clusters, _minhash_lsh, _minhash_incremental, llm_contamination_check
+  val ShingleK = 5
   val ChunkLen = 120 // llm_doc_chunk window (chars; fixture docs are ASCII)
   val ChunkStride = 90 // llm_doc_chunk stride (< ChunkLen ⇒ 30-char overlap)
   val JaccardNum = 4 // Jaccard threshold 4/5 = 0.8 as an exact rational

@@ -16,12 +16,16 @@ import Params._
   *  - exact dedup: hash-groupBy on normalized text — one shuffle on the
   *    norm key; at scale group on md5(norm) so the shuffle key is 16
   *    bytes, not the document.
-  *  - near-dup: candidate generation is the scale decision. The scored
-  *    `llm_dedup_near` blocks on shared shingles (zero false negatives →
-  *    oracle-exact); `llm_dedup_minhash_lsh` is the 100-TB path (banded
-  *    signatures bound candidate pairs independent of corpus size) and
-  *    `llm_dedup_simhash` the cheaper bit-sketch variant. The two
-  *    Jaccard keys end in the same exact verification join; SimHash
+  *  - near-dup: candidate generation is the scale decision. Every
+  *    k-token shingle key reads one shingle representation, the in-place
+  *    window kernels of graft.plans: ShingleHashPairs fingerprints for
+  *    joins and counts, MinHashSig for signatures; no shingle string is
+  *    built. The scored `llm_dedup_near` blocks on shared fingerprints
+  *    (zero false negatives → oracle-exact); `llm_dedup_minhash_lsh` is
+  *    the 100-TB path (banded signatures bound candidate pairs
+  *    independent of corpus size) and `llm_dedup_simhash` the cheaper
+  *    bit-sketch variant. The Jaccard keys end in the same exact
+  *    count of shared fingerprints (Api.jaccardPairs); SimHash
   *    needs none — its hamming is exact on the packed fingerprints, and
   *    it enumerates candidates among distinct fingerprints, so its cost
   *    follows fingerprint diversity, not duplicate-cluster size.
@@ -87,19 +91,13 @@ object Llm {
   private def normText(c: Column): Column =
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
-  /** Distinct k-token shingles per doc (docs with < k tokens drop out).
-    * Shingling is the compiled ShinglesK expression — see Api.nearDupPairs. */
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    // fan the single-file scan before the shingle projection — the
-    // per-token work below is what dominates, not the scan (guide §2.5)
+  /** The MinHash keys' documents: those of at least ShingleK tokens,
+    * fanned before the kernels run (guide §2.5). A shorter text has no
+    * shingle, so its signature would be all Long.MaxValue and every such
+    * document would collide in every band. */
+  private def minhashDocs(s: SparkSession, dir: String): DataFrame =
     T.fan(T(s, dir, "documents"), "doc_id")
-      .select(col("doc_id"), toks.as("toks"))
-      .where(size(col("toks")) >= ShingleK)
-      .select(col("doc_id"),
-        graft.plans.expressions.shinglesK(col("toks"), ShingleK).as("shingles"))
-      .withColumn("sz", size(col("shingles")))
-  }
+      .where(size(split(col("text"), " ")) >= ShingleK)
 
   // the LEAD(tok, 1..4) chain below is the k=5 spelling — keep in sync
   require(ShingleK == 5, "sqlShingles hard-codes the k=5 LEAD chain")
@@ -112,6 +110,42 @@ object Llm {
        |        UNNEST(RANGE(0, LEN(STRING_SPLIT(text, ' ')))) AS pos FROM documents)
        | WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
        |WHERE lst IS NOT NULL""".stripMargin
+
+  /** Oracle of the MinHash keys, end to end: md5-prefix base hash → 64
+    * universal-family slot minima (the kernel's own constants,
+    * ShingleUtil.MinhashA/B/P) → 4-slot band keys → candidate
+    * equi-join, narrowed by `candFilter` → exact-Jaccard verify over
+    * string shingles (the dedup_near machinery). */
+  private def sqlMinhash(candFilter: String): String = {
+    import graft.plans.ShingleUtil.{MinhashA, MinhashB, MinhashP}
+    s"""WITH sh AS ($sqlShingles),
+       |hs AS (SELECT doc_id,
+       |        CAST(('0x' || SUBSTR(MD5(sh), 1, 8)) AS BIGINT) AS h FROM sh),
+       |sig AS (SELECT doc_id,
+       | ${(0 until 64).map(i =>
+            s"MIN((${MinhashA(i)} * h + ${MinhashB(i)}) % $MinhashP) AS s$i")
+            .mkString(",\n ")}
+       | FROM hs GROUP BY doc_id),
+       |bands AS (
+       | ${(0 until 16).map(b =>
+            s"SELECT doc_id, $b AS band, CAST(('0x' || SUBSTR(MD5(CONCAT_WS(','," +
+              s" s${4 * b}, s${4 * b + 1}, s${4 * b + 2}, s${4 * b + 3})), 1, 15))" +
+              " AS BIGINT) AS bv FROM sig").mkString("\n UNION ALL\n ")}),
+       |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
+       |         FROM bands x JOIN bands y
+       |          ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id$candFilter),
+       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+       |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
+       |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+       |          GROUP BY 1, 2)
+       |SELECT c.d1, c.d2, ${sqlRound("i / (sa.sz + sb.sz - i)", 6)} AS jaccard
+       |FROM cand c
+       | JOIN inter t ON t.d1 = c.d1 AND t.d2 = c.d2
+       | JOIN sizes sa ON sa.doc_id = c.d1
+       | JOIN sizes sb ON sb.doc_id = c.d2
+       |WHERE $JaccardDen * i >= $JaccardNum * (sa.sz + sb.sz - i)
+       |ORDER BY c.d1, c.d2""".stripMargin
+  }
 
   // ---- dedup family ------------------------------------------------------
 
@@ -136,49 +170,10 @@ object Llm {
     * same exact verification. Since round 5 the shingle base hash is the
     * md5-prefix (cross-engine-spellable), so signatures, band keys, and
     * therefore the full candidate set are oracle-exact in DuckDB. */
-  // MinHash slot hashes: a mod-space universal family (aₖ·h + bₖ) mod P
-  // over a 32-bit md5-derived base hash. Every product stays < 2^62 (no
-  // wraparound → ANSI-safe in Spark AND reproducible in DuckDB, where
-  // BIGINT overflow throws rather than wraps — the reason the previous
-  // xxhash64 spelling could never be oracled). Constants are generated
-  // once here and embedded as literals in BOTH the Spark plan and the
-  // oracle SQL, so the two hash families cannot drift.
-  private val MinhashP = 4294967311L // smallest prime > 2^32
-  private val MinhashA: Seq[Long] =
-    (0 until 64).map(k => ((2654435761L * (k + 1)) % (1L << 30)) | 1L)
-  private val MinhashB: Seq[Long] =
-    (0 until 64).map(k => (15485863L * (k + 1)) % MinhashP)
-
-  /** (doc_id, band, bv) banded MinHash rows of a shingled frame —
-    * shared by the one-shot LSH key and the incremental-index key. */
-  private def bandedOf(sh: DataFrame): DataFrame = {
-    // hash each shingle string ONCE (md5-prefix → 32-bit int, the
-    // cross-engine-stable discipline); the 64 signature slots re-hash
-    // that value with the universal family above, min-aggregated
-    // map-side — the shape that scales to 100 TB.
-    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shg"))
-      .select(col("doc_id"),
-        shiftrightunsigned(
-          graft.plans.expressions.md5Prefix64(col("shg")), 32).as("h"))
-    val sigCols = (0 until 64).map(i =>
-      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % lit(MinhashP)).as(s"s$i"))
-    val sigs = ex.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-    // band key = md5-prefix of the 4 member slot values, folded to a
-    // 60-bit LONG (15 hex chars < 2^60): an 8-byte join key instead of a
-    // ~44-char string (measured ~1 s cheaper on the self-join at sf0.1),
-    // still oracle-exact because DuckDB renders the same digits and
-    // hashes the same bytes
-    sigs
-      .withColumn("bvs", array((0 until 16).map(b =>
-        shiftrightunsigned(graft.plans.expressions.md5Prefix64(concat_ws(",",
-          col(s"s${4 * b}"), col(s"s${4 * b + 1}"),
-          col(s"s${4 * b + 2}"), col(s"s${4 * b + 3}"))), 4)): _*))
-      .select(col("doc_id"), posexplode(col("bvs")).as(Seq("band", "bv")))
-  }
-
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingled(s, dir)
-    val banded = bandedOf(sh)
+    val docs = minhashDocs(s, dir)
+    val banded = bandedOf(docs.select(col("doc_id"),
+      graft.plans.expressions.minHashSig(col("text"), ShingleK).as("sig")))
     // sort-merge, pinned: the exploded band table is 16 rows per
     // document, but Catalyst sizes it like its input and would broadcast
     // it (a 48 MiB relation at x4); the merge join is also the plan that
@@ -188,13 +183,38 @@ object Llm {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
-    val a = sh.select(col("doc_id").as("d1"), col("shingles").as("sha"))
-    val b = sh.select(col("doc_id").as("d2"), col("shingles").as("shb"))
-    cand.join(a, "d1").join(b, "d2")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
-      .where(col("inter") * JaccardDen >= col("uni") * JaccardNum)
-      .select(col("d1"), col("d2"), dround(col("inter") / col("uni"), 6).as("jaccard"))
+    verifyCandidates(cand,
+      Api.shingleFingerprints(docs, "doc_id", "text", ShingleK))
+  }
+
+  /** (doc_id, band, bv) banded MinHash rows of a `(doc_id, sig)` frame
+    * (graft.plans.MinHashSig) — shared by the one-shot LSH key and the
+    * incremental-index key. Band key = md5-prefix of the 4 member slot
+    * values, folded to a 60-bit LONG (15 hex chars < 2^60): an 8-byte
+    * join key instead of a ~44-char string, still oracle-exact because
+    * DuckDB renders the same digits and hashes the same bytes. The bands
+    * are exploded from the array expression itself: an explode of a
+    * column holding them would get an inferred `size(...) > 0` filter,
+    * which pushdown rewrites into 64 signature calls in the scan. */
+  private def bandedOf(sigs: DataFrame): DataFrame = {
+    def slot(i: Int) = col("sig").getItem(i)
+    sigs.select(col("doc_id"), posexplode(array((0 until 16).map(b =>
+        shiftrightunsigned(graft.plans.expressions.md5Prefix64(concat_ws(",",
+          slot(4 * b), slot(4 * b + 1), slot(4 * b + 2), slot(4 * b + 3))), 4)): _*))
+      .as(Seq("band", "bv")))
+  }
+
+  /** Exact-Jaccard verification of MinHash candidate pairs (d1 < d2)
+    * over the `(doc_id, g1, g2)` shingle fingerprints: shared
+    * fingerprints are counted by equi-joining the candidates to d1's
+    * fingerprints on d1, then to d2's on (d2, g1, g2) — LongType keys
+    * only — and [[Api.jaccardPairs]] keeps the pairs at Jaccard >= 4/5. */
+  private def verifyCandidates(cand: DataFrame, fp: DataFrame): DataFrame = {
+    val inter = cand.join(fp.withColumnRenamed("doc_id", "d1"), "d1")
+      .join(fp.withColumnRenamed("doc_id", "d2"), Seq("d2", "g1", "g2"))
+      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
+    Api.jaccardPairs(inter, fp, JaccardNum, JaccardDen)
+      .select(col("d1"), col("d2"), dround(col("jaccard"), 6).as("jaccard"))
       .orderBy("d1", "d2")
   }
 
@@ -213,13 +233,17 @@ object Llm {
     * candidates — never O(corpus); old×old pairs were settled when
     * those docs entered. Oracle: the full key's band/verify SQL with
     * the candidate set restricted to pairs touching the batch —
-    * hash-exact because signatures, band keys and the verify are the
-    * same md5-prefix spelling. */
+    * hash-exact because signatures and band keys are the same
+    * md5-prefix spelling and the verify counts the same distinct
+    * shingles. */
   private def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
     Graftcat.fresh(s, "lsh_index")
     s.sql("""CREATE TABLE graftcat.lake.lsh_index
             |(doc_id BIGINT, band INT, bv BIGINT)""".stripMargin)
-    val sh = shingled(s, dir).localCheckpoint()
+    val sh = minhashDocs(s, dir).select(col("doc_id"),
+        graft.plans.expressions.shingleHashPairs(col("text"), ShingleK).as("fps"),
+        graft.plans.expressions.minHashSig(col("text"), ShingleK).as("sig"))
+      .localCheckpoint()
     val banded = bandedOf(sh)
     // existing corpus: doc_id % 3 != 0 — its bands ARE the index
     banded.where(col("doc_id") % 3 =!= 0)
@@ -241,15 +265,11 @@ object Llm {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
     val cand = candIdx.unionByName(candSelf).distinct()
-    val a = sh.select(col("doc_id").as("d1"), col("shingles").as("sha"))
-    val b = sh.select(col("doc_id").as("d2"), col("shingles").as("shb"))
-    val pairs = cand.join(a, "d1").join(b, "d2")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("uni", size(col("sha")) + size(col("shb")) - col("inter"))
-      .where(col("inter") * JaccardDen >= col("uni") * JaccardNum)
-      .select(col("d1"), col("d2"),
-        dround(col("inter") / col("uni"), 6).as("jaccard"))
-      .orderBy("d1", "d2")
+    // the checkpointed fingerprint arrays explode as a column: the
+    // inferred size(fps) > 0 filter reads the checkpoint, not a kernel
+    val fp = sh.select(col("doc_id"), explode(col("fps")).as("p"))
+      .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
+    val pairs = verifyCandidates(cand, fp)
       .localCheckpoint() // settle the result BEFORE the index mutates
     // index maintenance: the batch's bands land as ONE commit
     batch.createOrReplaceTempView("graft_lshinc_batch")
@@ -1542,69 +1562,12 @@ object Llm {
          |   AS hamming
          | FROM cand c JOIN fp a ON a.doc_id = c.d1 JOIN fp b ON b.doc_id = c.d2)
          |WHERE hamming <= 3 ORDER BY d1, d2""".stripMargin,
-    // mirrors the op end-to-end: md5-prefix base hash → 64 universal-family
-    // slot minima (same literal constants) → 4-slot band keys → candidate
-    // equi-join → exact-Jaccard verify (the dedup_near machinery)
-    "llm_dedup_minhash_lsh" ->
-      s"""WITH sh AS ($sqlShingles),
-         |hs AS (SELECT doc_id,
-         |        CAST(('0x' || SUBSTR(MD5(sh), 1, 8)) AS BIGINT) AS h FROM sh),
-         |sig AS (SELECT doc_id,
-         | ${(0 until 64).map(i =>
-              s"MIN((${MinhashA(i)} * h + ${MinhashB(i)}) % $MinhashP) AS s$i")
-              .mkString(",\n ")}
-         | FROM hs GROUP BY doc_id),
-         |bands AS (
-         | ${(0 until 16).map(b =>
-              s"SELECT doc_id, $b AS band, CAST(('0x' || SUBSTR(MD5(CONCAT_WS(','," +
-                s" s${4 * b}, s${4 * b + 1}, s${4 * b + 2}, s${4 * b + 3})), 1, 15))" +
-                " AS BIGINT) AS bv FROM sig").mkString("\n UNION ALL\n ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-         |         FROM bands x JOIN bands y
-         |          ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-         |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-         |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT c.d1, c.d2, ${sqlRound("i / (sa.sz + sb.sz - i)", 6)} AS jaccard
-         |FROM cand c
-         | JOIN inter t ON t.d1 = c.d1 AND t.d2 = c.d2
-         | JOIN sizes sa ON sa.doc_id = c.d1
-         | JOIN sizes sb ON sb.doc_id = c.d2
-         |WHERE $JaccardDen * i >= $JaccardNum * (sa.sz + sb.sz - i)
-         |ORDER BY c.d1, c.d2""".stripMargin,
-    // the full key's band/verify SQL with the candidate set restricted
-    // to pairs TOUCHING the batch (doc_id % 3 = 0) — exactly what the
-    // incremental probe (batch×index ∪ batch×batch) generates
+    "llm_dedup_minhash_lsh" -> sqlMinhash(""),
+    // the full key's SQL with the candidate set restricted to pairs
+    // TOUCHING the batch (doc_id % 3 = 0) — exactly what the incremental
+    // probe (batch×index ∪ batch×batch) generates
     "llm_dedup_minhash_incremental" ->
-      s"""WITH sh AS ($sqlShingles),
-         |hs AS (SELECT doc_id,
-         |        CAST(('0x' || SUBSTR(MD5(sh), 1, 8)) AS BIGINT) AS h FROM sh),
-         |sig AS (SELECT doc_id,
-         | ${(0 until 64).map(i =>
-              s"MIN((${MinhashA(i)} * h + ${MinhashB(i)}) % $MinhashP) AS s$i")
-              .mkString(",\n ")}
-         | FROM hs GROUP BY doc_id),
-         |bands AS (
-         | ${(0 until 16).map(b =>
-              s"SELECT doc_id, $b AS band, CAST(('0x' || SUBSTR(MD5(CONCAT_WS(','," +
-                s" s${4 * b}, s${4 * b + 1}, s${4 * b + 2}, s${4 * b + 3})), 1, 15))" +
-                " AS BIGINT) AS bv FROM sig").mkString("\n UNION ALL\n ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-         |         FROM bands x JOIN bands y
-         |          ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id
-         |         WHERE x.doc_id % 3 = 0 OR y.doc_id % 3 = 0),
-         |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS i
-         |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT c.d1, c.d2, ${sqlRound("i / (sa.sz + sb.sz - i)", 6)} AS jaccard
-         |FROM cand c
-         | JOIN inter t ON t.d1 = c.d1 AND t.d2 = c.d2
-         | JOIN sizes sa ON sa.doc_id = c.d1
-         | JOIN sizes sb ON sb.doc_id = c.d2
-         |WHERE $JaccardDen * i >= $JaccardNum * (sa.sz + sb.sz - i)
-         |ORDER BY c.d1, c.d2""".stripMargin,
+      sqlMinhash("\n         WHERE x.doc_id % 3 = 0 OR y.doc_id % 3 = 0"),
     "llm_dedup_embed" ->
       s"""WITH n AS (SELECT vec_id, embedding, ${sqlNorm2("embedding")} AS n2 FROM embeddings)
          |SELECT v1, v2, ${sqlRound("cos", 6)} AS cos_sim FROM (

@@ -97,42 +97,6 @@ case class DotProductD(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Compiled k-token shingling: the `array_distinct(transform(sequence…,
-  * slice+concat_ws))` spelling evaluates four nested higher-order
-  * functions INTERPRETED per token (measured ~0.6 ms/doc — 3 s per pass
-  * over 5 000 docs at sf0.1, the dominant cost of every shingle-based
-  * dedup query). This expression does the same work — distinct k-grams
-  * joined by single spaces, first-occurrence order — as one compiled
-  * loop via a static helper call, keeping the surrounding projection
-  * inside whole-stage codegen.
-  */
-case class ShinglesK(child: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  require(k >= 1, "shingle size must be positive")
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-
-  override protected def nullSafeEval(in: Any): Any =
-    ShingleUtil.shingles(in.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.shingles($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShinglesK =
-    copy(child = newChild)
-}
-
-/** Compiled membership count: how many elements of an array<string> are
-  * in a small fixed vocabulary. Replaces the `size(filter(toks,
-  * t.isin(words)))` spelling, whose lambda Spark evaluates INTERPRETED
-  * per token (ArrayFilter breaks whole-stage codegen for the entire
-  * projection it sits in — the same lesson as ShinglesK). One hash-set
-  * probe per token inside codegen; the set is built once per executor.
-  * Null elements count 0, matching filter+isin (null predicate → drop).
-  */
 /** Compiled md5-prefix 64-bit hash of a string: the big-endian first 8
   * digest bytes, ≡ DuckDB `('0x' || SUBSTR(MD5(s), 1, 16))::UBIGINT` bit
   * for bit, and ≡ the relational `conv(substring(md5(s), 1, k), 16, 10)`
@@ -159,6 +123,14 @@ case class Md5Prefix64(child: Expression)
     copy(child = newChild)
 }
 
+/** Compiled membership count: how many elements of an array<string> are
+  * in a small fixed vocabulary. Replaces the `size(filter(toks,
+  * t.isin(words)))` spelling, whose lambda Spark evaluates INTERPRETED
+  * per token (ArrayFilter breaks whole-stage codegen for the entire
+  * projection it sits in). One hash-set probe per token inside codegen;
+  * the set is built once per executor.
+  * Null elements count 0, matching filter+isin (null predicate → drop).
+  */
 case class CountInSet(child: Expression, words: Seq[String])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with ExpectsInputTypes {
@@ -183,8 +155,6 @@ case class CountInSet(child: Expression, words: Seq[String])
 }
 
 object ShingleUtil {
-  private val Sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-
   def toUtf8Set(words: Array[String]): java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
     val s = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](words.length * 2)
     words.foreach(w => s.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
@@ -203,23 +173,6 @@ object ShingleUtil {
       i += 1
     }
     c
-  }
-
-  /** Distinct k-grams of `toks` in first-occurrence order. */
-  def shingles(toks: ArrayData, k: Int): ArrayData = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val n = toks.numElements()
-    val out = new java.util.LinkedHashSet[UTF8String]()
-    val parts = new Array[UTF8String](k)
-    var i = 0
-    while (i + k <= n) {
-      var j = 0
-      while (j < k) { parts(j) = toks.getUTF8String(i + j); j += 1 }
-      out.add(UTF8String.concatWs(Sep, parts: _*))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.toArray.asInstanceOf[Array[Any]])
   }
 
   /** Majority-vote SimHash of the token array (callers pass the DISTINCT
@@ -301,11 +254,22 @@ object ShingleUtil {
 
   /** Stride-1 k-TOKEN shingle fingerprints of `s` (window rule on
     * [[ShingleHashPairs]]), deduplicated per call in first-occurrence
-    * order. n spaces make n+1 tokens, empty ones included; a space byte
-    * never occurs inside a multi-byte UTF-8 sequence, so cutting at
-    * bytes equals cutting at chars. Fewer than k tokens yield no
-    * shingle. */
+    * order. Fewer than k tokens yield no shingle. */
   def shingleHashPairs(s: org.apache.spark.unsafe.types.UTF8String, k: Int): ArrayData = {
+    val starts = tokenStarts(s)
+    windowHashPairs(s, starts, starts.length - k, k, 1)
+  }
+
+  /** The one window rule of every k-token shingle kernel: `s` is cut at
+    * single-space bytes, so n spaces make n+1 tokens, empty ones
+    * included (a space byte never occurs inside a multi-byte UTF-8
+    * sequence, so cutting at bytes equals cutting at chars).
+    * starts(t) = first byte of token t; the last entry is numBytes + 1,
+    * one past a virtual trailing space, so token t ends at
+    * starts(t+1) - 1 and shingle i is the bytes
+    * [starts(i), starts(i+k) - 1). A text of T tokens has T - k + 1
+    * = starts.length - k shingles. */
+  private def tokenStarts(s: org.apache.spark.unsafe.types.UTF8String): Array[Int] = {
     import org.apache.spark.unsafe.Platform
     val nBytes = s.numBytes()
     val base = s.getBaseObject
@@ -313,8 +277,6 @@ object ShingleUtil {
     var nTok = 1
     var b = 0
     while (b < nBytes) { if (Platform.getByte(base, off + b) == ' ') nTok += 1; b += 1 }
-    // starts(t) = first byte of token t; starts(nTok) = nBytes + 1, one
-    // past a virtual trailing space, so token t ends at starts(t+1) - 1
     val starts = new Array[Int](nTok + 1)
     var t = 1
     b = 0
@@ -323,7 +285,50 @@ object ShingleUtil {
       b += 1
     }
     starts(nTok) = nBytes + 1
-    windowHashPairs(s, starts, nTok - k + 1, k, 1)
+    starts
+  }
+
+  /** MinHash slot family: slot i hashes a 32-bit base value h to
+    * (MinhashA(i) · h + MinhashB(i)) mod MinhashP. Every product stays
+    * below 2^62 (no wraparound, so ANSI-safe in Spark and reproducible in
+    * DuckDB, where BIGINT overflow throws rather than wraps). The kernel
+    * below and the generated oracle SQL both read these constants, so
+    * the two hash families cannot drift. */
+  private[graft] val MinhashP = 4294967311L // smallest prime > 2^32
+  private[graft] val MinhashA: Array[Long] =
+    Array.tabulate(64)(k => ((2654435761L * (k + 1)) % (1L << 30)) | 1L)
+  private[graft] val MinhashB: Array[Long] =
+    Array.tabulate(64)(k => (15485863L * (k + 1)) % MinhashP)
+
+  /** 64-slot MinHash signature over the k-token shingles of `s`
+    * ([[tokenStarts]] windows, hashed in place): the base hash h of a
+    * shingle is the first 4 md5 digest bytes of its bytes as an unsigned
+    * big-endian value (= md5Hash64 >>> 32), and slot i is the minimum of
+    * the slot family over all shingles. A repeated shingle changes no
+    * minimum, so no dedup is needed. Fewer than k tokens leave every slot
+    * at Long.MaxValue. */
+  def minHashSig(s: org.apache.spark.unsafe.types.UTF8String, k: Int): ArrayData = {
+    val starts = tokenStarts(s)
+    val bytes = s.getBytes
+    val md = md5Local.get()
+    md.reset()
+    val d = new Array[Byte](16)
+    val sig = Array.fill(64)(Long.MaxValue)
+    var i = 0
+    while (i < starts.length - k) {
+      md.update(bytes, starts(i), starts(i + k) - 1 - starts(i))
+      md.digest(d, 0, 16)
+      val h = (((d(0) & 0xff) << 24) | ((d(1) & 0xff) << 16) |
+        ((d(2) & 0xff) << 8) | (d(3) & 0xff)) & 0xffffffffL
+      var j = 0
+      while (j < 64) {
+        val v = (MinhashA(j) * h + MinhashB(j)) % MinhashP
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   /** The `n` windows [at(i), at(i+k) - trim) of `s`'s bytes, each hashed
@@ -460,15 +465,17 @@ case class GramHashPairs(child: Expression, k: Int)
 }
 
 /** Compiled stride-1 k-TOKEN shingle fingerprinting with per-document
-  * dedup ([[ShingleUtil.shingleHashPairs]]): the fingerprint twin of
-  * `shinglesK(split(text, " "), k)` followed by the two xxhash64 lanes.
-  * Window rule: the text is cut at single-space bytes exactly as
-  * `split(text, " ")` cuts it (empty tokens included), and shingle i is
-  * the byte range from the start of token i to the end of token i+k-1,
-  * so each window's bytes are the `concat_ws(" ", …)` shingle string's
-  * bytes and the pair is bit-identical to `xxhash64(sh)` /
-  * `xxhash64(lit(0x9747b28cL), sh)` (pinned in LlmOpsSuite). No token
-  * array and no shingle string is built; windows hash in place over the
+  * dedup ([[ShingleUtil.shingleHashPairs]]), the shingle representation
+  * of every k-token dedup key: near-dup, MinHash verification and
+  * decontamination. Window rule ([[ShingleUtil]]`.tokenStarts`): the text
+  * is cut at single-space bytes exactly as `split(text, " ")` cuts it
+  * (empty tokens included), and shingle i is the byte range from the
+  * start of token i to the end of token i+k-1, so each window's bytes
+  * are the bytes of the string shingle
+  * `concat_ws(" ", slice(split(text, " "), i+1, k))` and the pair is
+  * bit-identical to `xxhash64(sh)` / `xxhash64(lit(0x9747b28cL), sh)`
+  * (pinned in LlmOpsSuite against that string spelling). No token array
+  * and no shingle string is built; windows hash in place over the
   * text's bytes. Dedup is on the (g1, g2) pair, so the per-document set
   * equals the distinct-shingle set unless two distinct shingles collide
   * on BOTH seeded lanes — the 128-bit collision argument documented on
@@ -494,6 +501,35 @@ case class ShingleHashPairs(child: Expression, k: Int)
     defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.shingleHashPairs($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashPairs =
+    copy(child = newChild)
+}
+
+/** Compiled 64-slot MinHash signature over the k-token shingles of a
+  * text ([[ShingleUtil.minHashSig]]): the same windows as
+  * [[ShingleHashPairs]], each md5-hashed in place to a 32-bit base value,
+  * then min-reduced through the 64-slot family `ShingleUtil.MinhashA/B/P`
+  * in one pass per document. It replaces the relational spelling (explode
+  * shingle strings, md5-prefix >>> 32, group by document for 64 `min`
+  * aggregates), which it equals slot for slot (pinned in LlmOpsSuite).
+  * Output is array<bigint> of 64 slots, all Long.MaxValue for a text of
+  * fewer than k tokens; callers drop those documents first.
+  */
+case class MinHashSig(child: Expression, k: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+
+  require(k >= 1, "shingle size must be positive")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash_sig"
+
+  override protected def nullSafeEval(in: Any): Any =
+    ShingleUtil.minHashSig(in.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.ShingleUtil.minHashSig($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
 
@@ -554,10 +590,6 @@ object expressions {
 
   def norm2D(a: Column): Column = dotD(a, a)
 
-  /** Column-level API for [[ShinglesK]]. */
-  def shinglesK(toks: Column, k: Int): Column =
-    Shim.column(ShinglesK(Shim.expression(toks), k))
-
   /** Column-level API for [[GramHashPairs]]. */
   def gramHashPairs(text: Column, k: Int): Column =
     Shim.column(GramHashPairs(Shim.expression(text), k))
@@ -565,6 +597,10 @@ object expressions {
   /** Column-level API for [[ShingleHashPairs]]. */
   def shingleHashPairs(text: Column, k: Int): Column =
     Shim.column(ShingleHashPairs(Shim.expression(text), k))
+
+  /** Column-level API for [[MinHashSig]]. */
+  def minHashSig(text: Column, k: Int): Column =
+    Shim.column(MinHashSig(Shim.expression(text), k))
 
   /** Column-level API for [[SimHashChunks]]. */
   def simhashChunks(toks: Column): Column =

@@ -125,25 +125,6 @@ class LlmOpsSuite extends SparkSuiteBase {
       "second run diverged — planes/codes not deterministic")
   }
 
-  test("compiled ShinglesK equals the interpreted HOF spelling and codegens") {
-    val toks = split(col("text"), " ")
-    val df = T(spark, SF, "documents")
-      .where(size(toks) >= 5)
-      .select(
-        graft.plans.expressions.shinglesK(toks, 5).as("fast"),
-        array_distinct(transform(
-          sequence(lit(1), size(toks) - 4),
-          i => concat_ws(" ", slice(toks, i, lit(5))))).as("slow"))
-    df.collect().foreach { r =>
-      assert(r.getSeq[String](0) == r.getSeq[String](1))
-    }
-    val fastOnly = T(spark, SF, "documents")
-      .select(graft.plans.expressions.shinglesK(toks, 5).as("s"))
-    fastOnly.collect()
-    assert(fastOnly.queryExecution.executedPlan.toString.contains("*("),
-      "ShinglesK fell out of whole-stage codegen")
-  }
-
   test("compiled GramHashPairs equals the transform+xxhash64+distinct spelling") {
     val L = 7
     // fixture docs + hand-built edge cases: multibyte chars (2/3/4-byte
@@ -178,7 +159,7 @@ class LlmOpsSuite extends SparkSuiteBase {
       "GramHashPairs fell out of whole-stage codegen")
   }
 
-  test("compiled ShingleHashPairs equals xxhash64 over ShinglesK's strings") {
+  test("compiled ShingleHashPairs equals xxhash64 over the HOF string shingles") {
     // fixture docs + hand-built edge cases: leading, trailing and doubled
     // spaces (empty tokens), fewer than k and exactly k tokens, repeated
     // shingles (dedup), 2/3/4-byte UTF-8 tokens, blank and empty text
@@ -197,9 +178,8 @@ class LlmOpsSuite extends SparkSuiteBase {
     val docs = T(spark, SF, "documents").select(col("doc_id"), col("text"))
       .unionByName(edge.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     for (k <- Seq(1, 2, 5)) {
-      val slow = docs
-        .select(col("doc_id"),
-          explode(graft.plans.expressions.shinglesK(split(col("text"), " "), k)).as("sh"))
+      val slow = docs.where(size(split(col("text"), " ")) >= k)
+        .select(col("doc_id"), explode(hofShingles(col("text"), k)).as("sh"))
         .select(col("doc_id"), xxhash64(col("sh")).as("g1"),
           xxhash64(lit(0x9747b28cL), col("sh")).as("g2"))
       val fast = docs
@@ -208,7 +188,7 @@ class LlmOpsSuite extends SparkSuiteBase {
         .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
       // same SET of (doc, g1, g2) AND same per-doc counts (dedup exactness)
       assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,
-        s"ShingleHashPairs diverged from xxhash64 over ShinglesK at k=$k")
+        s"ShingleHashPairs diverged from xxhash64 over the string shingles at k=$k")
       // stays inside whole-stage codegen
       fast.collect()
       assert(fast.queryExecution.executedPlan.toString.contains("*("),
@@ -230,8 +210,8 @@ class LlmOpsSuite extends SparkSuiteBase {
     // reference: the string-shingle spelling the key used before its
     // join moved onto shingle fingerprints
     val sh = T(spark, SF, "documents")
-      .select(col("doc_id"),
-        graft.plans.expressions.shinglesK(split(col("text"), " "), 5).as("shingles"))
+      .where(size(split(col("text"), " ")) >= 5)
+      .select(col("doc_id"), hofShingles(col("text"), 5).as("shingles"))
       .withColumn("is_eval",
         substring(md5(col("doc_id").cast("string").cast("binary")), 1, 4) < "1000")
     val ev = sh.where(col("is_eval"))
@@ -247,6 +227,46 @@ class LlmOpsSuite extends SparkSuiteBase {
     val got = run("llm_contamination_check").collect().toSeq
     assert(want.nonEmpty, "no contaminated eval document — test vacuous")
     assert(got == want)
+  }
+
+  test("compiled MinHashSig equals the relational md5-prefix signature") {
+    import spark.implicits._
+    import graft.plans.ShingleUtil.{MinhashA, MinhashB, MinhashP}
+    import graft.plans.expressions.{md5Prefix64, minHashSig}
+    // fixture docs + unicode, repeated shingles, exactly k tokens and
+    // empty tokens from doubled spaces
+    val edge = Seq(
+      "café brûlé crème déjà vu encore café brûlé",
+      "中文 处理 测试 中文 处理 测试 中文 处理",
+      "😀 emoji 😀 tokens 𝄞 and 😀 more 𝄞",
+      "x y x y x y x y x y x y x y",
+      "exactly five tokens right here",
+      " leading  doubled and trailing spaces ")
+      .toDF("text").withColumn("doc_id", monotonically_increasing_id() + 1000000L)
+    val docs = T(spark, SF, "documents").select(col("doc_id"), col("text"))
+      .unionByName(edge)
+    for (k <- Seq(2, 5)) {
+      val long = docs.where(size(split(col("text"), " ")) >= k)
+      // the relational signature the MinHash keys computed before the
+      // kernel: explode the string shingles, 32-bit md5-prefix base
+      // hash, 64 slot minima per document
+      val h = long.select(col("doc_id"), explode(hofShingles(col("text"), k)).as("sh"))
+        .select(col("doc_id"), shiftrightunsigned(md5Prefix64(col("sh")), 32).as("h"))
+      val want = h.groupBy("doc_id").agg(array((0 until 64).map(i =>
+        min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % lit(MinhashP))): _*).as("sig"))
+      val got = long.select(col("doc_id"), minHashSig(col("text"), k).as("sig"))
+      assert(want.count() == long.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"MinHashSig diverged from the relational signature at k=$k")
+      got.collect()
+      assert(got.queryExecution.executedPlan.toString.contains("*("),
+        "MinHashSig fell out of whole-stage codegen")
+    }
+    // fewer than k tokens: every slot stays at Long.MaxValue; null: null
+    val short = Seq(Some("four tokens only here"), Some(""), None).toDF("text")
+      .select(minHashSig(col("text"), 5)).collect().map(r => Option(r.getSeq[Long](0)))
+    assert(short.toSeq == Seq(Some(Seq.fill(64)(Long.MaxValue)),
+      Some(Seq.fill(64)(Long.MaxValue)), None))
   }
 
   test("compiled CountInSet equals the interpreted filter+isin spelling and codegens") {

@@ -523,6 +523,63 @@ class PlanSuite extends SparkSuiteBase {
       s"band join is a ${bandJoins.head.nodeName}:\n$executed")
   }
 
+  /** Nodes of `key`'s executed plan, each once: unlike [[allNodes]], a
+    * reused exchange stays a leaf, so a subtree computed once is
+    * counted once. */
+  private def executedOnce(key: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(pl: SparkPlan): Seq[SparkPlan] = pl.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => q +: nodes(q.plan)
+      case p                        => Seq(p)
+    }.flatten
+    val df = run(key)
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  private val shingleKernel: PartialFunction[
+      org.apache.spark.sql.catalyst.expressions.Expression, String] = {
+    case e: graft.plans.ShingleHashPairs => e.prettyName
+    case e: graft.plans.MinHashSig       => e.prettyName
+  }
+
+  test("llm_dedup_minhash_lsh computes graft_minhash_sig exactly once") {
+    val calls = executedOnce("llm_dedup_minhash_lsh")
+      .flatMap(_.expressions.flatMap(_.collect(shingleKernel)))
+    assert(calls.count(_ == "graft_minhash_sig") == 1, s"signature calls: $calls")
+  }
+
+  test("shingle keys: no kernel inside a Filter, no ArrayIntersect") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.execution.FilterExec
+    for (key <- Seq("llm_dedup_near", "llm_dedup_minhash_lsh", "llm_contamination_check")) {
+      val nodes = executedOnce(key)
+      val filtered = nodes.collect { case f: FilterExec => f.condition.collect(shingleKernel) }
+        .flatten
+      assert(filtered.isEmpty, s"$key: kernel inside a Filter: $filtered")
+      assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayIntersect]))),
+        s"$key: array_intersect is back")
+    }
+  }
+
+  test("llm_dedup_near and the MinHash verify join on LongType keys only") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.LongType
+    for (key <- Seq("llm_dedup_near", "llm_dedup_minhash_lsh")) {
+      // the MinHash band self-join keys on (band: int, bv) by design
+      val joins = executedOnce(key).collect { case j: BaseJoinExec
+        if !j.leftKeys.flatMap(_.references.map(_.name)).contains("band") => j }
+      assert(joins.nonEmpty, s"$key: no join")
+      joins.foreach { j =>
+        val types = (j.leftKeys ++ j.rightKeys).map(_.dataType)
+        assert(types.nonEmpty && types.forall(_ == LongType),
+          s"$key: ${j.nodeName} keys are $types")
+      }
+    }
+  }
+
   test("merge_upsert plans a single full-outer join on the key") {
     val df = run("merge_upsert")
     df.collect()

@@ -152,20 +152,20 @@ class PropertySuite extends SparkSuiteBase {
   private val unicodeWordGen = Gen.oneOf(
     "the", "café", "naïve", "日本", "🎄", "x", "Straße", "ёж", "the")
 
-  test("ShinglesK equals the HOF spelling on arbitrary unicode token lists") {
+  test("ShingleHashPairs equals xxhash64 over HOF shingles on arbitrary unicode tokens") {
     for (tokLists <- samples(Gen.listOfN(40,
         Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, unicodeWordGen))), 4)) {
       import spark.implicits._
-      val df = tokLists.map(_.mkString(" ")).toDF("text")
-      val toks = split(col("text"), " ")
-      val both = df.where(size(toks) >= 3).select(
-        graft.plans.expressions.shinglesK(toks, 3).as("fast"),
-        array_distinct(transform(
-          sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i, lit(3))))).as("slow"))
-      both.collect().foreach { r =>
-        assert(r.getSeq[String](0) == r.getSeq[String](1))
-      }
+      val df = tokLists.zipWithIndex
+        .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }.toDF("id", "text")
+      val fast = df.select(col("id"),
+          explode(graft.plans.expressions.shingleHashPairs(col("text"), 3)).as("p"))
+        .select(col("id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
+      val slow = df.where(size(split(col("text"), " ")) >= 3)
+        .select(col("id"), explode(hofShingles(col("text"), 3)).as("sh"))
+        .select(col("id"), xxhash64(col("sh")).as("g1"),
+          xxhash64(lit(0x9747b28cL), col("sh")).as("g2"))
+      assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
     }
   }
 

@@ -30,7 +30,7 @@ ROWS = 4
 
 
 def hash_consts():
-    # mirrors graft.ops.Llm's MinhashA/MinhashB generator exactly:
+    # mirrors graft.plans.ShingleUtil's MinhashA/MinhashB generator exactly:
     #   a_i = ((2654435761 * (i+1)) % 2^30) | 1, b_i = (15485863 * (i+1)) % P
     for i in range(N_HASH):
         yield (((2654435761 * (i + 1)) % (1 << 30)) | 1,
