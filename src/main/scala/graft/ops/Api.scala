@@ -143,10 +143,16 @@ object Api {
     require(num >= 1 && den >= num,
       s"Jaccard threshold num/den must satisfy 0 < num/den <= 1, got $num/$den")
     val fp = shingleFingerprints(T.fan(docs, idCol), idCol, textCol, k)
+    // the fan's doc_id partitioning satisfies the pair aggregate, so it
+    // shares the fingerprint explode's stage; an explicit repartition
+    // (never coalesced by AQE) ends that stage, or a downstream range
+    // sort's sampling job would re-run the explode and the probe
     val inter = fp.as("a").join(fp.as("b"), col("a.g1") === col("b.g1") &&
         col("a.g2") === col("b.g2") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+        col("d1"), col("d2"))
     jaccardPairs(inter, fp, num, den)
   }
 

@@ -29,6 +29,15 @@ import Params._
   *    needs none — its hamming is exact on the packed fingerprints, and
   *    it enumerates candidates among distinct fingerprints, so its cost
   *    follows fingerprint diversity, not duplicate-cluster size.
+  *  - banded LSH: the five LSH keys keep only their coding and verify
+  *    steps. MinHash bands come from `bandedOf`, hyperplane sign codes
+  *    from `signPlanes`/`signCodes` (embed_prod, simsearch_incremental,
+  *    simsearch_lsh). The one-shot keys take candidates from one
+  *    pinned sort-merge band self-join (`bandPairs`); the two
+  *    persisted-index keys share one probe-then-append protocol
+  *    (`probeThenAppend`: one probe, one append commit per batch).
+  *    Verification joins the candidate ids to fingerprints or vectors,
+  *    so the band joins carry ids only.
   *  - simsearch: `llm_simsearch_topk` is EXACT ball-pruned top-k
   *    (Api.cosineTopKPruned — recall-complete cell pruning, equi-joins
   *    only, byte-identical to the test-only brute-force baseline);
@@ -147,6 +156,50 @@ object Llm {
        |ORDER BY c.d1, c.d2""".stripMargin
   }
 
+  /** The τ = 0.9 embedding keys' vectors, oracle side: the fixture
+    * embeddings as DOUBLE lists, and the near-dup mix v′ = 0.9·a + 0.1·b. */
+  private val vList = (1 to Dim).map(i => s"CAST(embedding[$i] AS DOUBLE)")
+    .mkString("[", ", ", "]")
+  private val augList = (1 to Dim).map(i => s"0.9 * a.v[$i] + 0.1 * b.v[$i]")
+    .mkString("[", ", ", "]")
+
+  /** Oracle of the sign-code LSH embedding keys, stage for stage over
+    * the same augmented frame: the md5-derived hyperplanes, per-table
+    * sign codes, banded candidates narrowed by `candFilter`, and the
+    * exact-cosine verify are all spelled as the engine computes them,
+    * so the deterministic-recall output hash-matches (the discipline of
+    * llm_simsearch_lsh). */
+  private def sqlEmbedProd(candFilter: String): String =
+    s"""WITH b0 AS (SELECT vec_id, $vList AS v FROM embeddings),
+       |aug AS (SELECT a.vec_id + $EmbedAugOffset AS vec_id, $augList AS v
+       |        FROM b0 a JOIN b0 b ON b.vec_id = a.vec_id + 1
+       |        WHERE a.vec_id % 5 = 0),
+       |allv AS (SELECT vec_id, v FROM b0 UNION ALL SELECT vec_id, v FROM aug),
+       |n AS (SELECT vec_id, v, ${sqlNorm2("v")} AS n2 FROM allv),
+       |pl AS (SELECT p, CAST(p // $EmbedProdPlanes AS INT) AS t,
+       |         CAST(p % $EmbedProdPlanes AS INT) AS k,
+       |         LIST(coord ORDER BY d) AS plane FROM (
+       |    SELECT pp.p, dd.d,
+       |     CAST(('0x' || SUBSTR(MD5('dp_' || CAST(pp.p AS VARCHAR) || '_' ||
+       |       CAST(dd.d AS VARCHAR)), 1, 8)) AS BIGINT) % 1000
+       |      / CAST(1000 AS DOUBLE) - 0.5 AS coord
+       |    FROM (SELECT UNNEST(RANGE(0, ${EmbedProdTables * EmbedProdPlanes})) AS p) pp
+       |     CROSS JOIN (SELECT UNNEST(RANGE(0, $Dim)) AS d) dd)
+       |   GROUP BY p),
+       |codes AS (SELECT vec_id, t,
+       |   SUM(CASE WHEN (${sqlDot("n.v", "pl.plane")}) > 0
+       |       THEN CAST(1 AS BIGINT) << k ELSE 0 END) AS code
+       |  FROM n CROSS JOIN pl GROUP BY vec_id, t),
+       |cand AS (SELECT DISTINCT x.vec_id AS v1, y.vec_id AS v2
+       |         FROM codes x JOIN codes y
+       |          ON x.t = y.t AND x.code = y.code AND x.vec_id < y.vec_id$candFilter)
+       |SELECT v1, v2, ${sqlRound("cos", 6)} AS cos_sim FROM (
+       | SELECT c.v1, c.v2,
+       |  (${sqlDot("na.v", "nb.v")}) / (SQRT(na.n2) * SQRT(nb.n2)) AS cos
+       | FROM cand c JOIN n na ON na.vec_id = c.v1 JOIN n nb ON nb.vec_id = c.v2)
+       |WHERE cos >= $CosineProdTau
+       |ORDER BY v1, v2""".stripMargin
+
   // ---- dedup family ------------------------------------------------------
 
   private def dedupExact(s: SparkSession, dir: String): DataFrame =
@@ -172,19 +225,26 @@ object Llm {
     * therefore the full candidate set are oracle-exact in DuckDB. */
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
     val docs = minhashDocs(s, dir)
-    val banded = bandedOf(docs.select(col("doc_id"),
-      graft.plans.expressions.minHashSig(col("text"), ShingleK).as("sig")))
-    // sort-merge, pinned: the exploded band table is 16 rows per
-    // document, but Catalyst sizes it like its input and would broadcast
-    // it (a 48 MiB relation at x4); the merge join is also the plan that
-    // spills at 100 TB
-    val cand = banded.as("x").hint("merge").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
+    val cand = bandPairs(bandedOf(docs.select(col("doc_id"),
+      graft.plans.expressions.minHashSig(col("text"), ShingleK).as("sig"))))
     verifyCandidates(cand,
       Api.shingleFingerprints(docs, "doc_id", "text", ShingleK))
+  }
+
+  /** Distinct ordered `(lo, hi)` id pairs of the `(id, band, key)` rows
+    * (columns by position, names kept) that share a key in some band:
+    * the candidate set of the one-shot banded-LSH keys, each pair once
+    * however many bands it collides in. Sort-merge, pinned: a band table
+    * is several rows per input row, but Catalyst sizes it like its input
+    * and would broadcast it (a 48 MiB relation at x4); the merge join is
+    * also the plan that spills at 100 TB. */
+  private[graft] def bandPairs(rows: DataFrame): DataFrame = {
+    val Array(id, band, key) = rows.columns
+    rows.as("x").hint("merge").join(rows.as("y"),
+        col(s"x.$band") === col(s"y.$band") && col(s"x.$key") === col(s"y.$key") &&
+          col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as("lo"), col(s"y.$id").as("hi"))
+      .distinct()
   }
 
   /** (doc_id, band, bv) banded MinHash rows of a `(doc_id, sig)` frame
@@ -204,18 +264,65 @@ object Llm {
       .as(Seq("band", "bv")))
   }
 
-  /** Exact-Jaccard verification of MinHash candidate pairs (d1 < d2)
+  /** Distinct ordered `(lo, hi)` id pairs that a batch's `(id, band,
+    * key)` rows form with the `index` rows (same columns, disjoint ids)
+    * and with each other: one equi-join of the batch against index ∪
+    * batch, in which a batch×batch pair meets once from each side. */
+  private[graft] def probePairs(batch: DataFrame, index: DataFrame): DataFrame = {
+    val Array(id, band, key) = batch.columns
+    batch.as("x").join(index.unionByName(batch).as("y"),
+        col(s"x.$band") === col(s"y.$band") && col(s"x.$key") === col(s"y.$key") &&
+          col(s"x.$id") =!= col(s"y.$id"))
+      .select(least(col(s"x.$id"), col(s"y.$id")).as("lo"),
+        greatest(col(s"x.$id"), col(s"y.$id")).as("hi"))
+      .distinct()
+  }
+
+  /** Exact-Jaccard verification of MinHash candidate pairs `(lo, hi)`
     * over the `(doc_id, g1, g2)` shingle fingerprints: shared
-    * fingerprints are counted by equi-joining the candidates to d1's
-    * fingerprints on d1, then to d2's on (d2, g1, g2) — LongType keys
-    * only — and [[Api.jaccardPairs]] keeps the pairs at Jaccard >= 4/5. */
+    * fingerprints are counted by equi-joining the candidates to lo's
+    * fingerprints on lo, then to hi's on (hi, g1, g2) — LongType keys
+    * only — and [[Api.jaccardPairs]] keeps the pairs at Jaccard >= 4/5.
+    * Both joins build on the candidate side: from static estimates
+    * Catalyst would broadcast the corpus's fingerprints, twice, before
+    * the candidate stage's few thousand rows are known. */
   private def verifyCandidates(cand: DataFrame, fp: DataFrame): DataFrame = {
-    val inter = cand.join(fp.withColumnRenamed("doc_id", "d1"), "d1")
+    val inter = cand.toDF("d1", "d2").hint("shuffle_hash")
+      .join(fp.withColumnRenamed("doc_id", "d1"), "d1").hint("shuffle_hash")
       .join(fp.withColumnRenamed("doc_id", "d2"), Seq("d2", "g1", "g2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
     Api.jaccardPairs(inter, fp, JaccardNum, JaccardDen)
       .select(col("d1"), col("d2"), dround(col("jaccard"), 6).as("jaccard"))
       .orderBy("d1", "d2")
+  }
+
+  /** Probe-then-append against a PERSISTED band index, the shared
+    * protocol of the two incremental LSH keys: `graftcat.lake.<table>`
+    * (columns `ddl`) is created and seeded with the `base` rows; the
+    * `batch` rows — the same `(id, band, key)` columns — are settled
+    * once and probed ([[probePairs]]), and the candidates go through
+    * `verify`. The verified pairs are settled before the index mutates;
+    * then the batch's rows land as ONE append commit, and the index
+    * version must advance exactly once, so a batch that crashes before
+    * the append re-probes the same index state. */
+  private def probeThenAppend(s: SparkSession, table: String, ddl: String,
+      base: DataFrame, batch: DataFrame)(verify: DataFrame => DataFrame): DataFrame = {
+    val name = s"graftcat.lake.$table"
+    def append(rows: DataFrame): Unit = {
+      rows.createOrReplaceTempView(s"graft_${table}_rows")
+      s.sql(s"INSERT INTO $name SELECT ${rows.columns.mkString(", ")} FROM graft_${table}_rows")
+    }
+    Graftcat.fresh(s, table)
+    s.sql(s"CREATE TABLE $name ($ddl)")
+    append(base)
+    val cat = Graftcat.instance(s)
+    val v0 = cat.currentVersion(Graftcat.ident(table))
+    val b = batch.localCheckpoint()
+    val pairs = verify(probePairs(b, s.table(name))).localCheckpoint()
+    append(b)
+    val v1 = cat.currentVersion(Graftcat.ident(table))
+    require(v1 == v0 + 1, s"index append must be exactly one version: v$v0 -> v$v1")
+    pairs
   }
 
   /** INCREMENTAL near-dup dedup against a PERSISTED LSH index (the
@@ -227,58 +334,26 @@ object Llm {
     * itself); a new batch computes O(batch) signatures, probes
     * batch×index and batch×batch on the 8-byte band keys, exact-
     * Jaccard-verifies the candidates, and then APPENDS its own bands
-    * as ONE commit — the index version advances exactly once per
-    * batch (required in-flow), so a crashed batch re-probes the same
-    * index state. Cost per batch: O(batch) hashing + collision-bounded
-    * candidates — never O(corpus); old×old pairs were settled when
-    * those docs entered. Oracle: the full key's band/verify SQL with
-    * the candidate set restricted to pairs touching the batch —
-    * hash-exact because signatures and band keys are the same
-    * md5-prefix spelling and the verify counts the same distinct
-    * shingles. */
+    * as ONE commit ([[probeThenAppend]]). Cost per batch: O(batch)
+    * hashing + collision-bounded candidates — never O(corpus);
+    * old×old pairs were settled when those docs entered. Oracle: the
+    * full key's band/verify SQL with the candidate set restricted to
+    * pairs touching the batch — hash-exact because signatures and band
+    * keys are the same md5-prefix spelling and the verify counts the
+    * same distinct shingles. */
   private def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
-    Graftcat.fresh(s, "lsh_index")
-    s.sql("""CREATE TABLE graftcat.lake.lsh_index
-            |(doc_id BIGINT, band INT, bv BIGINT)""".stripMargin)
     val sh = minhashDocs(s, dir).select(col("doc_id"),
         graft.plans.expressions.shingleHashPairs(col("text"), ShingleK).as("fps"),
         graft.plans.expressions.minHashSig(col("text"), ShingleK).as("sig"))
       .localCheckpoint()
-    val banded = bandedOf(sh)
-    // existing corpus: doc_id % 3 != 0 — its bands ARE the index
-    banded.where(col("doc_id") % 3 =!= 0)
-      .createOrReplaceTempView("graft_lshinc_base")
-    s.sql("""INSERT INTO graftcat.lake.lsh_index
-            |SELECT doc_id, band, bv FROM graft_lshinc_base""".stripMargin)
-    val cat = Graftcat.instance(s)
-    val index = Graftcat.ident("lsh_index")
-    val v0 = cat.currentVersion(index)
-    // the arriving batch: bands computed once, probed twice, appended
-    val batch = bandedOf(sh.where(col("doc_id") % 3 === 0)).localCheckpoint()
-    val idx = s.table("graftcat.lake.lsh_index")
-    val candIdx = batch.as("x").join(idx.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("d1"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("d2"))
-    val candSelf = batch.as("x").join(batch.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-    val cand = candIdx.unionByName(candSelf).distinct()
     // the checkpointed fingerprint arrays explode as a column: the
     // inferred size(fps) > 0 filter reads the checkpoint, not a kernel
     val fp = sh.select(col("doc_id"), explode(col("fps")).as("p"))
       .select(col("doc_id"), col("p.g1").as("g1"), col("p.g2").as("g2"))
-    val pairs = verifyCandidates(cand, fp)
-      .localCheckpoint() // settle the result BEFORE the index mutates
-    // index maintenance: the batch's bands land as ONE commit
-    batch.createOrReplaceTempView("graft_lshinc_batch")
-    s.sql("""INSERT INTO graftcat.lake.lsh_index
-            |SELECT doc_id, band, bv FROM graft_lshinc_batch""".stripMargin)
-    val v1 = cat.currentVersion(index)
-    require(v1 == v0 + 1,
-      s"index append must be exactly one version: v$v0 -> v$v1")
-    pairs
+    // existing corpus: doc_id % 3 != 0 — its bands ARE the index
+    probeThenAppend(s, "lsh_index", "doc_id BIGINT, band INT, bv BIGINT",
+      bandedOf(sh.where(col("doc_id") % 3 =!= 0)),
+      bandedOf(sh.where(col("doc_id") % 3 === 0)))(verifyCandidates(_, fp))
   }
 
   /** SimHash bit-sketch near-dup: every document pair whose 64-bit
@@ -507,23 +582,28 @@ object Llm {
     base.unionByName(aug).withColumn("n2", norm2D(col("v")))
   }
 
-  /** The md5-derived banded sign-code hyperplanes (EmbedProdTables
-    * tables × EmbedProdPlanes planes — deterministic coordinates, no
-    * driver RNG, cross-engine-spellable). */
-  private def embedProdPlanes(s: SparkSession): DataFrame =
-    s.range(EmbedProdTables * EmbedProdPlanes).select(
-      expr(s"CAST(id div $EmbedProdPlanes AS INT)").as("t"),
-      expr(s"CAST(id % $EmbedProdPlanes AS INT)").as("k"),
+  /** Sign-code hyperplanes `(t, k, plane)`: `tables` × `perTable`
+    * planes of Dim md5-derived coordinates in [-0.5, 0.5) — deterministic,
+    * no driver RNG, cross-engine-spellable. Plane `id` hashes
+    * `[salt_]id_d` for coordinate d; t = id div perTable, k = id mod
+    * perTable. */
+  private def signPlanes(s: SparkSession, tables: Int, perTable: Int,
+      salt: Option[String]): DataFrame =
+    s.range(tables * perTable).select(
+      expr(s"CAST(id div $perTable AS INT)").as("t"),
+      expr(s"CAST(id % $perTable AS INT)").as("k"),
       transform(sequence(lit(0), lit(Dim - 1)),
-        d => pmod(conv(substring(md5(encode(
-          concat_ws("_", lit("dp"), col("id"), d), "UTF-8")), 1, 8), 16, 10).cast("long"),
-          lit(1000L)) / 1000.0 - 0.5)
+        d => pmod(conv(substring(md5(encode(concat_ws("_",
+          salt.map(lit).toSeq ++ Seq(col("id"), d): _*), "UTF-8")), 1, 8), 16, 10)
+          .cast("long"), lit(1000L)) / 1000.0 - 0.5)
         .as("plane"))
 
-  /** Per-(vector, table) 16-bit sign codes of `vecs` (vec_id, v)
-    * against the broadcast planes — one map pass + a partial-agg
-    * groupBy, the O(batch) coding step of the LSH family. */
-  private def embedProdCodes(vecs: DataFrame, planes: DataFrame): DataFrame = {
+  /** Per-(vector, table) sign codes `(vec_id, t, code)` of `vecs`
+    * (vec_id, v: double array) against the broadcast `planes`: bit k of
+    * a table's code is set iff the vector lies on the positive side of
+    * plane k. One map pass + a partial-agg groupBy, the O(batch) coding
+    * step of the hyperplane-LSH keys. */
+  private def signCodes(vecs: DataFrame, planes: DataFrame): DataFrame = {
     import graft.plans.expressions.dotD
     vecs.crossJoin(broadcast(planes))
       .withColumn("bit", when(dotD(col("v"), col("plane")) > 0,
@@ -531,26 +611,63 @@ object Llm {
       .groupBy(col("vec_id"), col("t")).agg(sum(col("bit")).as("code"))
   }
 
-  private def dedupEmbedProd(s: SparkSession, dir: String): DataFrame = {
+  /** `(v1, v2, cos_sim)` of the `(lo, hi)` candidates of the τ = 0.9
+    * embedding keys whose exact cosine over `all` (vec_id, v, n2) is
+    * >= τ: the vectors join to the candidate ids, so the band join
+    * carries ids only. */
+  private def cosinePairs(cand: DataFrame, all: DataFrame): DataFrame = {
     import graft.plans.expressions.dotD
-    val tau = CosineProdTau
-    val all = embedProdFrame(s, dir)
-    val coded = embedProdCodes(all.select(col("vec_id"), col("v")),
-      embedProdPlanes(s)).join(all, "vec_id")
-    val lhs = coded.select(col("t").as("t1"), col("code").as("code1"),
-      col("vec_id").as("id1"), col("v").as("va"), col("n2").as("n2a"))
-    val rhs = coded.select(col("t").as("t2"), col("code").as("code2"),
-      col("vec_id").as("id2"), col("v").as("vb"), col("n2").as("n2b"))
-    lhs.join(rhs, col("t1") === col("t2") && col("code1") === col("code2") &&
-        col("id1") < col("id2"))
-      // a pair colliding in several tables scores once; every surviving
-      // row for a pair is identical, so the arbitrary keeper is exact
-      .dropDuplicates("id1", "id2")
-      .select(col("id1").as("v1"), col("id2").as("v2"),
+    val va = all.select(col("vec_id").as("v1"), col("v").as("va"), col("n2").as("n2a"))
+    val vb = all.select(col("vec_id").as("v2"), col("v").as("vb"), col("n2").as("n2b"))
+    cand.toDF("v1", "v2").join(va, "v1").join(vb, "v2")
+      .select(col("v1"), col("v2"),
         (dotD(col("va"), col("vb")) / (sqrt(col("n2a")) * sqrt(col("n2b")))).as("cos"))
-      .where(col("cos") >= lit(tau))
+      .where(col("cos") >= lit(CosineProdTau))
       .select(col("v1"), col("v2"), dround(col("cos"), 6).as("cos_sim"))
       .orderBy("v1", "v2")
+  }
+
+  /** Production-threshold embedding dedup (τ = 0.9) — the sparse-output
+    * scale path the all-pairs [[dedupEmbed]] demo explicitly is not (its
+    * own doc: at τ ≥ 0.9 candidates should come from blocking, not
+    * enumeration). The fixture embeddings are isotropic (max pairwise
+    * cos ≈ 0.5), so τ = 0.9 over the raw table would be degenerate; the
+    * frame under test is the fixture UNION deterministic near-dups: for
+    * every vec_id ≡ 0 (mod 5) with a successor, v′ = 0.9·v + 0.1·v₊₁
+    * (double math, spelled term-for-term in the oracle), cos(v, v′) ≈
+    * 0.99 ≥ τ while all other pairs stay far below.
+    *
+    * Candidates are banded sign-code LSH — the [[simsearchLsh]] family,
+    * tuned for high-τ dedup: EmbedProdTables=4 band tables ×
+    * EmbedProdPlanes=16 md5-derived hyperplanes each (cross-engine-
+    * spellable coordinates, no driver RNG). A pair is a candidate iff
+    * some table gives both vectors the same 16-bit sign code; exact
+    * cosine then verifies every candidate, so there are NO false
+    * positives and all emitted cosines are bit-exact (raw vectors,
+    * left-to-right chain). Recall is the standard LSH dial: a cos 0.99
+    * pair agrees per plane w.p. 1 − θ/π ≈ 0.964, per table 0.964¹⁶ ≈
+    * 0.56, across 4 tables 1 − 0.44⁴ ≈ 0.96 — and because the planes
+    * are md5-constants, WHICH pairs surface is deterministic and the
+    * DuckDB oracle (same planes, same codes, same verify) matches
+    * hash-exactly. A first design used lossless IVF cell-pair pruning
+    * (triangle inequality on centroid distance + radii) — correct, but
+    * on isotropic data every cell radius covers the sphere, nothing
+    * prunes, and ×100 degenerated to all-pairs (measured, killed); the
+    * honest production trade is bounded candidates with an explicit
+    * recall dial, exactly like every real LSH dedup pipeline.
+    *
+    * 100-TB shape: the 64 plane vectors broadcast; coding is one map
+    * pass + a partial-agg groupBy on (vec_id, table); the candidate
+    * self-join shuffles on (table, 16-bit code) — ~n/65 536 vectors per
+    * bucket per table on isotropic data, so candidate volume is Θ(n)
+    * at fixed fill, and the verify stage touches candidates only.
+    * Denser corpora ⇒ raise planes-per-table (finer buckets), more
+    * tables (recall back up) — the dials are Params constants.
+    */
+  private def dedupEmbedProd(s: SparkSession, dir: String): DataFrame = {
+    val all = embedProdFrame(s, dir)
+    cosinePairs(bandPairs(signCodes(all.select(col("vec_id"), col("v")),
+      signPlanes(s, EmbedProdTables, EmbedProdPlanes, Some("dp")))), all)
   }
 
   /** INCREMENTAL similarity search against a PERSISTED ANN index
@@ -564,65 +681,23 @@ object Llm {
     * md5-derived planes, probes batch×index and batch×batch on the
     * (table, 16-bit code) key, exact-cosine-verifies every candidate
     * (no false positives, bit-exact scores), and then APPENDS its own
-    * codes as ONE commit — the index version advances exactly once
-    * per batch (required in-flow), so a crashed batch re-probes the
-    * same index state (AnnIndexSuite pins the crash seam). Cost per
-    * batch: O(batch) coding + collision-bounded candidates — never
-    * O(corpus); old×old pairs were settled when those vectors
-    * entered. Corpus = the embed_prod augmented frame (τ = 0.9 pairs
-    * exist by construction); batch = vec_id ≡ 0 (mod 3). Oracle: the
+    * codes as ONE commit ([[probeThenAppend]]; AnnIndexSuite pins the
+    * crash seam). Cost per batch: O(batch) coding + collision-bounded
+    * candidates — never O(corpus); old×old pairs were settled when
+    * those vectors entered. Corpus = the embed_prod augmented frame
+    * (τ = 0.9 pairs exist by construction); batch = vec_id ≡ 0
+    * (mod 3). Oracle: the
     * embed_prod band/verify SQL with candidates restricted to pairs
     * touching the batch — hash-exact because planes, codes and the
     * verify are the same md5-prefix spelling. */
   private def simsearchIncremental(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.expressions.dotD
-    Graftcat.fresh(s, "ann_index")
-    s.sql("""CREATE TABLE graftcat.lake.ann_index
-            |(vec_id BIGINT, t INT, code BIGINT)""".stripMargin)
     val all = embedProdFrame(s, dir).localCheckpoint()
-    val planes = embedProdPlanes(s)
+    val planes = signPlanes(s, EmbedProdTables, EmbedProdPlanes, Some("dp"))
+    def codes(rows: DataFrame) = signCodes(rows.select(col("vec_id"), col("v")), planes)
+    val inBatch = pmod(col("vec_id"), lit(3)) === 0
     // existing corpus: vec_id % 3 != 0 — its codes ARE the index
-    embedProdCodes(all.where(pmod(col("vec_id"), lit(3)) =!= 0)
-      .select(col("vec_id"), col("v")), planes)
-      .createOrReplaceTempView("graft_ann_base")
-    s.sql("""INSERT INTO graftcat.lake.ann_index
-            |SELECT vec_id, t, code FROM graft_ann_base""".stripMargin)
-    val cat = Graftcat.instance(s)
-    val index = Graftcat.ident("ann_index")
-    val v0 = cat.currentVersion(index)
-    // the arriving batch: codes computed once, probed twice, appended
-    val bCodes = embedProdCodes(all.where(pmod(col("vec_id"), lit(3)) === 0)
-      .select(col("vec_id"), col("v")), planes).localCheckpoint()
-    val idx = s.table("graftcat.lake.ann_index")
-    val candIdx = bCodes.as("x").join(idx.as("y"),
-        col("x.t") === col("y.t") && col("x.code") === col("y.code"))
-      .select(least(col("x.vec_id"), col("y.vec_id")).as("v1"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("v2"))
-    val candSelf = bCodes.as("x").join(bCodes.as("y"),
-        col("x.t") === col("y.t") && col("x.code") === col("y.code") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"))
-    val cand = candIdx.unionByName(candSelf).distinct()
-    val va = all.select(col("vec_id").as("v1"), col("v").as("va"),
-      col("n2").as("n2a"))
-    val vb = all.select(col("vec_id").as("v2"), col("v").as("vb"),
-      col("n2").as("n2b"))
-    val pairs = cand.join(va, "v1").join(vb, "v2")
-      .select(col("v1"), col("v2"),
-        (dotD(col("va"), col("vb")) /
-          (sqrt(col("n2a")) * sqrt(col("n2b")))).as("cos"))
-      .where(col("cos") >= lit(CosineProdTau))
-      .select(col("v1"), col("v2"), dround(col("cos"), 6).as("cos_sim"))
-      .orderBy("v1", "v2")
-      .localCheckpoint() // settle the result BEFORE the index mutates
-    // index maintenance: the batch's codes land as ONE commit
-    bCodes.createOrReplaceTempView("graft_ann_batch")
-    s.sql("""INSERT INTO graftcat.lake.ann_index
-            |SELECT vec_id, t, code FROM graft_ann_batch""".stripMargin)
-    val v1 = cat.currentVersion(index)
-    require(v1 == v0 + 1,
-      s"index append must be exactly one version: v$v0 -> v$v1")
-    pairs
+    probeThenAppend(s, "ann_index", "vec_id BIGINT, t INT, code BIGINT",
+      codes(all.where(!inBatch)), codes(all.where(inBatch)))(cosinePairs(_, all))
   }
 
   /** SemDeDup (Abbas et al. 2023) — cluster-scoped semantic dedup, the
@@ -873,23 +948,12 @@ object Llm {
     // 6 planes → 64 buckets: sized so fixture buckets hold a handful of
     // vectors (more planes at corpus scale; the plane count is the
     // recall/candidate-size dial)
-    // plane coordinates from the md5-prefix hash (round 5 — was
-    // xxhash64): the pseudo-random family is now cross-engine-spellable,
-    // which makes the bucket codes — and so the whole approximate result
-    // — oracle-exact
-    val planes = s.range(6).select(col("id").cast("int").as("p"),
-      transform(sequence(lit(0), lit(Dim - 1)),
-        d => pmod(conv(substring(md5(encode(
-          concat_ws("_", col("id"), d), "UTF-8")), 1, 8), 16, 10).cast("long"),
-          lit(1000L)) / 1000.0 - 0.5)
-        .as("plane"))
     val e = T(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), fnorm2(col("embedding")).as("n2"))
-    val coded = e.crossJoin(broadcast(planes))
-      .withColumn("bit",
-        when(fdotD(transform(col("embedding"), _.cast("double")), col("plane")) > 0,
-          expr("shiftleft(CAST(1 AS BIGINT), p)")).otherwise(lit(0L)))
-      .groupBy("vec_id").agg(sum(col("bit")).as("code"))
+    val coded = signCodes(e.select(col("vec_id"),
+        transform(col("embedding"), _.cast("double")).as("v")),
+        signPlanes(s, tables = 1, perTable = 6, salt = None))
+      .select(col("vec_id"), col("code"))
     val all = e.join(coded, "vec_id")
     val q = all.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1576,16 +1640,7 @@ object Llm {
          | FROM n a JOIN n b ON a.vec_id < b.vec_id)
          |WHERE cos >= $CosineThreshold
          |ORDER BY v1, v2""".stripMargin,
-    // mirrors the op stage-for-stage over the SAME augmented frame: the
-    // md5-derived hyperplanes, per-table sign codes, banded candidates
-    // and the exact-cosine verify are all spelled identically, so the
-    // deterministic-recall LSH output hash-matches (same discipline as
-    // llm_simsearch_lsh)
-    "llm_semdedup" -> {
-      val vList = (1 to Dim).map(i => s"CAST(embedding[$i] AS DOUBLE)")
-        .mkString("[", ", ", "]")
-      val augList = (1 to Dim).map(i => s"0.9 * a.v[$i] + 0.1 * b.v[$i]")
-        .mkString("[", ", ", "]")
+    "llm_semdedup" ->
       s"""WITH b0 AS (SELECT vec_id, $vList AS v FROM embeddings),
          |params AS (SELECT GREATEST(4, COUNT(*) // 64) AS k FROM b0),
          |aug AS (SELECT a.vec_id + $EmbedAugOffset AS vec_id, $augList AS v
@@ -1615,82 +1670,13 @@ object Llm {
          |   >= $CosineProdTau)
          |SELECT id2 AS vec_id, cluster, MIN(id1) AS canon_id,
          | CAST(COUNT(*) AS BIGINT) AS n_dups
-         |FROM pairs GROUP BY id2, cluster ORDER BY vec_id""".stripMargin
-    },
-    "llm_dedup_embed_prod" -> {
-      val vList = (1 to Dim).map(i => s"CAST(embedding[$i] AS DOUBLE)")
-        .mkString("[", ", ", "]")
-      val augList = (1 to Dim).map(i => s"0.9 * a.v[$i] + 0.1 * b.v[$i]")
-        .mkString("[", ", ", "]")
-      s"""WITH b0 AS (SELECT vec_id, $vList AS v FROM embeddings),
-         |aug AS (SELECT a.vec_id + $EmbedAugOffset AS vec_id, $augList AS v
-         |        FROM b0 a JOIN b0 b ON b.vec_id = a.vec_id + 1
-         |        WHERE a.vec_id % 5 = 0),
-         |allv AS (SELECT vec_id, v FROM b0 UNION ALL SELECT vec_id, v FROM aug),
-         |n AS (SELECT vec_id, v, ${sqlNorm2("v")} AS n2 FROM allv),
-         |pl AS (SELECT p, CAST(p // $EmbedProdPlanes AS INT) AS t,
-         |         CAST(p % $EmbedProdPlanes AS INT) AS k,
-         |         LIST(coord ORDER BY d) AS plane FROM (
-         |    SELECT pp.p, dd.d,
-         |     CAST(('0x' || SUBSTR(MD5('dp_' || CAST(pp.p AS VARCHAR) || '_' ||
-         |       CAST(dd.d AS VARCHAR)), 1, 8)) AS BIGINT) % 1000
-         |      / CAST(1000 AS DOUBLE) - 0.5 AS coord
-         |    FROM (SELECT UNNEST(RANGE(0, ${EmbedProdTables * EmbedProdPlanes})) AS p) pp
-         |     CROSS JOIN (SELECT UNNEST(RANGE(0, $Dim)) AS d) dd)
-         |   GROUP BY p),
-         |codes AS (SELECT vec_id, t,
-         |   SUM(CASE WHEN (${sqlDot("n.v", "pl.plane")}) > 0
-         |       THEN CAST(1 AS BIGINT) << k ELSE 0 END) AS code
-         |  FROM n CROSS JOIN pl GROUP BY vec_id, t),
-         |cand AS (SELECT DISTINCT x.vec_id AS v1, y.vec_id AS v2
-         |         FROM codes x JOIN codes y
-         |          ON x.t = y.t AND x.code = y.code AND x.vec_id < y.vec_id)
-         |SELECT v1, v2, ${sqlRound("cos", 6)} AS cos_sim FROM (
-         | SELECT c.v1, c.v2,
-         |  (${sqlDot("na.v", "nb.v")}) / (SQRT(na.n2) * SQRT(nb.n2)) AS cos
-         | FROM cand c JOIN n na ON na.vec_id = c.v1 JOIN n nb ON nb.vec_id = c.v2)
-         |WHERE cos >= $CosineProdTau
-         |ORDER BY v1, v2""".stripMargin
-    },
+         |FROM pairs GROUP BY id2, cluster ORDER BY vec_id""".stripMargin,
+    "llm_dedup_embed_prod" -> sqlEmbedProd(""),
     // the embed_prod band/verify chain with candidates restricted to
     // pairs touching the arriving batch (vec_id % 3 = 0) — what the
     // incremental probe answers (old×old pairs were settled earlier)
-    "llm_simsearch_incremental" -> {
-      val vList = (1 to Dim).map(i => s"CAST(embedding[$i] AS DOUBLE)")
-        .mkString("[", ", ", "]")
-      val augList = (1 to Dim).map(i => s"0.9 * a.v[$i] + 0.1 * b.v[$i]")
-        .mkString("[", ", ", "]")
-      s"""WITH b0 AS (SELECT vec_id, $vList AS v FROM embeddings),
-         |aug AS (SELECT a.vec_id + $EmbedAugOffset AS vec_id, $augList AS v
-         |        FROM b0 a JOIN b0 b ON b.vec_id = a.vec_id + 1
-         |        WHERE a.vec_id % 5 = 0),
-         |allv AS (SELECT vec_id, v FROM b0 UNION ALL SELECT vec_id, v FROM aug),
-         |n AS (SELECT vec_id, v, ${sqlNorm2("v")} AS n2 FROM allv),
-         |pl AS (SELECT p, CAST(p // $EmbedProdPlanes AS INT) AS t,
-         |         CAST(p % $EmbedProdPlanes AS INT) AS k,
-         |         LIST(coord ORDER BY d) AS plane FROM (
-         |    SELECT pp.p, dd.d,
-         |     CAST(('0x' || SUBSTR(MD5('dp_' || CAST(pp.p AS VARCHAR) || '_' ||
-         |       CAST(dd.d AS VARCHAR)), 1, 8)) AS BIGINT) % 1000
-         |      / CAST(1000 AS DOUBLE) - 0.5 AS coord
-         |    FROM (SELECT UNNEST(RANGE(0, ${EmbedProdTables * EmbedProdPlanes})) AS p) pp
-         |     CROSS JOIN (SELECT UNNEST(RANGE(0, $Dim)) AS d) dd)
-         |   GROUP BY p),
-         |codes AS (SELECT vec_id, t,
-         |   SUM(CASE WHEN (${sqlDot("n.v", "pl.plane")}) > 0
-         |       THEN CAST(1 AS BIGINT) << k ELSE 0 END) AS code
-         |  FROM n CROSS JOIN pl GROUP BY vec_id, t),
-         |cand AS (SELECT DISTINCT x.vec_id AS v1, y.vec_id AS v2
-         |         FROM codes x JOIN codes y
-         |          ON x.t = y.t AND x.code = y.code AND x.vec_id < y.vec_id
-         |          AND (x.vec_id % 3 = 0 OR y.vec_id % 3 = 0))
-         |SELECT v1, v2, ${sqlRound("cos", 6)} AS cos_sim FROM (
-         | SELECT c.v1, c.v2,
-         |  (${sqlDot("na.v", "nb.v")}) / (SQRT(na.n2) * SQRT(nb.n2)) AS cos
-         | FROM cand c JOIN n na ON na.vec_id = c.v1 JOIN n nb ON nb.vec_id = c.v2)
-         |WHERE cos >= $CosineProdTau
-         |ORDER BY v1, v2""".stripMargin
-    },
+    "llm_simsearch_incremental" ->
+      sqlEmbedProd("\n          AND (x.vec_id % 3 = 0 OR y.vec_id % 3 = 0)"),
     "llm_dedup_clusters" ->
       s"""WITH RECURSIVE sh AS ($sqlShingles),
          |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),

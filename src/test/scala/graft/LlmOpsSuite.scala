@@ -357,6 +357,43 @@ class LlmOpsSuite extends SparkSuiteBase {
       s"LSH produced pairs outside the exact J>=0.8 set: ${lsh -- exact}")
   }
 
+  test("bandPairs and probePairs equal the distinct / dropDuplicates spellings they replaced") {
+    import spark.implicits._
+    // (doc_id, band, bv): 1 and 2 collide in bands 0, 1 and 2; 3 meets
+    // 1 and 2 in band 1 only; 4 holds 1's band-0 key in band 2, which is
+    // no collision; 5 and 6 meet in band 3; 7 meets 1 in band 3
+    val rows = Seq((1L, 0, 10L), (1L, 1, 11L), (1L, 2, 12L), (1L, 3, 13L),
+      (2L, 0, 10L), (2L, 1, 11L), (2L, 2, 12L), (2L, 3, 99L),
+      (3L, 0, 30L), (3L, 1, 11L), (4L, 2, 10L),
+      (5L, 3, 55L), (6L, 3, 55L), (7L, 0, 70L), (7L, 3, 13L)).toDF("doc_id", "band", "bv")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    def selfJoin(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame) =
+      x.as("x").join(y.as("y"), col("x.band") === col("y.band") &&
+        col("x.bv") === col("y.bv") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+    val all = Set((1L, 2L), (1L, 3L), (1L, 7L), (2L, 3L), (5L, 6L))
+    val got = pairs(Llm.bandPairs(rows))
+    assert(got.length == got.distinct.length, s"duplicate pairs: $got")
+    assert(got.toSet == all)
+    // the one-shot MinHash spelling and the embed_prod one
+    assert(pairs(selfJoin(rows, rows).distinct()).toSet == all)
+    assert(pairs(selfJoin(rows, rows).dropDuplicates("d1", "d2")).toSet == all)
+    // the incremental spelling: batch × index ∪ batch × batch, distinct();
+    // (1, 7) is an index × index pair, settled before this batch
+    val inBatch = col("doc_id").isin(2L, 3L, 6L)
+    val (batch, index) = (rows.where(inBatch), rows.where(!inBatch))
+    val candIdx = batch.as("x").join(index.as("y"),
+        col("x.band") === col("y.band") && col("x.bv") === col("y.bv"))
+      .select(least(col("x.doc_id"), col("y.doc_id")).as("d1"),
+        greatest(col("x.doc_id"), col("y.doc_id")).as("d2"))
+    val touching = all - (1L -> 7L)
+    assert(pairs(candIdx.unionByName(selfJoin(batch, batch)).distinct()).toSet == touching)
+    val probed = pairs(Llm.probePairs(batch, index))
+    assert(probed.length == probed.distinct.length, s"duplicate pairs: $probed")
+    assert(probed.toSet == touching)
+  }
+
   /** The document-level spelling Llm.simhashPairs replaced, kept as its
     * reference: 4 lanes per DOCUMENT, self-join on (c, chunk), hamming
     * filter, then distinct() to fold pairs sharing several lanes. */
