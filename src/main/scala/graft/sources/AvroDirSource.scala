@@ -452,13 +452,8 @@ class AvroDirTable(path: String, tableSchema: StructType,
         org.apache.spark.sql.types.StructField(
           AvroDirSource.LuvColumn, LongType, nullable = true))
     else tableSchema
-  private def transformExpr(spec: PartSpec): Transform = spec.transform match {
-    case "bucket" => Expressions.bucket(spec.n, spec.column)
-    case "truncate" => Expressions.apply("truncate",
-      Expressions.literal(spec.n), Expressions.column(spec.column))
-  }
   override def partitioning(): Array[Transform] =
-    partSpec.map(spec => Array(transformExpr(spec))).getOrElse(Array.empty)
+    partSpec.map(spec => Array(spec.transformExpr)).getOrElse(Array.empty)
   override def capabilities(): util.Set[TableCapability] =
     if (pinned.isDefined) Set(TableCapability.BATCH_READ).asJava
     else if (versioned)
@@ -1177,6 +1172,8 @@ class AvroDirTable(path: String, tableSchema: StructType,
       //     MATCHED ROW POSITIONS; the commit swaps in O(matched)
       //     deletion-vector sidecars and rewrites ZERO data files —
       //     the only affordable shape for high-frequency CDC at 100 TB.
+      // The rewrites form one job: a refused commit deletes them.
+      val job = WriteJob(path)
       // lock spans the view-read, the scan job, and the manifest
       // write: a concurrent append committing mid-DELETE would
       // otherwise be dropped from the DELETE's manifest (lost update)
@@ -1233,7 +1230,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
             next.sortBy(_.name), AvroSnapshots.KindDelete, branch,
             expectedParent = prev.map(_.version))
           ()
-        } else if (entries.nonEmpty) {
+        } else if (entries.nonEmpty) job.guarded {
           // Manifest-stats candidate pruning (the same skip the batch
           // scan does): a file whose recorded intervals prove the
           // predicate can never be TRUE holds no deletable row — it is
@@ -1272,11 +1269,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
                       DeletionVectors.write(dirPath, existing ++ matched))))
                 }
               }
-            } else {
-              val jobId =
-                java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-              skipped ++ cowRewriteSurvivors(spark, candidates, filters, jobId)
-            }
+            } else skipped ++ cowRewriteSurvivors(spark, candidates, filters, job.id)
           AvroSnapshots.commit(path, schema,
             next.sortBy(_.name), AvroSnapshots.KindDelete, branch,
             expectedParent = prev.map(_.version))
@@ -1332,21 +1325,12 @@ class AvroDirTable(path: String, tableSchema: StructType,
         this
       }
       override def build(): Write = new Write with RequiresDistributionAndOrdering {
-        // Every batch-write job gets its own id, baked into its file
-        // names. That makes commit() able to reconcile the directory:
-        //   - a task attempt that died WITHOUT running abort() leaves a
-        //     partial file carrying this job's id but absent from the
-        //     commit messages → deleted at commit (no duplicate rows
-        //     from a retried attempt, no truncated containers);
-        //   - task ids are only unique per SparkContext, so without the
-        //     job id an append from a fresh JVM could silently
-        //     overwrite an earlier JVM's part-00000-0.avro;
-        //   - SaveMode.Overwrite truncates AT COMMIT, not at factory
-        //     creation — a failed overwrite leaves the old table
-        //     intact instead of destroying it and exposing a partial
-        //     new write.
-        private val jobId =
-          java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+        // One job per write ([[WriteJob]]: file names, reconcile,
+        // abort). SaveMode.Overwrite truncates AT COMMIT, not at
+        // factory creation — a failed overwrite leaves the old table
+        // intact instead of destroying it and exposing a partial new
+        // write.
+        private val job = WriteJob(path)
 
         // Partitioned tables CLUSTER their writes: the required
         // distribution is the partition TRANSFORM itself, which Spark
@@ -1376,7 +1360,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
           case None => Array.empty
         }
         override def requiredDistribution(): Distribution = partSpec match {
-          case Some(spec) => Distributions.clustered(Array(transformExpr(spec)))
+          case Some(spec) => Distributions.clustered(Array(spec.transformExpr))
           case None if sortSpec.isDefined => Distributions.ordered(sortOrders)
           case None => Distributions.unspecified()
         }
@@ -1385,142 +1369,111 @@ class AvroDirTable(path: String, tableSchema: StructType,
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(
               p: PhysicalWriteInfo): DataWriterFactory = {
-            new File(path).mkdirs()
             // GENERATED column expressions compile HERE (driver,
             // plan time) to bound serializable trees — executors
             // never parse SQL
-            val gen = GeneratedColumns.boundExprs(info.schema(),
-              org.apache.spark.sql.SparkSession.active)
-            partSpec match {
-              case Some(spec) =>
-                new AvroClusteredWriterFactory(path, info.schema(), jobId, spec, gen)
-              case None => new AvroWriterFactory(path, info.schema(), jobId, gen)
-            }
+            job.factory(info.schema(), partSpec, GeneratedColumns.boundExprs(
+              info.schema(), org.apache.spark.sql.SparkSession.active))
           }
-          override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val entries: Seq[(String, Option[Long], Option[String])] =
-              messages.toSeq.flatMap {
-                case AvroCommit(f, b, st) => Seq((f, b, st))
-                case AvroBucketedCommit(fs) =>
-                  fs.map { case (f, b, st) => (f, Some(b), st) }
-              }
-            val committed = entries.map(_._1).toSet
-            if (versioned) {
-              // Versioned: never delete other commits' data files — old
-              // snapshots reference them. Clean only THIS job's dead
-              // task attempts, then publish the next manifest: truncate
-              // = exactly this job's files (a replace — kind `rewrite`
-              // when a compaction is self-overwriting, so streams and
-              // the change feed skip it as dataChange=false); append =
-              // previous view plus this job's files, committed through
-              // the auto-rebasing append path (two racing appenders
-              // both land — their file sets are disjoint by job id).
-              AvroDirSource.listAllAvro(path).foreach { f =>
-                if (f.getName.contains(jobId) && !committed(f.getAbsolutePath))
-                  f.delete()
-              }
-              val specId = partSpec.map(_.specId).getOrElse(0)
-              val mine: Seq[AvroSnapshots.FileEntry] = entries.map {
-                case (f, b, st) => AvroSnapshots.FileEntry(
-                  new File(f).getName, b, specId, st, None)
-              }.sortBy(_.name)
-              if (overwriteFilters.isDefined) {
-                // REPLACE WHERE, one atomic commit: triage the head's
-                // entries by the predicate (untouched carried unread,
-                // provable full matches dropped unread, mixed files
-                // COW-rewritten keeping non-matching rows with row ids
-                // carried physically) and land the new files alongside.
-                // The lock spans the head read, the rewrite job and the
-                // manifest write — a concurrent append can't be lost.
-                // Kind `replace_where`: the change feed diffs it
-                // generically (whole-file deletes + rw-paired rewrites
-                // + inserts); plain table streams fail loudly on it.
-                // Rewrites reuse THIS job's id, so a failed commit's
-                // abort() cleans them up with the data files.
-                val filters = overwriteFilters.get
-                val sess = org.apache.spark.sql.SparkSession.active
-                AvroSnapshots.withCommitLock(path) {
-                  val prev = headSnapshot()
-                  val old = prev.map(_.entries).getOrElse(Nil)
-                  val (skipped, _, candidates) =
-                    partitionByPredicate(old, filters)
-                  val survivors = skipped ++
-                    cowRewriteSurvivors(sess, candidates, filters, jobId)
-                  AvroSnapshots.commit(path, tableSchema,
-                    (survivors ++ mine).sortBy(_.name),
-                    AvroSnapshots.KindReplaceWhere, branch,
-                    expectedParent = prev.map(_.version))
+          // Versioned: never delete other commits' data files — old
+          // snapshots reference them; only an unversioned truncate
+          // reconciles against every file on disk
+          override def commit(messages: Array[WriterCommitMessage]): Unit =
+            job.publish(messages, truncate = doTruncate && !versioned) { mine =>
+              if (versioned) {
+                // publish the next manifest: truncate = exactly this
+                // job's files (a replace — kind `rewrite` when a
+                // compaction is self-overwriting, so streams and the
+                // change feed skip it as dataChange=false); append =
+                // previous view plus this job's files, committed through
+                // the auto-rebasing append path (two racing appenders
+                // both land — their file sets are disjoint by job id).
+                if (overwriteFilters.isDefined) {
+                  // REPLACE WHERE, one atomic commit: triage the head's
+                  // entries by the predicate (untouched carried unread,
+                  // provable full matches dropped unread, mixed files
+                  // COW-rewritten keeping non-matching rows with row ids
+                  // carried physically) and land the new files alongside.
+                  // The lock spans the head read, the rewrite job and the
+                  // manifest write — a concurrent append can't be lost.
+                  // Kind `replace_where`: the change feed diffs it
+                  // generically (whole-file deletes + rw-paired rewrites
+                  // + inserts); plain table streams fail loudly on it.
+                  // Rewrites reuse THIS job's id, so a refused commit
+                  // deletes them with the data files.
+                  val filters = overwriteFilters.get
+                  val sess = org.apache.spark.sql.SparkSession.active
+                  AvroSnapshots.withCommitLock(path) {
+                    val prev = headSnapshot()
+                    val old = prev.map(_.entries).getOrElse(Nil)
+                    val (skipped, _, candidates) =
+                      partitionByPredicate(old, filters)
+                    val survivors = skipped ++
+                      cowRewriteSurvivors(sess, candidates, filters, job.id)
+                    AvroSnapshots.commit(path, tableSchema,
+                      (survivors ++ mine).sortBy(_.name),
+                      AvroSnapshots.KindReplaceWhere, branch,
+                      expectedParent = prev.map(_.version))
+                  }
+                  ()
+                } else if (dynamicOverwrite && partSpec.isDefined) {
+                  // dynamic partition overwrite: drop the old entries of
+                  // exactly the partition values the new files carry —
+                  // metadata-only, zero reads. Every old entry must be
+                  // PLACED (carry its partition value): an unplaced file
+                  // (e.g. a streaming epoch append) may hold rows of a
+                  // replaced partition, so a metadata-only drop would be
+                  // unsound — refuse loudly, compact first.
+                  AvroSnapshots.withCommitLock(path) {
+                    val prev = headSnapshot()
+                    val old = prev.map(_.entries).getOrElse(Nil)
+                    require(old.forall(_.part.isDefined),
+                      s"${name()}: dynamic overwrite needs every live file " +
+                        "placed in a partition (unplaced appends present — " +
+                        "run compact first)")
+                    val newParts = mine.flatMap(_.part).toSet
+                    val survivors =
+                      old.filterNot(e => e.part.exists(newParts.contains))
+                    AvroSnapshots.commit(path, tableSchema,
+                      (survivors ++ mine).sortBy(_.name),
+                      AvroSnapshots.KindReplaceWhere, branch,
+                      expectedParent = prev.map(_.version))
+                  }
+                  ()
+                } else if (doTruncate || dynamicOverwrite) {
+                  // dynamic overwrite of an UNpartitioned table: the
+                  // whole table is one partition — full overwrite
+                  val abs = new File(path).getAbsolutePath
+                  val basisMap = AvroDirSource.rewriteBasis.get()
+                  // a COMPACTION validates its read basis: the rewrite's
+                  // rows came from that version, and committing them over
+                  // a concurrent DML's head would silently undo the DML
+                  // while claiming dataChange=false. A plain overwrite
+                  // needs no basis — its content REPLACES whatever is
+                  // there (last-writer-wins IS the overwrite semantics).
+                  val basis =
+                    if (basisMap.containsKey(abs)) Some(basisMap.get(abs).longValue)
+                    else None
+                  val kind =
+                    if (basis.isDefined) AvroSnapshots.KindRewrite
+                    else AvroSnapshots.KindReplace
+                  AvroSnapshots.withCommitLock(path) {
+                    AvroSnapshots.commit(path, tableSchema, mine, kind, branch,
+                      expectedParent = basis)
+                  }
+                } else {
+                  AvroSnapshots.commitAppend(path, tableSchema, mine,
+                    AvroSnapshots.KindAppend, branch)
                 }
                 ()
-              } else if (dynamicOverwrite && partSpec.isDefined) {
-                // dynamic partition overwrite: drop the old entries of
-                // exactly the partition values the new files carry —
-                // metadata-only, zero reads. Every old entry must be
-                // PLACED (carry its partition value): an unplaced file
-                // (e.g. a streaming epoch append) may hold rows of a
-                // replaced partition, so a metadata-only drop would be
-                // unsound — refuse loudly, compact first.
-                AvroSnapshots.withCommitLock(path) {
-                  val prev = headSnapshot()
-                  val old = prev.map(_.entries).getOrElse(Nil)
-                  require(old.forall(_.part.isDefined),
-                    s"${name()}: dynamic overwrite needs every live file " +
-                      "placed in a partition (unplaced appends present — " +
-                      "run compact first)")
-                  val newParts = mine.flatMap(_.part).toSet
-                  val survivors =
-                    old.filterNot(e => e.part.exists(newParts.contains))
-                  AvroSnapshots.commit(path, tableSchema,
-                    (survivors ++ mine).sortBy(_.name),
-                    AvroSnapshots.KindReplaceWhere, branch,
-                    expectedParent = prev.map(_.version))
-                }
-                ()
-              } else if (doTruncate || dynamicOverwrite) {
-                // dynamic overwrite of an UNpartitioned table: the
-                // whole table is one partition — full overwrite
-                val abs = new File(path).getAbsolutePath
-                val basisMap = AvroDirSource.rewriteBasis.get()
-                // a COMPACTION validates its read basis: the rewrite's
-                // rows came from that version, and committing them over
-                // a concurrent DML's head would silently undo the DML
-                // while claiming dataChange=false. A plain overwrite
-                // needs no basis — its content REPLACES whatever is
-                // there (last-writer-wins IS the overwrite semantics).
-                val basis =
-                  if (basisMap.containsKey(abs)) Some(basisMap.get(abs).longValue)
-                  else None
-                val kind =
-                  if (basis.isDefined) AvroSnapshots.KindRewrite
-                  else AvroSnapshots.KindReplace
-                AvroSnapshots.withCommitLock(path) {
-                  AvroSnapshots.commit(path, tableSchema, mine, kind, branch,
-                    expectedParent = basis)
-                }
-              } else {
-                AvroSnapshots.commitAppend(path, tableSchema, mine,
-                  AvroSnapshots.KindAppend, branch)
-              }
-              ()
-            } else {
-              // reconcile against ALL files on disk: a truncate must also
-              // clear uncommitted streaming partials, not just the read view
-              AvroDirSource.listAllAvro(path).foreach { f =>
-                val mine = f.getName.contains(jobId)
-                val keep =
-                  if (doTruncate) committed(f.getAbsolutePath)
-                  else !mine || committed(f.getAbsolutePath)
-                if (!keep) f.delete()
-              }
-              // a truncated table has no committed epochs either
-              if (doTruncate)
+              } else if (doTruncate) {
+                // a truncated table has no committed epochs either
                 Option(new File(path).listFiles()).getOrElse(Array.empty)
                   .filter(_.getName.startsWith("_committed-e")).foreach(_.delete())
+              }
             }
-          }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            AvroDirSource.listAllAvro(path)
-              .filter(_.getName.contains(jobId)).foreach(_.delete())
+            job.abort()
         }
 
         // Streaming (exactly-once) flavor: file names are derived from
@@ -1557,21 +1510,14 @@ class AvroDirTable(path: String, tableSchema: StructType,
                 // same rows — idempotent); retained files keep their
                 // bucket placement (epoch files are legitimately
                 // unplaced).
-                val mine = messages.map(_.asInstanceOf[AvroCommit]).toSeq
-                  .map(c => AvroSnapshots.FileEntry(
-                    new File(c.file).getName, None, 0, c.stats, None))
-                  .sortBy(_.name)
-                AvroSnapshots.commitAppend(path, tableSchema, mine,
-                  AvroSnapshots.KindAppend, branch)
+                AvroSnapshots.commitAppend(path, tableSchema,
+                  WriteJob.entries(messages), AvroSnapshots.KindAppend, branch)
                 ()
               }
             }
             override def abort(epochId: Long,
-                messages: Array[WriterCommitMessage]): Unit = {
-              val prefix = f"part-e$epochId%05d-"
-              AvroDirSource.listAllAvro(path)
-                .filter(_.getName.startsWith(prefix)).foreach(_.delete())
-            }
+                messages: Array[WriterCommitMessage]): Unit =
+              WriteJob.epoch(path, epochId).abort()
           }
       }
     }
@@ -1593,6 +1539,13 @@ case class PartSpec(transform: String, n: Int, column: String,
   require(transform == "bucket" || transform == "truncate",
     s"unsupported partition transform $transform")
   require(n > 0, s"$transform width must be positive, got $n")
+  /** The transform as a V2 expression — what the table reports as its
+    * partitioning and what a write's required distribution clusters by. */
+  def transformExpr: Transform = transform match {
+    case "bucket" => Expressions.bucket(n, column)
+    case _ => Expressions.apply("truncate",
+      Expressions.literal(n), Expressions.column(column))
+  }
   /** The storage-partition value for a column value — shared by the
     * clustered writer and the V2 SQL functions so placement and SQL can
     * never disagree. */
@@ -1753,14 +1706,6 @@ case class AvroBucketGroupSplit(
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
-case class AvroCommit(file: String, bucket: Option[Long] = None,
-    stats: Option[String] = None)
-    extends WriterCommitMessage
-/** One task's per-partition-value files from a clustered write:
-  * (file, partition value, column-stats JSON). */
-case class AvroBucketedCommit(files: Seq[(String, Long, Option[String])])
-    extends WriterCommitMessage
-
 /** Decodes each container against its OWN embedded writer schema,
   * resolving required fields BY NAME with rename-alias fallback — the
   * Avro schema-resolution rule. A field absent from a file (the file
@@ -2180,70 +2125,16 @@ class AvroFileWriter(file: File, schema: StructType,
     stats.countRow()
     writer.append(rec)
   }
-  override def commit(): WriterCommitMessage = {
+  override def commit(): AvroCommit = {
     writer.close()
     if (bloom != null) BloomFilters.write(file, bloom)
-    AvroCommit(file.getAbsolutePath, None, Some(stats.toJson))
+    AvroCommit(Seq(AvroSnapshots.FileEntry(file.getName,
+      stats = Some(stats.toJson))))
   }
   override def abort(): Unit = {
     writer.close(); file.delete(); BloomFilters.delete(file); ()
   }
   override def close(): Unit = ()
-}
-
-class AvroWriterFactory(path: String, schema: StructType, jobId: String,
-    gen: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new AvroFileWriter(
-      new File(path, f"part-$jobId-$partitionId%05d-$taskId.avro"), schema, gen)
-}
-
-/** Clustered write: the incoming rows are already distributed by the
-  * partition transform (RequiresDistributionAndOrdering), so a task
-  * usually holds one or a few partition values — each gets its OWN
-  * container file (`part-<job>-b<value>-<pid>-<tid>.avro`), and the
-  * commit message carries every file's value + column stats for the
-  * manifest. The value is recomputed here with the SAME arithmetic as
-  * the catalog's V2 `bucket`/`truncate` functions ([[PartSpec]]) —
-  * write placement and SQL can never disagree. */
-class AvroClusteredWriterFactory(path: String, schema: StructType,
-    jobId: String, spec: PartSpec,
-    gen: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
-    extends DataWriterFactory {
-  private val colIdx = schema.fieldIndex(spec.column)
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val open =
-        scala.collection.mutable.Map.empty[Long, AvroFileWriter]
-      private val isInt =
-        schema.fields(colIdx).dataType == IntegerType
-      override def write(row: InternalRow): Unit = {
-        val x = if (isInt) row.getInt(colIdx).toLong else row.getLong(colIdx)
-        val b = spec.partValue(x)
-        open.getOrElseUpdate(b, new AvroFileWriter(
-          new File(path, f"part-$jobId-b$b%05d-$partitionId%05d-$taskId.avro"),
-          schema, gen)).write(row)
-      }
-      override def commit(): WriterCommitMessage =
-        AvroBucketedCommit(open.toSeq.sortBy(_._1).map { case (b, w) =>
-          val c = w.commit().asInstanceOf[AvroCommit]
-          (c.file, b, c.stats)
-        })
-      override def abort(): Unit = open.values.foreach(_.abort())
-      override def close(): Unit = ()
-    }
-}
-
-/** Streaming writers name files by (epoch, partition) ONLY — replayed
-  * epochs overwrite their own files, never duplicate them. */
-class AvroStreamingWriterFactory(path: String, schema: StructType,
-    gen: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
-    extends wstream.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new AvroFileWriter(
-      new File(path, f"part-e$epochId%05d-$partitionId%05d.avro"), schema, gen)
 }
 
 /** Version-offset streaming read of a versioned Avro table — the

@@ -135,88 +135,69 @@ class GraftDeltaOperation(path: String, tableSchema: StructType,
       private val writeSchema = StructType(info.schema().fields.filterNot(f =>
         f.name == AvroDirSource.FileColumn || f.name == AvroDirSource.PosColumn))
       override def build(): DeltaWrite = new DeltaWrite {
-        private val jobId =
-          java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+        private val job = WriteJob(path)
         override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
           override def createBatchWriterFactory(
               p: PhysicalWriteInfo): DeltaWriterFactory = {
             new File(path).mkdirs()
-            new GraftDeltaWriterFactory(path, writeSchema, jobId,
+            new GraftDeltaWriterFactory(path, writeSchema, job.id,
               GeneratedColumns.boundExprs(writeSchema,
                 org.apache.spark.sql.SparkSession.active))
           }
 
-          override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val commits = messages.map(_.asInstanceOf[GraftDeltaCommit])
-            val committed = commits.flatMap(_.insertFile.map(_._1)).toSet
-            // reconcile dead task attempts (retries/speculation)
-            AvroDirSource.listAllAvro(path).foreach { f =>
-              if (f.getName.contains(jobId) && !committed(f.getAbsolutePath))
-                f.delete()
-            }
-            val deletesByFile: Map[String, Seq[Long]] = commits.toSeq
-              .flatMap(_.deletes.toSeq)
-              .groupMapReduce(_._1)(_._2)(_ ++ _)
-            AvroSnapshots.withCommitLock(path) {
-              val basis = AvroSnapshots.head(path, branch)
-              val entries = basis.map(_.entries).getOrElse(Nil)
-              val byName = entries.map(e => e.name -> e).toMap
-              // snapshot isolation: a touched file rewritten/removed by
-              // a concurrent commit aborts (its positions are dead
-              // coordinates); concurrent dv GROWTH merges by union
-              val gone = deletesByFile.keys.filterNot(byName.contains)
-              if (gone.nonEmpty) {
-                committed.foreach(f => new File(f).delete())
-                throw new java.util.ConcurrentModificationException(
-                  s"$cmd on $path conflicts with a concurrent commit: " +
-                    s"file(s) ${gone.mkString(", ")} left the current " +
-                    "version — retry against the new table state")
-              }
-              val next: Seq[AvroSnapshots.FileEntry] = entries.flatMap { e =>
-                deletesByFile.get(e.name) match {
-                  case None => Some(e)
-                  case Some(newPos) =>
-                    val existing = e.dv
-                      .map(DeletionVectors.read(path, _)).getOrElse(Nil)
-                    val union = (existing ++ newPos).distinct
-                    val rows = e.stats.flatMap(AvroStats.rowCount)
-                    if (rows.contains(union.size.toLong)) None // fully dead
-                    else Some(e.copy(dv =
-                      Some(DeletionVectors.write(path, union))))
+          override def commit(messages: Array[WriterCommitMessage]): Unit =
+            job.publish(messages) { inserts =>
+              val deletesByFile: Map[String, Seq[Long]] = messages.toSeq
+                .flatMap(_.asInstanceOf[AvroCommit].deletes.toSeq)
+                .groupMapReduce(_._1)(_._2)(_ ++ _)
+              AvroSnapshots.withCommitLock(path) {
+                val basis = AvroSnapshots.head(path, branch)
+                val entries = basis.map(_.entries).getOrElse(Nil)
+                val byName = entries.map(e => e.name -> e).toMap
+                // snapshot isolation: a touched file rewritten/removed by
+                // a concurrent commit aborts (its positions are dead
+                // coordinates); concurrent dv GROWTH merges by union
+                val gone = deletesByFile.keys.filterNot(byName.contains)
+                if (gone.nonEmpty)
+                  throw new java.util.ConcurrentModificationException(
+                    s"$cmd on $path conflicts with a concurrent commit: " +
+                      s"file(s) ${gone.mkString(", ")} left the current " +
+                      "version — retry against the new table state")
+                val next: Seq[AvroSnapshots.FileEntry] = entries.flatMap { e =>
+                  deletesByFile.get(e.name) match {
+                    case None => Some(e)
+                    case Some(newPos) =>
+                      val existing = e.dv
+                        .map(DeletionVectors.read(path, _)).getOrElse(Nil)
+                      val union = (existing ++ newPos).distinct
+                      val rows = e.stats.flatMap(AvroStats.rowCount)
+                      if (rows.contains(union.size.toLong)) None // fully dead
+                      else Some(e.copy(dv =
+                        Some(DeletionVectors.write(path, union))))
+                  }
                 }
+                // UPDATE's delta commit is tagged `update`: its dv deltas
+                // and insert files are the same logical rows' pre/post
+                // images, and the change feed pairs them as such
+                val kind =
+                  if (cmd == RowLevelOperation.Command.UPDATE)
+                    AvroSnapshots.KindUpdate
+                  else AvroSnapshots.KindReplace
+                AvroSnapshots.commit(path, tableSchema,
+                  (next ++ inserts).sortBy(_.name),
+                  kind, branch,
+                  expectedParent = basis.map(_.version))
               }
-              val inserts = commits.toSeq.flatMap(_.insertFile).map {
-                case (f, st) => AvroSnapshots.FileEntry(
-                  new File(f).getName, None, 0, st, None)
-              }
-              // UPDATE's delta commit is tagged `update`: its dv deltas
-              // and insert files are the same logical rows' pre/post
-              // images, and the change feed pairs them as such
-              val kind =
-                if (cmd == RowLevelOperation.Command.UPDATE)
-                  AvroSnapshots.KindUpdate
-                else AvroSnapshots.KindReplace
-              AvroSnapshots.commit(path, tableSchema,
-                (next ++ inserts).sortBy(_.name),
-                kind, branch,
-                expectedParent = basis.map(_.version))
+              ()
             }
-            ()
-          }
 
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            AvroDirSource.listAllAvro(path)
-              .filter(_.getName.contains(jobId)).foreach(_.delete())
+            job.abort()
         }
       }
     }
   }
 }
-
-/** One task's delta: deleted (file → physical positions) plus at most
-  * one insert file with its stats. */
-case class GraftDeltaCommit(deletes: Map[String, Seq[Long]],
-    insertFile: Option[(String, Option[String])]) extends WriterCommitMessage
 
 class GraftDeltaWriterFactory(path: String, dataSchema: StructType,
     jobId: String,
@@ -228,7 +209,6 @@ class GraftDeltaWriterFactory(path: String, dataSchema: StructType,
       private val deletes =
         scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
       private var insertWriter: AvroFileWriter = _
-      private var insertPath: String = _
 
       override def delete(meta: InternalRow, id: InternalRow): Unit = {
         // id = the rowId projection: (_file STRING, _pos BIGINT)
@@ -237,12 +217,10 @@ class GraftDeltaWriterFactory(path: String, dataSchema: StructType,
           scala.collection.mutable.ArrayBuffer.empty[Long]) += id.getLong(1)
       }
       override def insert(row: InternalRow): Unit = {
-        if (insertWriter == null) {
-          val f = new File(path,
-            f"part-$jobId-d$partitionId%05d-$taskId.avro")
-          insertPath = f.getAbsolutePath
-          insertWriter = new AvroFileWriter(f, dataSchema, gen)
-        }
+        if (insertWriter == null)
+          insertWriter = new AvroFileWriter(
+            WriteJob.dataFile(path, jobId, "d", partitionId, taskId),
+            dataSchema, gen)
         insertWriter.write(row)
       }
       override def update(meta: InternalRow, id: InternalRow,
@@ -250,13 +228,11 @@ class GraftDeltaWriterFactory(path: String, dataSchema: StructType,
         throw new IllegalStateException(
           "updates are represented as delete+insert")
 
-      override def commit(): WriterCommitMessage = {
-        val ins = Option(insertWriter).map { w =>
-          val c = w.commit().asInstanceOf[AvroCommit]
-          (insertPath, c.stats)
-        }
-        GraftDeltaCommit(deletes.view.mapValues(_.toSeq).toMap, ins)
-      }
+      // one task's delta: at most one insert file, plus the deleted
+      // physical positions per file
+      override def commit(): AvroCommit =
+        AvroCommit(Option(insertWriter).toSeq.flatMap(_.commit().files),
+          deletes.view.mapValues(_.toSeq).toMap)
       override def abort(): Unit = if (insertWriter != null) insertWriter.abort()
       override def close(): Unit = ()
     }

@@ -65,6 +65,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def tableDir(ident: Identifier): File =
     new File(nsDir(ident.namespace), ident.name)
   private def schemaFile(dir: File): File = new File(dir, "_schema.json")
+  private def readSchema(dir: File): StructType =
+    DataType.fromJson(new String(Files.readAllBytes(schemaFile(dir).toPath),
+      StandardCharsets.UTF_8)).asInstanceOf[StructType]
+  /** The table's back-quoted `catalog`.`ns`.`name`, for SQL text. */
+  private def quoted(ident: Identifier): String =
+    (catalogName +: ident.namespace.toSeq :+ ident.name)
+      .map(p => s"`$p`").mkString(".")
   private def isTable(dir: File): Boolean = schemaFile(dir).exists()
   private def deleteRec(f: File): Unit = graft.ops.GraftTmp.deleteRec(f)
 
@@ -132,9 +139,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       n: Int, column: String): Int = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     require(schema.fieldNames.exists(_.equalsIgnoreCase(column)),
       s"partition column $column is not a column of ${ident.name}")
     AvroSnapshots.withCommitLock(dir.getPath) {
@@ -206,9 +211,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   def setSortOrder(ident: Identifier, column: String): Unit = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     // case-insensitive like every other resolution path; persist the
     // schema's canonical spelling so later guards compare exactly
     def canonical(c: String): String = schema.fields.map(_.name)
@@ -311,9 +314,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       new File(dir, BloomFilters.ColsFile).delete()
       return
     }
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     val canonical = cols.map { c =>
       val fld = schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -336,9 +337,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       typ: String): Unit = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     val fld = schema.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(
         s"shred column $column is not a column of ${ident.name}"))
@@ -358,11 +357,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val mvDir = tableDir(mvIdent)
     if (!isTable(baseDir)) throw new NoSuchTableException(baseIdent)
     if (!isTable(mvDir)) throw new NoSuchTableException(mvIdent)
-    def schemaOf(d: File) = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(d).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
-    val baseSchema = schemaOf(baseDir)
-    val mvSchema = schemaOf(mvDir)
+    val baseSchema = readSchema(baseDir)
+    val mvSchema = readSchema(mvDir)
     def requireCol(s: StructType, c: String, who: String): Unit =
       require(s.fields.exists(_.name.equalsIgnoreCase(c)),
         s"register_mv: $who has no column '$c'")
@@ -424,9 +420,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val baseDir = tableDir(baseIdent)
         if (isTable(baseDir)) {
           if (ident.name.equalsIgnoreCase(AvroChangeFeed.ChangesSuffix)) {
-            val baseSchema = DataType.fromJson(new String(
-              Files.readAllBytes(schemaFile(baseDir).toPath),
-              StandardCharsets.UTF_8)).asInstanceOf[StructType]
+            val baseSchema = readSchema(baseDir)
             return new AvroChangeFeedTable(baseDir.getPath, baseSchema)
           }
           // `<ns>.<table>.snapshots` / `.files` / `.refs` — Iceberg-
@@ -543,8 +537,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     def filesNow() = AvroSnapshots.head(dir.getPath, sessionBranch(dir.getPath))
       .map(_.files.size).getOrElse(0)
     val before = filesNow()
-    val q = (catalogName +: ident.namespace.toSeq :+ ident.name)
-      .map(p => s"`$p`").mkString(".")
+    val q = quoted(ident)
     // tag the self-overwrite as a REWRITE (dataChange=false): same
     // rows, new files — streams and the change feed skip the commit.
     // The recorded head version is the rewrite's READ BASIS: the
@@ -568,6 +561,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val after = filesNow()
     (before, after)
   }
+
+  /** The driver-run write of `job` (CDC upserts, compaction rewrites):
+    * one writer per non-empty partition of `rows`, its files indexed by
+    * the partition index plus `pidOffset`; returns the written entries.
+    * A failed run deletes every file of the job. */
+  private def runWriteJob(job: WriteJob,
+      rows: org.apache.spark.rdd.RDD[InternalRow],
+      factory: org.apache.spark.sql.connector.write.DataWriterFactory,
+      pidOffset: Int = 0): Seq[AvroSnapshots.FileEntry] =
+    job.guarded(WriteJob.entries(rows.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val w = factory.createWriter(pidOffset + pid, pid.toLong)
+        var ok = false
+        try { it.foreach(w.write); ok = true }
+        finally if (!ok) w.abort()
+        Iterator(w.commit())
+      }
+    }.collect()))
 
   /** Apply one CDC batch ATOMICALLY — the streaming-upsert write shape
     * (Iceberg v2's equality-delete upsert, Flink's CDC sink): the
@@ -612,9 +624,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(loadEqualityMode(dir),
       s"${ident.name}: apply_cdc requires delete mode " +
         "merge-on-read-equality (CALL system.set_delete_mode first)")
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     val keyFields = keyCol.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
       schema.fields.find(_.name.equalsIgnoreCase(c))
         .getOrElse(throw new IllegalArgumentException(
@@ -668,47 +678,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val ordered = src.where(lower(col(opCol)) === "upsert")
       .select(schema.fields.toSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
-    val jobId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val dirPath = dir.getPath
     // a PARTITIONED table's CDC files land through the clustered writer
     // so their placement is recorded (grouped/SPJ scans keep working
     // under a CDC feed); rows are not pre-distributed by the transform,
     // so a task may cut one file per partition value it holds — batch-
-    // sized, and compaction re-clusters
-    val spec = loadPartSpec(dir)
-    val cdcGen = GeneratedColumns.boundExprs(schema, session)
-    val factory: org.apache.spark.sql.connector.write.DataWriterFactory =
-      spec match {
-        case Some(sp) => new AvroClusteredWriterFactory(dirPath, schema, jobId, sp, cdcGen)
-        case None     => new AvroWriterFactory(dirPath, schema, jobId, cdcGen)
-      }
-    val written: Array[(String, Option[Long], Option[String])] =
-      try {
-        ordered.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val w = factory.createWriter(pid, pid.toLong)
-            var ok = false
-            try { it.foreach(w.write); ok = true }
-            finally if (!ok) w.abort()
-            w.commit() match {
-              case AvroCommit(f, _, st) =>
-                Iterator((new File(f).getName, None: Option[Long], st))
-              case AvroBucketedCommit(fs) => fs.iterator.map {
-                case (f, b, st) => (new File(f).getName, Option(b), st)
-              }
-              case other => throw new IllegalStateException(s"unexpected $other")
-            }
-          }
-        }.collect()
-      } catch {
-        case e: Throwable =>
-          // failed job: reclaim this job's partials — nothing references
-          // them, so the table is untouched (the apply is all-or-nothing)
-          AvroDirSource.listAllAvro(dirPath)
-            .filter(_.getName.contains(jobId)).foreach(_.delete())
-          throw e
-      }
+    // sized, and compaction re-clusters. A failed write or a refused
+    // commit reclaims the job's files, so the apply is all-or-nothing.
+    val job = WriteJob(dirPath)
+    val written = runWriteJob(job, ordered.queryExecution.toRdd,
+      job.factory(schema, loadPartSpec(dir),
+        GeneratedColumns.boundExprs(schema, session)))
     def resolve(st: Map[String, AvroStats.ColStats])(
         a: String): Option[AvroStats.ColStats] =
       schema.fields.find(_.name.equalsIgnoreCase(a)).flatMap { fld =>
@@ -720,9 +700,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     lazy val eqName: String = EqualityDeletes.writeMulti(
       dirPath, keyFields.map(_.name), kinds, keys.toSeq)
     var attempt = 0
-    while (true) {
+    var applied: Option[(Long, Long, Long)] = None
+    job.guarded(while (applied.isEmpty) {
       try {
-        return AvroSnapshots.withCommitLock(dirPath) {
+        applied = Some(AvroSnapshots.withCommitLock(dirPath) {
           val branch = sessionBranch(dirPath)
           val prev = AvroSnapshots.head(dirPath, branch)
           val entries = prev.map(_.entries).getOrElse(Nil)
@@ -766,15 +747,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               else entries.map(e =>
                 if (touched(e.name)) e.copy(eq = e.eq :+ eqName) else e)
             }
-          val newEntries = written.map { case (n, b, st) =>
-            AvroSnapshots.FileEntry(n, b,
-              b.flatMap(_ => spec.map(_.specId)).getOrElse(0), st, None)
-          }
           val v = AvroSnapshots.commit(dirPath, schema,
-            (attached ++ newEntries).sortBy(_.name), AvroSnapshots.KindCdc,
+            (attached ++ written).sortBy(_.name), AvroSnapshots.KindCdc,
             branch, expectedParent = prev.map(_.version))
           (v, nUpserts, keys.length.toLong - nUpserts)
-        }
+        })
       } catch {
         case e: java.util.ConcurrentModificationException =>
           // a cross-JVM writer landed between our basis read and the
@@ -786,8 +763,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           if (attempt >= 20) throw e
           Thread.sleep(5L * attempt)
       }
-    }
-    throw new IllegalStateException("unreachable")
+    })
+    applied.get
   }
 
   /** Newest value of commit property `key` on the table's main lineage
@@ -826,9 +803,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dirPath = dir.getPath
     val branch = sessionBranch(dirPath)
     val head = AvroSnapshots.head(dirPath, branch).getOrElse(return (0, 0))
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     def isDebt(e: AvroSnapshots.FileEntry): Boolean =
       e.dv.isDefined || e.eq.nonEmpty ||
         e.stats.flatMap(AvroStats.rowCount).forall(_ < minRows)
@@ -840,8 +815,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           candidates.head.eq.isEmpty))
       return (0, head.entries.size)
     val names = candidates.map(_.name)
-    val q = (catalogName +: ident.namespace.toSeq :+ ident.name)
-      .map(p => s"`$p`").mkString(".")
+    val q = quoted(ident)
     // row lineage AND row tracking ride the rewrite: `_row_id` and
     // `_last_updated_version` (derived or physical) are selected
     // alongside the data columns and written back as physical columns,
@@ -856,53 +830,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         org.apache.spark.sql.types.LongType, nullable = true) :+
       org.apache.spark.sql.types.StructField(AvroDirSource.LuvColumn,
         org.apache.spark.sql.types.LongType, nullable = true))
-    val jobId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val spec = loadPartSpec(dir)
-    val factory: org.apache.spark.sql.connector.write.DataWriterFactory =
-      spec match {
-        case Some(sp) => new AvroClusteredWriterFactory(dirPath, writeSchema, jobId, sp)
-        case None     => new AvroWriterFactory(dirPath, writeSchema, jobId)
-      }
-    val written: Array[(String, Option[Long], Option[String])] =
-      try {
-        // the debt COALESCES: one writer task per job (binpack target =
-        // one healthy file per partition value), fed by however many
-        // small files the scan planned
-        src.coalesce(1).queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val w = factory.createWriter(pid, pid.toLong)
-            var ok = false
-            try { it.foreach(w.write); ok = true }
-            finally if (!ok) w.abort()
-            w.commit() match {
-              case AvroCommit(f, _, st) =>
-                Iterator((new File(f).getName, None: Option[Long], st))
-              case AvroBucketedCommit(fs) => fs.iterator.map {
-                case (f, b, st) => (new File(f).getName, Option(b), st)
-              }
-              case other => throw new IllegalStateException(s"unexpected $other")
-            }
-          }
-        }.collect()
-      } catch {
-        case e: Throwable =>
-          AvroDirSource.listAllAvro(dirPath)
-            .filter(_.getName.contains(jobId)).foreach(_.delete())
-          throw e
-      }
-    val newEntries = written.map { case (n, b, st) =>
-      AvroSnapshots.FileEntry(n, b,
-        b.flatMap(_ => spec.map(_.specId)).getOrElse(0), st, None)
-    }
+    // the debt COALESCES: one writer task per job (binpack target =
+    // one healthy file per partition value), fed by however many
+    // small files the scan planned
+    val job = WriteJob(dirPath)
+    val newEntries = runWriteJob(job, src.coalesce(1).queryExecution.toRdd,
+      job.factory(writeSchema, loadPartSpec(dir), Nil))
     val dropped = names.toSet
-    AvroSnapshots.withCommitLock(dirPath) {
+    job.guarded(AvroSnapshots.withCommitLock(dirPath) {
       AvroSnapshots.commit(dirPath, schema,
         (head.entries.filterNot(e => dropped(e.name)) ++ newEntries)
           .sortBy(_.name),
         AvroSnapshots.KindRewrite, branch,
         expectedParent = Some(head.version))
-    }
+    })
     (candidates.size,
       head.entries.size - candidates.size + newEntries.length)
   }
@@ -954,9 +895,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val sortSpec = loadSortSpec(dir).getOrElse(throw new IllegalStateException(
       s"${ident.name} has no sort order — CALL set_sort_order first"))
     val head = AvroSnapshots.head(dirPath, branch).getOrElse(return (0, 0))
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     // the cluster-key hull resolver: the z-prefix shadow for z tables,
     // the leading sort column (rename-alias-chained, type-coerced) for
     // plain sorts. `keyEntry` distinguishes "entry absent" (a rewrite
@@ -1025,16 +964,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       keyless.foreach(e => dirtyGroups += ((Seq(e), specId, part)))
     }
     if (dirtyGroups.isEmpty) return (0, head.entries.size)
-    val q = (catalogName +: ident.namespace.toSeq :+ ident.name)
-      .map(p => s"`$p`").mkString(".")
+    val q = quoted(ident)
     val writeSchema = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField(AvroDirSource.RowIdColumn,
         org.apache.spark.sql.types.LongType, nullable = true) :+
       org.apache.spark.sql.types.StructField(AvroDirSource.LuvColumn,
         org.apache.spark.sql.types.LongType, nullable = true))
-    val jobId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val factory: org.apache.spark.sql.connector.write.DataWriterFactory =
-      new AvroWriterFactory(dirPath, writeSchema, jobId)
+    val job = WriteJob(dirPath)
+    val factory = job.factory(writeSchema, None, Nil)
     // z rewrite ordering: the deterministic z-prefix of the z columns
     // (maintenance path, not a hot loop — a udf is fine); plain sorts
     // order by their columns directly
@@ -1054,10 +991,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         SortSpec.zPrefixOf(keys)
       }
     })
-    val written = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Option[String], Int, Option[Long])]
-    try {
-      dirtyGroups.zipWithIndex.foreach { case ((group, specId, part), gi) =>
+    val newEntries = dirtyGroups.toSeq.zipWithIndex.flatMap {
+      case ((group, specId, part), gi) =>
         val names = group.map(_.name)
         // row lineage + row tracking ride the rewrite (physical
         // columns), so re-clustered rows keep ids and stamps
@@ -1077,52 +1012,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             base.repartitionByRange(math.max(group.size, 1),
                 sortSpec.columns.map(col): _*)
               .sortWithinPartitions(sortSpec.columns.map(col): _*)
-        written ++= src.queryExecution.toRdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            if (!it.hasNext) Iterator.empty
-            else {
-              val w = factory.createWriter(gi * 100000 + pid, pid.toLong)
-              var ok = false
-              try { it.foreach(w.write); ok = true }
-              finally if (!ok) w.abort()
-              w.commit() match {
-                case AvroCommit(f, _, st) =>
-                  Iterator((new File(f).getName, st))
-                case other =>
-                  throw new IllegalStateException(s"unexpected $other")
-              }
-            }
-          }.collect().map { case (n, st) => (n, st, specId, part) }
-      }
-    } catch {
-      case e: Throwable =>
-        AvroDirSource.listAllAvro(dirPath)
-          .filter(_.getName.contains(jobId)).foreach(_.delete())
-        throw e
+        // group gi's files are indexed from gi * 100000, so names stay
+        // unique across the groups of this one job. Rewrite outputs
+        // inherit their group's placement: every input row of a
+        // (spec, part) group is of that partition value, so the
+        // metadata-level placement is truthful and SPJ keeps working
+        runWriteJob(job, src.queryExecution.toRdd, factory, gi * 100000)
+          .map(_.copy(part = part, specId = specId))
     }
-    // rewrite outputs inherit their group's placement: every input row
-    // of a (spec, part) group is of that partition value, so the
-    // metadata-level placement is truthful and SPJ keeps working
-    val newEntries = written.map { case (n, st, specId, part) =>
-      AvroSnapshots.FileEntry(n, part, specId, st, None)
-    }.toSeq
     val dropped = dirtyGroups.flatMap(_._1).map(_.name).toSet
-    // commit failure (e.g. expectedParent mismatch from a concurrent
-    // commit) must not leak the freshly written jobId files as orphans
-    try {
-      AvroSnapshots.withCommitLock(dirPath) {
-        AvroSnapshots.commit(dirPath, schema,
-          (head.entries.filterNot(e => dropped(e.name)) ++ newEntries)
-            .sortBy(_.name),
-          AvroSnapshots.KindRewrite, branch,
-          expectedParent = Some(head.version))
-      }
-    } catch {
-      case e: Throwable =>
-        AvroDirSource.listAllAvro(dirPath)
-          .filter(_.getName.contains(jobId)).foreach(_.delete())
-        throw e
-    }
+    job.guarded(AvroSnapshots.withCommitLock(dirPath) {
+      AvroSnapshots.commit(dirPath, schema,
+        (head.entries.filterNot(e => dropped(e.name)) ++ newEntries)
+          .sortBy(_.name),
+        AvroSnapshots.KindRewrite, branch,
+        expectedParent = Some(head.version))
+    })
     (dropped.size, head.entries.size - dropped.size + newEntries.length)
   }
 
@@ -1145,10 +1050,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       df: org.apache.spark.sql.DataFrame): Unit = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    def tableCols: Seq[StructField] =
-      DataType.fromJson(new String(
-        Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-        .asInstanceOf[StructType].fields.toSeq
+    def tableCols: Seq[StructField] = readSchema(dir).fields.toSeq
     val newCols = df.schema.fields.filterNot(f =>
       tableCols.exists(_.name.equalsIgnoreCase(f.name)))
     if (newCols.nonEmpty)
@@ -1161,9 +1063,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           .cast(f.dataType).as(f.name)
       }
     }: _*)
-    aligned.writeTo(
-      (name() +: ident.namespace().toSeq :+ ident.name())
-        .map(p => s"`$p`").mkString(".")).append()
+    aligned.writeTo(quoted(ident)).append()
   }
 
   /** Live data-file count at the current main head — O(manifest). */
@@ -1187,9 +1087,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       predicateSql: String, session: org.apache.spark.sql.SparkSession): Long = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val schema = readSchema(dir)
     declareCheck(dir, ident, schema, name, predicateSql, session)
     AvroSnapshots.withCommitLock(dir.getPath) {
       val head = AvroSnapshots.head(dir.getPath, sessionBranch(dir.getPath))
@@ -1206,8 +1104,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def declareCheck(dir: File, ident: Identifier, schema: StructType,
       name: String, predicateSql: String,
       session: org.apache.spark.sql.SparkSession): Unit = {
-    val q = (catalogName +: ident.namespace.toSeq :+ ident.name)
-      .map(p => s"`$p`").mkString(".")
+    val q = quoted(ident)
     // resolve through the REAL analyzer against the real relation, then
     // translate to the engine-neutral DSv2 filter tree the write-time
     // evaluator executes
@@ -1282,9 +1179,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"no CHECK constraint $name on ${ident.name}")
       CheckConstraints.store(dir.getPath,
         existing.filterNot(_.name == name), info.filterNot(_.name == name))
-      val schema = DataType.fromJson(new String(
-        Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-        .asInstanceOf[StructType]
+      val schema = readSchema(dir)
       val head = AvroSnapshots.head(dir.getPath, sessionBranch(dir.getPath))
       AvroSnapshots.commit(dir.getPath, schema,
         head.map(_.entries).getOrElse(Nil), AvroSnapshots.KindAlter,
@@ -1653,9 +1548,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // concurrent ALTER basing its fold on the same starting schema
     // would silently drop this one's changes otherwise
     AvroSnapshots.withCommitLock(dir.getPath) {
-    val current = DataType.fromJson(new String(
-      Files.readAllBytes(schemaFile(dir).toPath), StandardCharsets.UTF_8))
-      .asInstanceOf[StructType]
+    val current = readSchema(dir)
     def topLevel(names: Array[String], what: String): String = {
       if (names.length != 1) throw new UnsupportedOperationException(
         s"$what: nested fields are not supported by this catalog")

@@ -158,76 +158,58 @@ class GraftRowLevelOperation(path: String, tableSchema: StructType,
     }
     new WriteBuilder {
       override def build(): Write = new Write {
-        private val jobId =
-          java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+        private val job = WriteJob(path)
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(
               p: PhysicalWriteInfo): DataWriterFactory =
             new LineageMergingWriterFactory(
-              new AvroWriterFactory(path, writeSchema, jobId,
-                // UPDATE/MERGE recompute GENERATED columns: a SET on a
-                // source column must re-derive its dependents
-                GeneratedColumns.boundExprs(writeSchema,
-                  org.apache.spark.sql.SparkSession.active)), path,
+              // UPDATE/MERGE recompute GENERATED columns: a SET on a
+              // source column must re-derive its dependents
+              job.factory(writeSchema, None, GeneratedColumns.boundExprs(
+                writeSchema, org.apache.spark.sql.SparkSession.active)),
               metaIdOrdinal)
-          override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val commits = messages.map(_.asInstanceOf[AvroCommit])
-            val committed = commits.map(_.file).toSet
-            val newFiles = committed.map(new File(_).getName).toSeq.sorted
-            val newStats = commits.flatMap(c =>
-              c.stats.map(new File(c.file).getName -> _)).toMap
-            val replaced = scannedFiles.getOrElse(throw new IllegalStateException(
-              "row-level write committed before its scan planned — " +
-                "cannot determine which groups to replace"))
-            // reconcile dead task attempts: a retried/speculative task
-            // that died without abort() leaves a this-job file absent
-            // from the commit messages — duplicate rows if kept
-            AvroDirSource.listAllAvro(path).foreach { f =>
-              if (f.getName.contains(jobId) && !committed(f.getAbsolutePath))
-                f.delete()
-            }
-            if (versioned) {
-              AvroSnapshots.withCommitLock(path) {
-                val basis = AvroSnapshots.head(path, branch)
-                val view = basis.map(_.files).getOrElse(currentView())
-                // Copy-on-write conflict validation (the check Iceberg's
-                // commit does, ADVICE r13): the replacement row set was
-                // computed FROM the scanned groups — if any of them has
-                // left the view since (a concurrent UPDATE/DELETE/
-                // overwrite rewrote it), publishing our rewrite would
-                // resurrect its rows NEXT TO the winner's rewrite of the
-                // same rows. Fail loudly; the caller retries against the
-                // new table state. Our already-written files are deleted
-                // (no manifest will ever reference them).
-                val gone = replaced.filterNot(view.contains)
-                if (gone.nonEmpty) {
-                  newFiles.foreach(n => new File(path, n).delete())
-                  throw new java.util.ConcurrentModificationException(
-                    s"$cmd on $path conflicts with a concurrent commit: " +
-                      s"scanned group(s) ${gone.mkString(", ")} no longer " +
-                      "in the current version — retry the operation")
+          override def commit(messages: Array[WriterCommitMessage]): Unit =
+            job.publish(messages) { written =>
+              val replaced = scannedFiles.getOrElse(throw new IllegalStateException(
+                "row-level write committed before its scan planned — " +
+                  "cannot determine which groups to replace"))
+              if (versioned) {
+                AvroSnapshots.withCommitLock(path) {
+                  val basis = AvroSnapshots.head(path, branch)
+                  val view = basis.map(_.files).getOrElse(currentView())
+                  // Copy-on-write conflict validation (the check Iceberg's
+                  // commit does, ADVICE r13): the replacement row set was
+                  // computed FROM the scanned groups — if any of them has
+                  // left the view since (a concurrent UPDATE/DELETE/
+                  // overwrite rewrote it), publishing our rewrite would
+                  // resurrect its rows NEXT TO the winner's rewrite of the
+                  // same rows. Fail loudly; the caller retries against the
+                  // new table state; the refused commit deletes our
+                  // already-written files (no manifest will reference them).
+                  val gone = replaced.filterNot(view.contains)
+                  if (gone.nonEmpty)
+                    throw new java.util.ConcurrentModificationException(
+                      s"$cmd on $path conflicts with a concurrent commit: " +
+                        s"scanned group(s) ${gone.mkString(", ")} no longer " +
+                        "in the current version — retry the operation")
+                  // retained files keep their full entries (placement,
+                  // stats, deletion vectors); the rewrite files are
+                  // unclustered (a bucketed table's scan soundly
+                  // downgrades to ungrouped until a clustered rewrite)
+                  val retained = basis.map(_.entries).getOrElse(currentEntries())
+                    .filterNot(e => replaced.contains(e.name))
+                  val next = (retained ++ written).sortBy(_.name)
+                  AvroSnapshots.commit(path, tableSchema, next,
+                    AvroSnapshots.KindReplace, branch,
+                    expectedParent = basis.map(_.version))
                 }
-                // retained files keep their full entries (placement,
-                // stats, deletion vectors); the rewrite files are
-                // unclustered (a bucketed table's scan soundly
-                // downgrades to ungrouped until a clustered rewrite)
-                val retained = basis.map(_.entries).getOrElse(currentEntries())
-                  .filterNot(e => replaced.contains(e.name))
-                val next = (retained ++ newFiles.map(n =>
-                  AvroSnapshots.FileEntry(n, None, 0, newStats.get(n), None)))
-                  .sortBy(_.name)
-                AvroSnapshots.commit(path, tableSchema, next,
-                  AvroSnapshots.KindReplace, branch,
-                  expectedParent = basis.map(_.version))
+                ()
+              } else {
+                replaced.foreach(n => new File(path, n).delete())
               }
-              ()
-            } else {
-              replaced.foreach(n => new File(path, n).delete())
             }
-          }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            AvroDirSource.listAllAvro(path)
-              .filter(_.getName.contains(jobId)).foreach(_.delete())
+            job.abort()
         }
       }
     }
@@ -250,13 +232,11 @@ class GraftRowLevelOperation(path: String, tableSchema: StructType,
   * range, the sound fallback. */
 private[sources] class LineageMergingWriterFactory(
     inner: org.apache.spark.sql.connector.write.DataWriterFactory,
-    path: String,
     metaIdOrdinal: Option[Option[Int]] = None)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[
         org.apache.spark.sql.catalyst.InternalRow] = {
-    new File(path).mkdirs()
     val w = inner.createWriter(partitionId, taskId)
     new org.apache.spark.sql.connector.write.DataWriter[
         org.apache.spark.sql.catalyst.InternalRow] {

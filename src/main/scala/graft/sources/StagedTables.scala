@@ -5,10 +5,9 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, SupportsWrite, TableCapability}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
@@ -29,7 +28,8 @@ import org.apache.spark.sql.types.StructType
   *     switch from the old definition to the new atomically, and the
   *     replaced generation stays time-travelable (REPLACE is just one
   *     more version — nothing is deleted).
-  *   - ABORT deletes exactly this job's staged files; a staged CREATE
+  *   - ABORT — of the write job or of the staged changes — deletes
+  *     every file of this job ([[WriteJob.abort]]); a staged CREATE
   *     also removes the table directory it opened. A process that died
   *     between write and commit leaves only unreferenced files —
   *     `remove_orphan_files` reclaims them.
@@ -44,8 +44,7 @@ private[sources] class GraftStagedTable(path: String, ident: Identifier,
     commitFn: Seq[AvroSnapshots.FileEntry] => Unit)
     extends StagedTable with SupportsWrite {
 
-  private val jobId =
-    java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+  private val job = WriteJob(path)
   @volatile private var staged: Seq[AvroSnapshots.FileEntry] = Nil
 
   override def name(): String = s"graft_staged(${ident.toString})"
@@ -59,50 +58,19 @@ private[sources] class GraftStagedTable(path: String, ident: Identifier,
       // truncate-vs-append is moot while staged
       override def truncate(): WriteBuilder = this
       override def build(): Write = new Write with RequiresDistributionAndOrdering {
-        override def requiredDistribution(): Distribution = spec match {
-          case Some(sp) => Distributions.clustered(Array(sp.transform match {
-            case "bucket" => Expressions.bucket(sp.n, sp.column)
-            case _ => Expressions.apply("truncate",
-              Expressions.literal(sp.n), Expressions.column(sp.column))
-          }))
-          case None => Distributions.unspecified()
-        }
+        override def requiredDistribution(): Distribution =
+          spec.map(sp => Distributions.clustered(Array(sp.transformExpr)))
+            .getOrElse(Distributions.unspecified())
         override def requiredOrdering(): Array[SortOrder] = Array.empty
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(
-              p: PhysicalWriteInfo): DataWriterFactory = {
-            new File(path).mkdirs()
-            spec match {
-              case Some(sp) =>
-                new AvroClusteredWriterFactory(path, info.schema(), jobId, sp,
-                  GeneratedColumns.boundExprs(info.schema(),
-                    org.apache.spark.sql.SparkSession.active))
-              case None => new AvroWriterFactory(path, info.schema(), jobId,
-                GeneratedColumns.boundExprs(info.schema(),
-                  org.apache.spark.sql.SparkSession.active))
-            }
-          }
-          override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            val entries: Seq[(String, Option[Long], Option[String])] =
-              messages.toSeq.flatMap {
-                case AvroCommit(f, b, st) => Seq((f, b, st))
-                case AvroBucketedCommit(fs) =>
-                  fs.map { case (f, b, st) => (f, Some(b), st) }
-              }
-            val committed = entries.map(_._1).toSet
-            // reconcile dead task attempts (retry/speculation partials)
-            AvroDirSource.listAllAvro(path).foreach { f =>
-              if (f.getName.contains(jobId) && !committed(f.getAbsolutePath))
-                f.delete()
-            }
-            val specId = spec.map(_.specId).getOrElse(0)
-            staged = entries.map { case (f, b, st) =>
-              AvroSnapshots.FileEntry(new File(f).getName, b, specId, st, None)
-            }.sortBy(_.name)
-          }
+              p: PhysicalWriteInfo): DataWriterFactory =
+            job.factory(info.schema(), spec, GeneratedColumns.boundExprs(
+              info.schema(), org.apache.spark.sql.SparkSession.active))
+          override def commit(messages: Array[WriterCommitMessage]): Unit =
+            job.publish(messages)(entries => staged = entries)
           override def abort(messages: Array[WriterCommitMessage]): Unit =
-            AvroDirSource.listAllAvro(path)
-              .filter(_.getName.contains(jobId)).foreach(_.delete())
+            job.abort()
         }
       }
     }
@@ -110,8 +78,7 @@ private[sources] class GraftStagedTable(path: String, ident: Identifier,
   override def commitStagedChanges(): Unit = commitFn(staged)
 
   override def abortStagedChanges(): Unit = {
-    AvroDirSource.listAllAvro(path)
-      .filter(_.getName.contains(jobId)).foreach(_.delete())
+    job.abort()
     // a staged CREATE opened the directory itself; without a schema
     // sidecar it would linger looking like an empty nested namespace
     val dir = new File(path)

@@ -11,8 +11,11 @@ Comparison is driver-faithful: column names are sorted, then rows are
 VALUE-SORTED on both sides before comparing (the driver pandas-
 sort_values every column before hashing), and floats compared
 bit-exactly (struct.pack), which is stricter than any plausible driver
-hash. Outputs containing complex-typed values (lists/structs/maps) are
-REJECTED up front: the driver's comparator crashes on them
+hash. A NULL in a DECIMAL column of the oracle result compares as NaN:
+the driver reads the oracle through DuckDB's `.df()`, which turns it
+into a float64 NaN, while the engine's parquet NULL reads as None — so
+such a cell fails here as it does on the driver. Outputs containing
+complex-typed values (lists/structs/maps) are REJECTED up front: the driver's comparator crashes on them
 (`TypeError: unhashable type: 'numpy.ndarray'`, see round-10
 fn_regexp), so local green must never be claimed for such an output.
 Dev tool only; not part of the shipped library.
@@ -87,9 +90,15 @@ def main(sf_dir, out_dir, only=None):
             n_fail += (not ok)
             continue
         try:
-            ref = con.execute(oracle[name])
-            ref_cols = [d[0] for d in ref.description]
-            ref_rows = ref.fetchall()
+            # a relation, not execute(): its types tell DECIMAL from
+            # DOUBLE (this DuckDB's cursor description says NUMBER for
+            # both)
+            ref = con.sql(oracle[name])
+            ref_cols = ref.columns
+            dec = [str(t).startswith("DECIMAL") for t in ref.types]
+            ref_rows = [tuple(float("nan") if d and v is None else v
+                              for v, d in zip(r, dec))
+                        for r in ref.fetchall()]
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
