@@ -1,12 +1,9 @@
 package graft.sources
 
-import java.io.File
 import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.file.DataFileReader
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -334,9 +331,9 @@ class AvroChangeFeedStream(path: String, baseSchema: StructType,
     new CdfReaderFactory(baseSchema, required, path)
 }
 
-/** Decodes one change split against the CURRENT base schema (by-name +
-  * rename aliases, like every reader here) and appends the constant
-  * `_change_type`. The pair-diff mode loads the (smaller, subset)
+/** Decodes one change split against the CURRENT base schema (the
+  * [[FileColumns]] layout, like every reader here) and appends the
+  * constant `_change_type`. The pair-diff mode loads the (smaller, subset)
   * rewrite file into an in-memory multiset first — one pair is one
   * task, and a rewrite is at most one original file's rows. */
 class CdfReaderFactory(baseSchema: StructType, required: StructType,
@@ -345,129 +342,51 @@ class CdfReaderFactory(baseSchema: StructType, required: StructType,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val split = partition.asInstanceOf[CdfSplit]
     new PartitionReader[InternalRow] {
-      // lazy: an empty-dv-delta split decides from the sidecars alone
-      // and never opens the data container at all
-      private var readerOpened = false
-      private lazy val reader = {
-        readerOpened = true
-        new DataFileReader[GenericRecord](
-          AvroSnapshots.resolveFile(dirPath, split.file),
-          new GenericDatumReader[GenericRecord]())
-      }
-      private def dv(name: Option[String]): Set[Long] =
-        name.map(DeletionVectors.read(dirPath, _).toSet).getOrElse(Set.empty)
-      private val skip = dv(split.skipDv)
+      private def deletes(dv: Option[String], eq: Seq[String]) =
+        FileColumns.Deletes.read(dirPath, dv, eq)
+      private def open(name: String, firstRowId: Long,
+          rules: Seq[FileColumns.Deletes]): FileColumns.Rows =
+        new FileColumns.Rows(AvroSnapshots.resolveFile(dirPath, name),
+          baseSchema, firstRowId, rules)
+      private def valsOf(r: FileColumns.Rows): Vector[Any] =
+        Vector.tabulate(baseSchema.length)(r.value)
       // delta mode: `deleted` = rows live in the OLD state and not in
       // the NEW one (positional or equality delete); `restored` = the
       // reverse (a rollback can shrink/drop a vector or detach an
-      // equality delete — ADVICE r15). The dv sets are read eagerly
-      // (no data file needed); eq matchers resolve against the file's
-      // writer schema, so they are lazy.
+      // equality delete — ADVICE r15). Both states are tested per row.
+      // Other splits skip the rows already dead under the entry's
+      // deletes (the delete commit streamed them already).
       private val deltaMode = split.deltaKind.isDefined
-      private val dvOldSet = if (deltaMode) dv(split.dvDeltaOld) else Set.empty[Long]
-      private val dvNewSet = if (deltaMode) dv(split.dvDeltaNew) else Set.empty[Long]
-      private val eqUnchanged = split.eqDeltaOld == split.eqDeltaNew
+      private val restored = split.deltaKind.contains("restored")
+      private val rules: Seq[FileColumns.Deletes] =
+        if (deltaMode) Seq(deletes(split.dvDeltaOld, split.eqDeltaOld),
+          deletes(split.dvDeltaNew, split.eqDeltaNew))
+        else Seq(deletes(split.skipDv, split.skipEq))
       // provably-empty delta (equal eq lists + empty dv delta in this
       // split's direction): exit without opening the data container
-      private val provablyEmpty = deltaMode && eqUnchanged && {
-        if (split.deltaKind.contains("restored")) (dvOldSet -- dvNewSet).isEmpty
-        else (dvNewSet -- dvOldSet).isEmpty
-      }
-      private def eqSkips(names: Seq[String]): Seq[(Array[Int], Seq[Any] => Boolean)] =
-        names.map { n =>
-          val (cols, kinds, keys) = EqualityDeletes.readMulti(dirPath, n)
-          val positions = cols.map(c =>
-            Option(reader.getSchema.getField(c)).getOrElse(
-              throw new IllegalStateException(
-                s"equality delete keys on '$c' but ${split.file} has no such field"))
-              .pos).toArray
-          (positions, EqualityDeletes.tupleMatcher(kinds, keys))
+      private val provablyEmpty = deltaMode &&
+        split.eqDeltaOld == split.eqDeltaNew && {
+          val (dvOld, dvNew) = (rules(0).dv, rules(1).dv)
+          if (restored) (dvOld -- dvNew).isEmpty else (dvNew -- dvOld).isEmpty
         }
-      private lazy val eqOld = eqSkips(split.eqDeltaOld)
-      private lazy val eqNew = eqSkips(split.eqDeltaNew)
-      // non-delta splits: rows already dead via the entry's eq sidecars
-      // never stream (the eq-delete commit streamed them already)
-      private lazy val eqSkip = eqSkips(split.skipEq)
-      // base-column positions in a file's writer schema; an absent
-      // column serves its EXISTS default (ADD COLUMN ... DEFAULT)
-      private def posFor(s: org.apache.avro.Schema): Array[Int] =
-        baseSchema.fields.map { f =>
-          (f.name +: AvroDirSource.aliasesOf(f)).iterator
-            .map(n => Option(s.getField(n)).map(_.pos).getOrElse(-1))
-            .find(_ >= 0).getOrElse(-1)
-        }
-      private lazy val basePos: Array[Int] = posFor(reader.getSchema)
-      private lazy val baseDflt: Array[Any] =
-        baseSchema.fields.map(AvroDirSource.existsDefaultAvro)
-      private def norm(x: Any): Any = x match {
-        case u: org.apache.avro.util.Utf8 => u.toString
-        case o => o
+      // lazy: a provably-empty split never opens the data container
+      private var opened = false
+      private lazy val rows = {
+        opened = true
+        open(split.file, split.firstRowId, rules)
       }
-      // IDENTITY columns ([[GeneratedColumns]]): physical bytes are
-      // null — every CDF row derives the value from its stable row id,
-      // exactly like the batch reader
-      private lazy val identityAffine: Array[(Long, Long)] =
-        baseSchema.fields.map(f =>
-          GeneratedColumns.identitySpec(f).orNull)
-      private def valsFor(rec: GenericRecord, pos: Array[Int],
-          rid: java.lang.Long): Vector[Any] =
-        pos.iterator.zipWithIndex.map { case (p, i) =>
-          identityAffine(i) match {
-            case null => if (p < 0) baseDflt(i) else norm(rec.get(p))
-            case (s0, st0) =>
-              if (rid == null) null
-              else java.lang.Long.valueOf(s0 + st0 * rid.longValue)
-          }
-        }.toVector
-      private def baseVals(rec: GenericRecord): Vector[Any] =
-        valsFor(rec, basePos, rowIdOf(rec))
 
       // ---- row-id window diff (row lineage — round 17) ----
-      // This split's stable ids: physical `_row_id` when the file is a
-      // rewrite output, else manifest base + position.
-      private lazy val physRowIdPos: Int =
-        Option(reader.getSchema.getField(AvroDirSource.RowIdColumn))
-          .map(_.pos).getOrElse(-1)
-      private def rowIdOf(rec: GenericRecord): java.lang.Long =
-        AvroDirSource.rowIdOf(
-          if (physRowIdPos >= 0) rec.get(physRowIdPos) else null,
-          split.firstRowId, rowPos)
       // OTHER side of the diff: id → live row content of the window's
       // opposite files whose id hulls overlap this file's (the driver
       // pre-filtered) — O(this rewrite group) memory per task.
       private lazy val otherSide: java.util.HashMap[java.lang.Long, Vector[Any]] = {
         val m = new java.util.HashMap[java.lang.Long, Vector[Any]]()
         split.others.foreach { ref =>
-          val r = new DataFileReader[GenericRecord](
-            AvroSnapshots.resolveFile(dirPath, ref.name),
-            new GenericDatumReader[GenericRecord]())
-          try {
-            val dvSet = ref.dv.map(DeletionVectors.read(dirPath, _).toSet)
-              .getOrElse(Set.empty[Long])
-            val eqs = ref.eq.map { n =>
-              val (cols, kinds, keys) = EqualityDeletes.readMulti(dirPath, n)
-              val positions = cols.map(c =>
-                Option(r.getSchema.getField(c)).getOrElse(
-                  throw new IllegalStateException(
-                    s"equality delete keys on '$c' but ${ref.name} has no such field"))
-                  .pos).toArray
-              (positions, EqualityDeletes.tupleMatcher(kinds, keys))
-            }
-            val physPos = Option(r.getSchema.getField(AvroDirSource.RowIdColumn))
-              .map(_.pos).getOrElse(-1)
-            val bp = posFor(r.getSchema)
-            var p = -1L
-            while (r.hasNext) {
-              val rec = r.next()
-              p += 1
-              if (!dvSet.contains(p) &&
-                  !eqs.exists { case (ps, mm) => mm(ps.toSeq.map(rec.get(_))) }) {
-                val id = AvroDirSource.rowIdOf(
-                  if (physPos >= 0) rec.get(physPos) else null,
-                  ref.firstRowId, p)
-                if (id != null) m.put(id, valsFor(rec, bp, id))
-              }
-            }
+          val r = open(ref.name, ref.firstRowId, Seq(deletes(ref.dv, ref.eq)))
+          try while (r.nextLive()) {
+            val id = r.rowId
+            if (id != null) m.put(id, valsOf(r))
           } finally r.close()
         }
         m
@@ -477,66 +396,41 @@ class CdfReaderFactory(baseSchema: StructType, required: StructType,
         else "update_postimage")
 
       // pair-diff: multiset of the rewrite's rows; an original row with
-      // a surviving twin is NOT a delete
-      private val surviving: scala.collection.mutable.Map[Vector[Any], Int] =
-        split.diffAgainst match {
-          case Some(rw) =>
-            val m = scala.collection.mutable.Map.empty[Vector[Any], Int]
-            val r = new DataFileReader[GenericRecord](
-              AvroSnapshots.resolveFile(dirPath, rw),
-              new GenericDatumReader[GenericRecord]())
-            try {
-              val pos: Array[Int] = baseSchema.fields.map { f =>
-                (f.name +: AvroDirSource.aliasesOf(f)).iterator
-                  .map(n => Option(r.getSchema.getField(n)).map(_.pos).getOrElse(-1))
-                  .find(_ >= 0).getOrElse(-1)
-              }
-              val rwPhysId = Option(r.getSchema
-                .getField(AvroDirSource.RowIdColumn)).map(_.pos).getOrElse(-1)
-              var rwPos = -1L
-              while (r.hasNext) {
-                val rec = r.next()
-                rwPos += 1
-                val rwId = AvroDirSource.rowIdOf(
-                  if (rwPhysId >= 0) rec.get(rwPhysId) else null, -1L, rwPos)
-                val k = valsFor(rec, pos, rwId)
-                m.update(k, m.getOrElse(k, 0) + 1)
-              }
-            } finally r.close()
-            m
-          case None => scala.collection.mutable.Map.empty
+      // a surviving twin is NOT a delete. A rewrite carries its rows'
+      // ids physically, so it needs no lineage base.
+      private val surviving: scala.collection.mutable.Map[Vector[Any], Int] = {
+        val m = scala.collection.mutable.Map.empty[Vector[Any], Int]
+        split.diffAgainst.foreach { rw =>
+          val r = open(rw, -1L, Nil)
+          try while (r.next()) {
+            val k = valsOf(r)
+            m.update(k, m.getOrElse(k, 0) + 1)
+          } finally r.close()
         }
+        m
+      }
 
       private val changeTag = UTF8String.fromString(split.changeType)
       private var rowTag: UTF8String = changeTag
-      private var rowPos = -1L
       private var current: Vector[Any] = _
 
       override def next(): Boolean = {
         // an empty delta (the other direction's split carries this
         // window's change) — exit without scanning the data file
         if (provablyEmpty) return false
-        while (reader.hasNext) {
-          val rec = reader.next()
-          rowPos += 1
-          val wanted =
-            if (deltaMode) {
-              def liveOld = !dvOldSet.contains(rowPos) &&
-                !eqOld.exists { case (ps, m) => m(ps.toSeq.map(rec.get(_))) }
-              def liveNew = !dvNewSet.contains(rowPos) &&
-                !eqNew.exists { case (ps, m) => m(ps.toSeq.map(rec.get(_))) }
-              if (split.deltaKind.contains("restored")) !liveOld && liveNew
-              else liveOld && !liveNew
-            } else !skip.contains(rowPos) &&
-              !eqSkip.exists { case (ps, m) => m(ps.toSeq.map(rec.get(_))) }
+        while (if (deltaMode) rows.next() else rows.nextLive()) {
+          val wanted = !deltaMode || {
+            val (liveOld, liveNew) = (rows.live(0), rows.live(1))
+            if (restored) !liveOld && liveNew else liveOld && !liveNew
+          }
           if (wanted) {
-            val vals = baseVals(rec)
+            val vals = valsOf(rows)
             if (split.lineage.isDefined) {
               // row-id diff: a matched id with identical content is a
               // carryover (streams nothing); matched-but-changed rows
               // pair as update pre/post images; an unmatched id is a
               // genuine delete (old side) / insert (new side)
-              val id = rowIdOf(rec)
+              val id = rows.rowId
               val other = if (id == null) null else otherSide.get(id)
               if (other == null) {
                 rowTag = changeTag; current = vals; return true
@@ -571,7 +465,7 @@ class CdfReaderFactory(baseSchema: StructType, required: StructType,
         }
         new GenericInternalRow(out)
       }
-      override def close(): Unit = if (readerOpened) reader.close()
+      override def close(): Unit = if (opened) rows.close()
     }
   }
 }

@@ -128,27 +128,6 @@ object AvroDirSource {
     * new files). NULL on legacy entries with no recorded version. */
   val LuvColumn = "_last_updated_version"
 
-  /** Table paths whose current self-overwrite is a COMPACTION, mapped
-    * to the head VERSION the rewrite was planned against — the commit
-    * is recorded kind=`rewrite` (dataChange=false, streams and the
-    * change feed skip it) AND validates that read basis: a compaction
-    * claims "same rows, new files", so publishing it over a concurrent
-    * DML's commit would silently undo that DML (round-16 fuzz find).
-    * THREAD-local because the INSERT OVERWRITE executes on the calling
-    * thread — two racing compactions must not clobber each other's
-    * basis. Set by GraftCatalog.compactTable. */
-  /** The stable id of a decoded Avro row: the PHYSICAL `_row_id` value
-    * when the file carries one (a rewrite output), else `base + pos`
-    * when the manifest assigned a lineage base, else null. The ONE
-    * spelling every reader shares — the scan's metadata column, both
-    * sides of the change feed's id diff, and the COW-delete rewrite —
-    * so the paths can never disagree on a row's identity. */
-  def rowIdOf(physValue: Any, base: Long, pos: Long): java.lang.Long =
-    if (physValue != null)
-      java.lang.Long.valueOf(physValue.asInstanceOf[java.lang.Number].longValue)
-    else if (base >= 0) java.lang.Long.valueOf(base + pos)
-    else null
-
   /** Table paths whose current thread-local operation is a LINEAGE
     * rewrite (compaction): the table transiently exposes `_row_id` as
     * a trailing nullable DATA column, so the compaction's
@@ -162,6 +141,15 @@ object AvroDirSource {
         new java.util.HashSet[String]()
     }
 
+  /** Table paths whose current self-overwrite is a COMPACTION, mapped
+    * to the head VERSION the rewrite was planned against — the commit
+    * is recorded kind=`rewrite` (dataChange=false, streams and the
+    * change feed skip it) AND validates that read basis: a compaction
+    * claims "same rows, new files", so publishing it over a concurrent
+    * DML's commit would silently undo that DML (round-16 fuzz find).
+    * THREAD-local because the INSERT OVERWRITE executes on the calling
+    * thread — two racing compactions must not clobber each other's
+    * basis. Set by GraftCatalog.compactTable. */
   private[sources] val rewriteBasis =
     new ThreadLocal[java.util.HashMap[String, Long]] {
       override def initialValue(): java.util.HashMap[String, Long] =
@@ -188,28 +176,6 @@ object AvroDirSource {
         case StreamFilePattern(e) => new File(path, committedMarker(e.toLong)).exists()
         case _ => true
       }
-    }
-
-  /** Prior names to try (newest first) when a file predates a rename. */
-  def aliasesOf(f: StructField): Seq[String] =
-    if (f.metadata.contains(AliasKey)) f.metadata.getStringArray(AliasKey).toSeq
-    else Nil
-
-  /** A field's EXISTS default — the value rows written BEFORE the
-    * column was added must read as (`ALTER TABLE ... ADD COLUMN ...
-    * DEFAULT ...`; standard `EXISTS_DEFAULT` field metadata, Spark's
-    * own keys) — in Catalyst's INTERNAL domain (UTF8String etc.), or
-    * null when the column has none. */
-  def existsDefaultInternal(f: StructField): Any =
-    org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-      .getExistenceDefaultValue(f)
-
-  /** Same, in the decoded-Avro/external value domain the row-level
-    * filter evaluator and the rewrite writer speak. */
-  def existsDefaultAvro(f: StructField): Any =
-    existsDefaultInternal(f) match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case o => o
     }
 
   /** One non-null Avro schema → the Spark type it carries, standard
@@ -353,12 +319,9 @@ object AvroDirSource {
       case f: java.lang.Float => java.lang.Double.valueOf(f.doubleValue)
       case o => o
     }
-    case d: DecimalType =>
-      val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
-      val bytes = new Array[Byte](bb.remaining()); bb.get(bytes)
-      org.apache.spark.sql.types.Decimal(
-        new java.math.BigDecimal(new java.math.BigInteger(bytes), d.scale),
-        d.precision, d.scale)
+    case d: DecimalType => org.apache.spark.sql.types.Decimal(
+      FileColumns.decimal(v.asInstanceOf[java.nio.ByteBuffer], d.scale),
+      d.precision, d.scale)
     case BinaryType =>
       val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
       val bytes = new Array[Byte](bb.remaining()); bb.get(bytes)
@@ -484,45 +447,6 @@ class AvroDirTable(path: String, tableSchema: StructType,
     case None     => AvroDirSource.listFiles(path)
   }
   private def readViewNames(): Seq[String] = readView().map(_.getName)
-
-  /** Resolve a column name to its recorded stats in one file's parsed
-    * stats map, following the rename-alias chain (stats were recorded
-    * under the name current at write time) — shared by the scan's file
-    * pruning, the aggregate pushdown, and DELETE's candidate pruning. */
-  private def resolveStats(st: Map[String, AvroStats.ColStats])(
-      a: String): Option[AvroStats.ColStats] =
-    tableSchema.fields.find(_.name.equalsIgnoreCase(a)).flatMap { fld =>
-      (fld.name +: AvroDirSource.aliasesOf(fld)).iterator
-        .flatMap(st.get).nextOption()
-        // schema-less parse → column-typed bounds (NaN/Inf sentinels
-        // become doubles again for DOUBLE columns)
-        .map(AvroStats.coerce(_, fld.dataType))
-    }
-
-  /** [[resolveStats]] plus SYNTHESIZED bounds for IDENTITY columns:
-    * identity values are `start + step * _row_id`, so a file's exact
-    * identity hull derives from its physical `_row_id` stats (rewrite
-    * outputs) or its assigned `[firstRowId, firstRowId + rows)` range
-    * — identity point lookups and ranges prune files with ZERO stored
-    * stats bytes. */
-  private def resolveStatsWithIdentity(e: AvroSnapshots.FileEntry,
-      st: Map[String, AvroStats.ColStats])(a: String): Option[AvroStats.ColStats] =
-    resolveStats(st)(a).orElse {
-      tableSchema.fields.find(f => f.name.equalsIgnoreCase(a) &&
-          GeneratedColumns.isIdentity(f)).flatMap { f =>
-        val (s0, st0) = GeneratedColumns.identitySpec(f).get
-        GeneratedColumns.identityBounds(s0, st0,
-          st.get(AvroDirSource.RowIdColumn), e.firstRowId,
-          e.stats.flatMap(AvroStats.rowCount))
-      }
-    }
-
-  /** Candidate recorded names of a column for bloom-sidecar probes —
-    * the same rename-alias chain the stats resolution follows. */
-  private def bloomNames(a: String): Seq[String] =
-    tableSchema.fields.find(_.name.equalsIgnoreCase(a))
-      .map(fld => (fld.name +: AvroDirSource.aliasesOf(fld)).toSeq)
-      .getOrElse(Seq(a))
 
   // ---- metadata columns + row-level operations (UPDATE / MERGE) ----
 
@@ -665,30 +589,21 @@ class AvroDirTable(path: String, tableSchema: StructType,
             if (!anyFilter) sn.entries
             else sn.inline ++ sn.groups.filter { g =>
               val hull = AvroStats.parse(g.aggStats)
-              AvroStats.groupMightMatch(pushed.toSeq, resolveStats(hull)) &&
+              AvroStats.groupMightMatch(pushed.toSeq,
+                FileColumns.stats(tableSchema, hull)) &&
                 AvroStats.groupMightMatch(shredPushed.map(_.filter),
                   shredResolve(hull))
             }.flatMap(g => AvroSnapshots.groupEntries(path, g.file))
           if (!anyFilter) admitted
           else {
-            val statsKept = admitted.filter { e =>
-              val st = e.stats.map(AvroStats.parse)
-                .getOrElse(Map.empty[String, AvroStats.ColStats])
-              AvroStats.fileMightMatch(pushed.toSeq, e.name,
-                resolveStatsWithIdentity(e, st)) &&
+            val pruning = new FileColumns.Pruning(path, tableSchema)
+            admitted.filter { e =>
+              (shredPushed.isEmpty ||
                 AvroStats.fileMightMatch(shredPushed.map(_.filter), e.name,
-                  shredResolve(st))
+                  shredResolve(e.stats.map(AvroStats.parse)
+                    .getOrElse(Map.empty[String, AvroStats.ColStats])))) &&
+                pruning.mightHold(e, pushed.toSeq)
             }
-            // bloom point-lookup pruning: only stats-admitted files pay
-            // the (cached) sidecar probe; tables without sidecars skip
-            // the whole pass on one directory check — unless the view
-            // holds foreign references (shallow clone), whose sidecars
-            // live in the SOURCE table's directory
-            if (!BloomFilters.anySidecars(path) &&
-                statsKept.forall(e => AvroSnapshots.ownsFile(e.name)))
-              statsKept
-            else statsKept.filter(e => BloomFilters.fileMightMatch(
-              path, e.name, pushed.toSeq, bloomNames))
           }
         case None => AvroDirSource.listFiles(path)
           .map(f => AvroSnapshots.FileEntry(f.getName))
@@ -722,7 +637,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
 
       private def statsColumn(fileStats: Map[String, AvroStats.ColStats],
           name: String): Option[AvroStats.ColStats] =
-        resolveStats(fileStats)(name)
+        FileColumns.stats(tableSchema, fileStats)(name)
       private def colRef(
           e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
         e match {
@@ -743,7 +658,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
         case (x: String, d: DecimalType) if x.startsWith("dec:") =>
           org.apache.spark.sql.types.Decimal(
             new java.math.BigDecimal(x.substring(4)), d.precision, d.scale)
-        // resolveStats.coerce already re-typed the tagged bound
+        // FileColumns.stats already re-typed the tagged bound
         case (x: java.math.BigDecimal, d: DecimalType) =>
           org.apache.spark.sql.types.Decimal(x, d.precision, d.scale)
         case (x, _)                            => x
@@ -922,18 +837,13 @@ class AvroDirTable(path: String, tableSchema: StructType,
           case None => groups match {
             case Some((gs, residual)) =>
               val spec = partSpec.get
-              // Resolve the bucket column's rename aliases and EXISTS
-              // default ONCE at plan time: a non-conforming file may
-              // predate a rename (old field name holds the real values)
-              // or predate ADD COLUMN ... DEFAULT (the table serves the
-              // default, so the residual filter must hash it too).
-              val bucketField = tableSchema.fields
+              // the bucket column travels as a table column: a
+              // non-conforming file may predate a rename or an ADD
+              // COLUMN ... DEFAULT, and the reader resolves it like any
+              // other column ([[FileColumns]])
+              val residualSpec = BucketResidual(tableSchema.fields
                 .find(_.name.equalsIgnoreCase(spec.column))
-              val residualSpec = BucketResidual(
-                bucketField.map(f => f.name +: AvroDirSource.aliasesOf(f))
-                  .getOrElse(Seq(spec.column)),
-                spec.n,
-                bucketField.map(AvroDirSource.existsDefaultAvro).orNull)
+                .getOrElse(StructField(spec.column, LongType)), spec.n)
               val tail = residual.map(e => AvroGroupFile(
                 AvroSnapshots.resolveFile(path, e.name).getAbsolutePath,
                 dvPathOf(e), eqPathsOf(e), e.firstRowId,
@@ -992,16 +902,15 @@ class AvroDirTable(path: String, tableSchema: StructType,
           }
           tableSchema.fields.filter(f => AvroStats.trackable(f.dataType))
             .foreach { fld =>
-              val names = fld.name +: AvroDirSource.aliasesOf(fld)
               val sketches = perFile.map { case (_, nd) =>
-                names.iterator.flatMap(nd.get).nextOption()
+                FileColumns.recorded(fld, nd)
               }
               // a column absent from a file's stats predates the column
               // (all-null there): contributes an EMPTY sketch; absent
               // SKETCHES on a stats-bearing file mean pre-sketch
               // manifests — decline the column, don't guess
               val colStats = perFile.map { case (cs, _) =>
-                names.iterator.flatMap(cs.get).nextOption()
+                FileColumns.recorded(fld, cs)
               }
               val preSketch = sketches.zip(colStats).exists {
                 case (None, Some(cs)) => cs.min.isDefined // values, no sketch
@@ -1095,28 +1004,20 @@ class AvroDirTable(path: String, tableSchema: StructType,
   private def partitionByPredicate(entries: Seq[AvroSnapshots.FileEntry],
       filters: Array[Filter]): (Seq[AvroSnapshots.FileEntry],
         Seq[AvroSnapshots.FileEntry], Seq[AvroSnapshots.FileEntry]) = {
-    val probeBloom = BloomFilters.anySidecars(path)
-    val (touched, skipped) = entries.partition { e =>
-      val st = e.stats.map(AvroStats.parse)
-        .getOrElse(Map.empty[String, AvroStats.ColStats])
-      // identity bounds synthesize here too: a DELETE/UPDATE by an
-      // identity predicate reads O(matching files), not the table
-      AvroStats.fileMightMatch(filters.toSeq, e.name,
-        resolveStatsWithIdentity(e, st)) &&
-      (!probeBloom || BloomFilters.fileMightMatch(
-        path, e.name, filters.toSeq, bloomNames))
-    }
+    val pruning = new FileColumns.Pruning(path, tableSchema)
+    val (touched, skipped) =
+      entries.partition(pruning.mightHold(_, filters.toSeq))
     val (fullDrop, candidates) = touched.partition { e =>
       e.stats.exists { sj =>
         AvroStats.fileMustMatch(filters.toSeq, e.name,
-          resolveStats(AvroStats.parse(sj)))
+          FileColumns.stats(tableSchema, AvroStats.parse(sj)))
       }
     }
     (skipped, fullDrop, candidates)
   }
 
   /** COPY-ON-WRITE pass over mixed `candidates`: one Spark task per
-    * file rewrites it KEEPING the rows the predicate does not match
+    * file rewrites it KEEPING the live rows the predicate does not match
     * (row ids carried physically — lineage survives), reporting the
     * entry the next manifest should hold; an untouched file keeps its
     * original entry. Rewrites are named `part-<jobId>-rw-<orig>` so
@@ -1130,16 +1031,11 @@ class AvroDirTable(path: String, tableSchema: StructType,
     val outcome: Array[(String, Option[(String, Option[String])])] =
       if (candidates.isEmpty) Array.empty
       else {
-        val cands = candidates.map(e => (e.name, e.dv, e.firstRowId))
         spark.sparkContext
-          .parallelize(cands, math.min(cands.size, 32))
-          .map { case (n, dv, frid) =>
-            val existing = dv.map(d =>
-              DeletionVectors.read(dirPath, d).toSet)
-              .getOrElse(Set.empty[Long])
-            n -> AvroFilterEval.rewriteVersioned(
-              dirPath, n, schema, filters, jobId, existing, frid)
-          }.collect()
+          .parallelize(candidates, math.min(candidates.size, 32))
+          .map(e => e.name ->
+            AvroFilterEval.rewriteVersioned(dirPath, e, schema, filters, jobId))
+          .collect()
       }
     val byName = outcome.toMap
     candidates.flatMap { e =>
@@ -1149,7 +1045,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
           // a rewrite holds a SUBSET of its original's rows, so
           // it inherits the original's bucket — grouped scans
           // stay grouped after DELETE; fresh exact stats ride
-          // along, and any prior DV was materialized away
+          // along, and any prior dv/eq delete was materialized away
           AvroSnapshots.FileEntry(k, e.part, e.specId,
             st.orElse(e.stats), dv = None)
       }
@@ -1172,7 +1068,8 @@ class AvroDirTable(path: String, tableSchema: StructType,
       //     MATCHED ROW POSITIONS; the commit swaps in O(matched)
       //     deletion-vector sidecars and rewrites ZERO data files —
       //     the only affordable shape for high-frequency CDC at 100 TB.
-      // The rewrites form one job: a refused commit deletes them.
+      // The rewrites and sidecars form one job: a refused commit
+      // deletes them.
       val job = WriteJob(path)
       // lock spans the view-read, the scan job, and the manifest
       // write: a concurrent append committing mid-DELETE would
@@ -1197,13 +1094,12 @@ class AvroDirTable(path: String, tableSchema: StructType,
               // take the row-level scanning path below (default-aware)
               cols.forall { c =>
                 val fld = tableSchema.fields.find(_.name.equalsIgnoreCase(c)).get
-                val names = fld.name +: AvroDirSource.aliasesOf(fld)
                 entries.forall(e => e.stats.exists(sj =>
-                  names.exists(AvroStats.parse(sj).contains)))
+                  FileColumns.recorded(fld, AvroStats.parse(sj)).isDefined))
               }
             }
           else None
-        if (eqExtracted.isDefined) {
+        if (eqExtracted.isDefined) job.guarded {
           val (cols, kinds, keys) = eqExtracted.get
           val next =
             if (keys.isEmpty) entries // `k = NULL`: deletes nothing
@@ -1211,17 +1107,12 @@ class AvroDirTable(path: String, tableSchema: StructType,
               // attach pruning with the ORIGINAL pushed predicate —
               // identical for the single-column In shape, and exactly
               // the composite conjunction for multi-column keys
-              val probeBloom = BloomFilters.anySidecars(path)
-              val touched = entries.filter { e =>
-                val st = e.stats.map(AvroStats.parse)
-                  .getOrElse(Map.empty[String, AvroStats.ColStats])
-                AvroStats.fileMightMatch(filters.toSeq, e.name, resolveStats(st)) &&
-                (!probeBloom || BloomFilters.fileMightMatch(
-                  path, e.name, filters.toSeq, bloomNames))
-              }.map(_.name).toSet
+              val pruning = new FileColumns.Pruning(path, tableSchema)
+              val touched = entries.filter(pruning.mightHold(_, filters.toSeq))
+                .map(_.name).toSet
               if (touched.isEmpty) entries
               else {
-                val eqName = EqualityDeletes.writeMulti(path, cols, kinds, keys)
+                val eqName = job.equalityDelete(cols, kinds, keys)
                 entries.map(e =>
                   if (touched(e.name)) e.copy(eq = e.eq :+ eqName) else e)
               }
@@ -1245,18 +1136,11 @@ class AvroDirTable(path: String, tableSchema: StructType,
               // positions job: one task per candidate, O(matched) output
               val found: Array[(String, (Seq[Long], Long))] =
                 if (candidates.isEmpty) Array.empty
-                else {
-                  val cands = candidates.map(e => (e.name, e.dv, e.firstRowId))
-                  spark.sparkContext
-                    .parallelize(cands, math.min(cands.size, 32))
-                    .map { case (n, dv, frid) =>
-                      val existing = dv.map(d =>
-                        DeletionVectors.read(dirPath, d).toSet)
-                        .getOrElse(Set.empty[Long])
-                      n -> AvroFilterEval.matchedPositions(
-                        dirPath, n, schema, filters, existing, frid)
-                    }.collect()
-                }
+                else spark.sparkContext
+                  .parallelize(candidates, math.min(candidates.size, 32))
+                  .map(e => e.name ->
+                    AvroFilterEval.matchedPositions(dirPath, e, schema, filters))
+                  .collect()
               val byName = found.toMap
               skipped ++ candidates.flatMap { e =>
                 byName(e.name) match {
@@ -1265,8 +1149,7 @@ class AvroDirTable(path: String, tableSchema: StructType,
                   case (matched, _) =>
                     val existing = e.dv.map(DeletionVectors.read(dirPath, _))
                       .getOrElse(Nil)
-                    Some(e.copy(dv = Some(
-                      DeletionVectors.write(dirPath, existing ++ matched))))
+                    Some(e.copy(dv = Some(job.deletionVector(existing ++ matched))))
                 }
               }
             } else skipped ++ cowRewriteSurvivors(spark, candidates, filters, job.id)
@@ -1687,15 +1570,12 @@ case class AvroGroupFile(file: String, dv: Option[String] = None,
     bucketBy: Option[BucketResidual] = None,
     addedVersion: Long = -1L, entryName: String = null)
 
-/** The residual bucket filter's full resolution story: `names` is the
-  * bucket column's current name plus its rename aliases newest-first
-  * (a non-conforming file is exactly the kind written under an older
-  * name), and `default` is the column's EXISTS default in the
-  * decoded-Avro domain — the value the table serves (and a clustered
-  * rewrite would hash) for rows written before ADD COLUMN ... DEFAULT.
-  * Absent column with no default reads null, which the clustered
-  * writer's getLong spells as bucket 0. */
-case class BucketResidual(names: Seq[String], n: Int, default: Any)
+/** The residual bucket filter: the table's bucket `column` and the
+  * bucket count. The reader resolves the column by the file layout
+  * rule, so a file written under an older name or before ADD COLUMN
+  * ... DEFAULT hashes the value the table serves; a null spells bucket
+  * 0, as the clustered writer's getLong does. */
+case class BucketResidual(column: StructField, n: Int)
 
 /** All of one bucket's container files (with their deletion-vector and
   * equality-delete sidecars and row-lineage base), as one split whose
@@ -1707,11 +1587,11 @@ case class AvroBucketGroupSplit(
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
 /** Decodes each container against its OWN embedded writer schema,
-  * resolving required fields BY NAME with rename-alias fallback — the
-  * Avro schema-resolution rule. A field absent from a file (the file
-  * predates an ADD COLUMN) reads as null. The hidden `_file` metadata
-  * column (file provenance; the group key for row-level operations)
-  * is served from the split, not decoded. */
+  * with the table columns resolved by [[FileColumns]] (names, rename
+  * aliases, EXISTS defaults, IDENTITY, `_row_id`) and the entry's
+  * deletes applied. The hidden `_file` metadata column (file
+  * provenance; the group key for row-level operations) is served from
+  * the split, not decoded. */
 class AvroReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -1751,208 +1631,81 @@ class AvroReaderFactory(required: StructType) extends PartitionReaderFactory {
       bucketKeep: Option[(BucketResidual, Int)] = None,
       entryName: String = null): PartitionReader[InternalRow] = {
     new PartitionReader[InternalRow] {
-      private val datumReader = new GenericDatumReader[GenericRecord]()
-      private val reader = new DataFileReader[GenericRecord](
-        new File(file), datumReader)
-      private val writerSchema = reader.getSchema
+      // the required columns, plus the residual bucket column (partial
+      // SPJ) last, in the per-file layout of [[FileColumns]]; the
+      // decoder is handed only the fields they and the entry's
+      // equality deletes need (decode-side column pruning)
+      private val n = required.length
+      private val rows = new FileColumns.Rows(new File(file),
+        bucketKeep.fold(required)(bk => required.add(bk._1.column)),
+        firstRowId, Seq(FileColumns.Deletes.read(
+          new File(file).getParent, dvFile, eqFiles)))
       // `_file` serves the MANIFEST ENTRY NAME (absolute for a cloned
       // table's foreign references) so row-level operations' In(_file)
       // group filters and maintenance isin(names) filters round-trip
       // exactly against entry names at all times
       private val fileName = UTF8String.fromString(
         if (entryName != null) entryName else new File(file).getName)
-      // deletion vector: positions to skip, applied as the rows stream
-      // past (the merge-on-read anti-filter)
-      private val dv: Set[Long] =
-        dvFile.map(DeletionVectors.readAbs(_).toSet).getOrElse(Set.empty)
-      // ---- decode-side column projection (r19 optimization) ----
-      // Every consumer of this file's fields resolves BY NAME first:
-      // the required columns (rename aliases honored, newest-first),
-      // the lineage columns when asked for, the equality-delete keys
-      // and the residual bucket column. The Avro reader then gets an
-      // EXPECTED schema of exactly those fields, so the decoder SKIPS
-      // the bytes of every other column instead of materializing them
-      // — the decode-side half of column pruning (ReadSchema prunes
-      // the plan; this prunes the per-row work; a pruned catalog scan
-      // previously still decoded every field of every row).
-      private def writerField(n: String): Option[Schema.Field] =
-        Option(writerSchema.getField(n))
-      // required field → resolved writer-field name; null for the
-      // metadata/identity columns and genuinely absent columns
-      private val resolvedNames: Array[String] = required.fields.map { f =>
-        if (f.name == AvroDirSource.FileColumn ||
-            f.name == AvroDirSource.PosColumn ||
-            f.name == AvroDirSource.RowIdColumn ||
-            f.name == AvroDirSource.LuvColumn ||
-            GeneratedColumns.isIdentity(f)) null
-        else (f.name +: AvroDirSource.aliasesOf(f)).iterator
-          .find(n => writerField(n).isDefined).orNull
-      }
-      // equality deletes: a sidecar keying a column this file lacks
-      // fails LOUDLY — silently serving the row would resurrect a
-      // deleted key
-      private val eqResolved: Seq[(Array[String], Seq[Any] => Boolean)] =
-        eqFiles.map { p =>
-          val (cols, kinds, keys) = EqualityDeletes.readMultiAbs(p)
-          cols.foreach(c => if (writerField(c).isEmpty)
-            throw new IllegalStateException(
-              s"equality delete keys on '$c' but $file has no such field"))
-          (cols.toArray, EqualityDeletes.tupleMatcher(kinds, keys))
-        }
-      private val bucketName: Option[String] =
-        bucketKeep.flatMap { case (r, _) =>
-          r.names.find(n => writerField(n).isDefined) }
-      private val needsRowId = required.fields.exists(f =>
-        f.name == AvroDirSource.RowIdColumn || GeneratedColumns.isIdentity(f))
-      private val needsLuv =
-        required.fields.exists(_.name == AvroDirSource.LuvColumn)
-      private val expectedSchema: Schema = {
-        val needed = (resolvedNames.iterator.filter(_ != null) ++
-          eqResolved.iterator.flatMap(_._1) ++
-          bucketName.iterator ++
-          (if (needsRowId) Iterator(AvroDirSource.RowIdColumn)
-           else Iterator.empty) ++
-          (if (needsLuv) Iterator(AvroDirSource.LuvColumn)
-           else Iterator.empty)).toSet
-        val all = writerSchema.getFields.asScala
-        val keep = all.filter(f => needed.contains(f.name))
-        if (keep.size == all.size) writerSchema
-        else {
-          val s = Schema.createRecord(writerSchema.getName,
-            writerSchema.getDoc, writerSchema.getNamespace, false)
-          s.setFields(keep.map(f => new Schema.Field(f, f.schema)).asJava)
-          datumReader.setExpected(s)
-          s
+      private val types: Array[DataType] = required.fields.map(_.dataType)
+      // per required column: the layout's field position or code, or
+      // one of the scan's own columns — `_file`, `_pos`, and a
+      // `_last_updated_version` the file does not store (a maintenance
+      // rewrite stores it; other files inherit their addedVersion,
+      // else null on a legacy entry)
+      private val idx: Array[Int] = Array.tabulate(n) { i =>
+        required.fields(i).name match {
+          case AvroDirSource.FileColumn => AvroReaderFactory.FileCode
+          case AvroDirSource.PosColumn  => AvroReaderFactory.PosCode
+          case AvroDirSource.LuvColumn if rows.code(i) == FileColumns.Absent =>
+            AvroReaderFactory.InheritedLuvCode
+          case _ => rows.code(i)
         }
       }
-      // all record positions below are in the EXPECTED (projected) schema
-      private val eqSkips: Seq[(Array[Int], Seq[Any] => Boolean)] =
-        eqResolved.map { case (cols, m) =>
-          (cols.map(expectedSchema.getField(_).pos), m)
+      private val luv: java.lang.Long =
+        if (addedVersion >= 0) java.lang.Long.valueOf(addedVersion) else null
+      private val dflt: Array[Any] = Array.tabulate(n)(i =>
+        if (idx(i) == FileColumns.Absent)
+          AvroDirSource.avroToInternal(rows.default(i), types(i))
+        else null)
+      // residual bucket filter: keep only rows whose floorMod(column,
+      // n) equals this split's bucket — the writer's partValue spelling
+      private def bucketOk: Boolean = bucketKeep.forall { case (r, b) =>
+        val x = rows.value(n) match {
+          case v: java.lang.Number => v.longValue
+          case _                   => 0L
         }
-      // residual bucket filter (partial SPJ): keep only rows whose
-      // floorMod(column, n) equals this split's bucket — the writer's
-      // partValue spelling. The column resolves by name THEN rename
-      // aliases (a non-conforming file may predate a rename); a file
-      // written before the column existed serves the column's EXISTS
-      // default, so the filter hashes that default — only a genuinely
-      // null value spells bucket 0, matching a clustered rewrite.
-      private val bucketCheck: Option[(Int, Int, Int, Long)] =
-        bucketKeep.map { case (r, b) =>
-          val pos = bucketName.map(expectedSchema.getField(_).pos).getOrElse(-1)
-          val dflt = r.default match {
-            case v: java.lang.Number => v.longValue
-            case _                   => 0L
-          }
-          (pos, r.n, b, dflt)
-        }
-      private def bucketOk(rec: GenericRecord): Boolean = bucketCheck match {
-        case None => true
-        case Some((pos, n, b, dflt)) =>
-          val x = if (pos < 0) dflt else rec.get(pos) match {
-            case null                => 0L
-            case v: java.lang.Number => v.longValue
-            case _                   => 0L
-          }
-          java.lang.Math.floorMod(x, n.toLong) == b.toLong
+        java.lang.Math.floorMod(x, r.n.toLong) == b.toLong
       }
-      private var rowPos = -1L
-      private var pending: GenericRecord = _
-      // required field → position in THIS file's writer schema (name
-      // first, then rename aliases newest-first); -1 → absent column
-      // (serves the field's EXISTS default, null when none — ADD
-      // COLUMN ... DEFAULT semantics), -2 → the _file metadata column,
-      // -3 → the _pos metadata column, -4 → the _row_id metadata
-      // column (physical field when the file carries one — a rewrite
-      // output — else firstRowId + _pos, null without lineage).
-      // Resolved once per file.
-      private val physRowId: Int =
-        if (!needsRowId) -1
-        else Option(expectedSchema.getField(AvroDirSource.RowIdColumn))
-          .map(_.pos).getOrElse(-1)
-      // -5 -> the _last_updated_version metadata column: physical
-      // field when the file carries one (a maintenance rewrite
-      // output), else the file's manifest addedVersion (inheritance),
-      // else null (legacy entry)
-      private val physLuv: Int =
-        if (!needsLuv) -1
-        else Option(expectedSchema.getField(AvroDirSource.LuvColumn))
-          .map(_.pos).getOrElse(-1)
-      private val idx: Array[Int] = required.fields.zipWithIndex.map {
-        case (f, i) =>
-          if (f.name == AvroDirSource.FileColumn) -2
-          else if (f.name == AvroDirSource.PosColumn) -3
-          else if (f.name == AvroDirSource.RowIdColumn) -4
-          else if (f.name == AvroDirSource.LuvColumn) -5
-          // -6 → IDENTITY column: derived start + step * row_id (the
-          // affine view of row lineage — physical bytes are null)
-          else if (GeneratedColumns.isIdentity(f)) -6
-          else if (resolvedNames(i) == null) -1
-          else expectedSchema.getField(resolvedNames(i)).pos
-      }
-      private val identityAffine: Array[(Long, Long)] =
-        required.fields.map(f =>
-          GeneratedColumns.identitySpec(f).getOrElse((0L, 0L)))
-      private val dflt: Array[Any] =
-        required.fields.map(AvroDirSource.existsDefaultInternal)
       override def next(): Boolean = {
-        while (reader.hasNext) {
-          pending = reader.next()
-          rowPos += 1
-          if (!dv.contains(rowPos) &&
-              !eqSkips.exists { case (ps, m) =>
-                m(ps.toSeq.map(pending.get(_))) } &&
-              bucketOk(pending))
-            return true
-        }
+        while (rows.nextLive()) if (bucketOk) return true
         false
       }
       override def get(): InternalRow = {
-        val rec = pending
-        val vals = new Array[Any](required.length)
+        val rec = rows.rec
+        val vals = new Array[Any](n)
         var i = 0
-        while (i < required.length) {
-          if (idx(i) == -2) vals(i) = fileName
-          else if (idx(i) == -3) vals(i) = rowPos
-          else if (idx(i) == -4)
-            vals(i) = AvroDirSource.rowIdOf(
-              if (physRowId >= 0) rec.get(physRowId) else null,
-              firstRowId, rowPos)
-          else if (idx(i) == -5) {
-            // a file CARRYING the physical column is a maintenance
-            // rewrite: its per-row value is authoritative INCLUDING
-            // null (a legacy row's unknown stamp stays unknown —
-            // compaction must not bump it to its own commit); only
-            // files WITHOUT the column inherit their addedVersion
-            vals(i) =
-              if (physLuv >= 0) rec.get(physLuv) match {
-                case null => null
-                case v: java.lang.Number => java.lang.Long.valueOf(v.longValue)
-                case _ => null
-              }
-              else if (addedVersion >= 0) java.lang.Long.valueOf(addedVersion)
-              else null
-          }
-          else if (idx(i) == -6) {
-            val rid = AvroDirSource.rowIdOf(
-              if (physRowId >= 0) rec.get(physRowId) else null,
-              firstRowId, rowPos)
-            val (s0, st0) = identityAffine(i)
-            vals(i) =
-              if (rid == null) null
-              else java.lang.Long.valueOf(
-                s0 + st0 * rid.asInstanceOf[java.lang.Long].longValue)
-          }
-          else if (idx(i) == -1) vals(i) = dflt(i) // pre-column file
-          else vals(i) = AvroDirSource.avroToInternal(
-            rec.get(idx(i)), required.fields(i).dataType)
+        while (i < n) {
+          val c = idx(i)
+          vals(i) =
+            if (c >= 0) AvroDirSource.avroToInternal(rec.get(c), types(i))
+            else if (c == FileColumns.Absent) dflt(i)
+            else if (c == AvroReaderFactory.FileCode) fileName
+            else if (c == AvroReaderFactory.PosCode) rows.pos
+            else if (c == AvroReaderFactory.InheritedLuvCode) luv
+            else rows.value(i) // IDENTITY or `_row_id`: derived
           i += 1
         }
         new GenericInternalRow(vals)
       }
-      override def close(): Unit = reader.close()
+      override def close(): Unit = rows.close()
     }
   }
+}
+
+object AvroReaderFactory {
+  private final val FileCode = -10
+  private final val PosCode = -11
+  private final val InheritedLuvCode = -12
 }
 
 /** Per-file Avro writer shared by the batch and streaming task paths.

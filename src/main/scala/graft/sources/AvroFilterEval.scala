@@ -3,8 +3,8 @@ package graft.sources
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -148,176 +148,62 @@ object AvroFilterEval extends Serializable {
     case other => throw new UnsupportedOperationException(s"filter $other")
   }
 
-  /** Scan one container: surviving rows (in the CURRENT schema's shape,
-    * resolved by name + rename aliases) and whether anything matched.
-    * Rows at positions in `dv` (an existing deletion vector) are
-    * ALREADY deleted — skipped without evaluation and never reported
-    * as matches. */
-  /** When `withLineage`, each kept row carries ONE extra trailing
-    * value: the row's stable id — the file's physical `_row_id` when
-    * it has one (a prior rewrite output), else `lineageBase + pos`,
-    * else null (no lineage). */
-  private def scanFile(file: File, schema: StructType,
-      filters: Array[Filter],
-      dv: Set[Long] = Set.empty,
-      lineageBase: Long = -1L,
-      withLineage: Boolean = false): (Seq[Array[Any]], Boolean) = {
-    val keep = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-    var deleted = false
-    val reader = new DataFileReader[GenericRecord](
-      file, new GenericDatumReader[GenericRecord]())
-    try {
-      // column name → position in THIS file's writer schema (name first,
-      // then rename aliases newest-first); -1 → the file predates the
-      // column, value is null. Resolved once per file.
-      val pos: Map[String, Int] = schema.fields.map { f =>
-        f.name -> (f.name +: AvroDirSource.aliasesOf(f)).iterator
-          .map(n => Option(reader.getSchema.getField(n)).map(_.pos).getOrElse(-1))
-          .find(_ >= 0).getOrElse(-1)
-      }.toMap
-      // a field absent from this file serves its EXISTS default (ADD
-      // COLUMN ... DEFAULT) — the evaluator must see the same value a
-      // read would, or a DELETE on the defaulted column would match
-      // different rows than the same predicate SELECTs
-      val dflt: Map[String, Any] = schema.fields.map(f =>
-        f.name -> AvroDirSource.existsDefaultAvro(f)).toMap
-      // DECIMAL columns decode their unscaled bytes with the column
-      // scale so cmp() compares them exactly
-      val decScale: Map[String, Int] = schema.fields.collect {
-        case f if f.dataType.isInstanceOf[DecimalType] =>
-          f.name -> f.dataType.asInstanceOf[DecimalType].scale
-      }.toMap
-      def norm(x: Any): Any = x match {
-        case u: org.apache.avro.util.Utf8 => u.toString
-        case other => other
-      }
-      def decode(name: String, x: Any): Any = x match {
-        case b: java.nio.ByteBuffer if decScale.contains(name) =>
-          val d = b.duplicate()
-          val bytes = new Array[Byte](d.remaining())
-          d.get(bytes)
-          new java.math.BigDecimal(
-            new java.math.BigInteger(bytes), decScale(name))
-        case o => norm(o)
-      }
-      val physIdPos: Int =
-        Option(reader.getSchema.getField(AvroDirSource.RowIdColumn))
-          .map(_.pos).getOrElse(-1)
-      // IDENTITY columns have null physical bytes — the evaluator must
-      // see the DERIVED value (start + step * row_id) or a DELETE
-      // predicated on identity would match nothing
-      val identity: Map[String, (Long, Long)] = schema.fields.iterator
-        .flatMap(f => GeneratedColumns.identitySpec(f).map(f.name -> _)).toMap
-      var rowPos = 0L
-      while (reader.hasNext) {
-        val rec = reader.next()
-        if (!dv.contains(rowPos)) {
-          val v: String => Any = name => identity.get(name) match {
-            case Some((s0, st0)) =>
-              AvroDirSource.rowIdOf(
-                if (physIdPos >= 0) rec.get(physIdPos) else null,
-                lineageBase, rowPos) match {
-                case rid: java.lang.Long =>
-                  java.lang.Long.valueOf(s0 + st0 * rid.longValue)
-                case _ => null
-              }
-            case None => pos.get(name) match {
-              case Some(p) if p >= 0 => decode(name, rec.get(p))
-              case _                 => dflt.getOrElse(name, null)
-            }
-          }
-          if (filters.forall(eval(_, v).contains(true))) deleted = true
-          else if (!withLineage) keep += schema.fields.map(f => v(f.name))
-          else {
-            val id: Any = AvroDirSource.rowIdOf(
-              if (physIdPos >= 0) rec.get(physIdPos) else null,
-              lineageBase, rowPos)
-            keep += (schema.fields.map(f => v(f.name)) :+ id)
-          }
-        }
-        rowPos += 1
-      }
-    } finally reader.close()
-    (keep.toSeq, deleted)
+  /** What a DELETE pass found in one file: the positions of the live
+    * rows the predicate deletes, the count of live rows it keeps and,
+    * when asked for, those kept rows — each in the CURRENT schema's
+    * shape plus ONE trailing value, its stable row id. */
+  private final class Pass {
+    val matched = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var kept = 0L
+    val survivors = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
   }
 
-  /** Merge-on-read DELETE for one container file (one Spark task):
-    * report the ROW POSITIONS the predicate deletes among the file's
-    * still-live rows (positions in `existingDv` are already gone) plus
-    * the live-row count that would remain. NOTHING is written — the
-    * caller merges the positions into the file's deletion vector and
-    * commits O(matched rows) sidecar bytes instead of rewriting the
-    * file. */
-  def matchedPositions(dirPath: String, fileName: String, schema: StructType,
-      filters: Array[Filter], existingDv: Set[Long],
-      lineageBase: Long = -1L): (Seq[Long], Long) = {
-    val matched = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var live = 0L
-    val reader = new DataFileReader[GenericRecord](
-      AvroSnapshots.resolveFile(dirPath, fileName),
-      new GenericDatumReader[GenericRecord]())
+  /** The one DELETE walk: evaluates the predicate conjunction on every
+    * LIVE row of `file` (rows dead under `deletes` are already gone:
+    * never evaluated, never reported) with the columns laid out by
+    * [[FileColumns]] and DECIMAL values decoded exactly, so a DELETE
+    * matches the rows the same predicate SELECTs. */
+  private def pass(file: File, schema: StructType, filters: Array[Filter],
+      deletes: FileColumns.Deletes, firstRowId: Long,
+      keepRows: Boolean): Pass = {
+    val out = new Pass
+    val rows = new FileColumns.Rows(file, schema, firstRowId, Seq(deletes))
     try {
-      val pos: Map[String, Int] = schema.fields.map { f =>
-        f.name -> (f.name +: AvroDirSource.aliasesOf(f)).iterator
-          .map(n => Option(reader.getSchema.getField(n)).map(_.pos).getOrElse(-1))
-          .find(_ >= 0).getOrElse(-1)
-      }.toMap
-      // a field absent from this file serves its EXISTS default (ADD
-      // COLUMN ... DEFAULT) — the evaluator must see the same value a
-      // read would, or a DELETE on the defaulted column would match
-      // different rows than the same predicate SELECTs
-      val dflt: Map[String, Any] = schema.fields.map(f =>
-        f.name -> AvroDirSource.existsDefaultAvro(f)).toMap
-      // DECIMAL columns decode their unscaled bytes with the column
-      // scale so cmp() compares them exactly
-      val decScale: Map[String, Int] = schema.fields.collect {
-        case f if f.dataType.isInstanceOf[DecimalType] =>
-          f.name -> f.dataType.asInstanceOf[DecimalType].scale
-      }.toMap
-      def norm(x: Any): Any = x match {
+      val index: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
+      val scale: Array[Int] = schema.fields.map(_.dataType match {
+        case d: DecimalType => d.scale
+        case _              => -1
+      })
+      def value(i: Int): Any = rows.value(i) match {
+        case b: java.nio.ByteBuffer if scale(i) >= 0 => FileColumns.decimal(b, scale(i))
         case u: org.apache.avro.util.Utf8 => u.toString
-        case other => other
+        case o => o
       }
-      def decode(name: String, x: Any): Any = x match {
-        case b: java.nio.ByteBuffer if decScale.contains(name) =>
-          val d = b.duplicate()
-          val bytes = new Array[Byte](d.remaining())
-          d.get(bytes)
-          new java.math.BigDecimal(
-            new java.math.BigInteger(bytes), decScale(name))
-        case o => norm(o)
-      }
-      val physIdPos: Int =
-        Option(reader.getSchema.getField(AvroDirSource.RowIdColumn))
-          .map(_.pos).getOrElse(-1)
-      // identity columns evaluate by their DERIVED value (see scanFile)
-      val identity: Map[String, (Long, Long)] = schema.fields.iterator
-        .flatMap(f => GeneratedColumns.identitySpec(f).map(f.name -> _)).toMap
-      var rowPos = 0L
-      while (reader.hasNext) {
-        val rec = reader.next()
-        if (!existingDv.contains(rowPos)) {
-          val v: String => Any = name => identity.get(name) match {
-            case Some((s0, st0)) =>
-              AvroDirSource.rowIdOf(
-                if (physIdPos >= 0) rec.get(physIdPos) else null,
-                lineageBase, rowPos) match {
-                case rid: java.lang.Long =>
-                  java.lang.Long.valueOf(s0 + st0 * rid.longValue)
-                case _ => null
-              }
-            case None => pos.get(name) match {
-              case Some(p) if p >= 0 => decode(name, rec.get(p))
-              case _                 => dflt.getOrElse(name, null)
-            }
-          }
-          if (filters.forall(eval(_, v).contains(true))) matched += rowPos
-          else live += 1
+      val v: String => Any = a => index.get(a).map(value).orNull
+      while (rows.nextLive()) {
+        if (filters.forall(eval(_, v).contains(true))) out.matched += rows.pos
+        else {
+          out.kept += 1
+          if (keepRows)
+            out.survivors += (Array.tabulate[Any](schema.length)(value) :+ rows.rowId)
         }
-        rowPos += 1
       }
-    } finally reader.close()
-    (matched.toSeq, live)
+    } finally rows.close()
+    out
+  }
+
+  /** Merge-on-read DELETE for one manifest entry (one Spark task):
+    * report the ROW POSITIONS the predicate deletes among the file's
+    * live rows plus the live-row count that would remain. NOTHING is
+    * written — the caller merges the positions into the file's deletion
+    * vector and commits O(matched rows) sidecar bytes instead of
+    * rewriting the file. */
+  def matchedPositions(dirPath: String, e: AvroSnapshots.FileEntry,
+      schema: StructType, filters: Array[Filter]): (Seq[Long], Long) = {
+    val p = pass(AvroSnapshots.resolveFile(dirPath, e.name), schema, filters,
+      FileColumns.Deletes.read(dirPath, e.dv, e.eq), e.firstRowId,
+      keepRows = false)
+    (p.matched.toSeq, p.kept)
   }
 
   /** Returns the rewrite's exact column-stats JSON for the manifest. */
@@ -332,7 +218,7 @@ object AvroFilterEval extends Serializable {
       rows.foreach { vals =>
         val rec = new GenericData.Record(avroSchema)
         var i = 0
-        while (i < vals.length) {
+        while (i < schema.length) {
           // decimal survivors were decoded to BigDecimal for the
           // evaluator — re-encode as the Avro unscaled bytes; int/float
           // survivors of a type-widened column upcast to the CURRENT
@@ -357,58 +243,61 @@ object AvroFilterEval extends Serializable {
     stats.toJson
   }
 
-  /** Copy-on-write DELETE for one container file (runs as one Spark
-    * task). A file with no matching rows is left byte-identical; a file
-    * whose every row matches is deleted; a mixed file is rewritten in
-    * the CURRENT table schema (fields resolved by name + rename
-    * aliases, so a delete also modernizes old-schema files) to a temp
-    * sibling then atomically moved over the original. */
+  /** Copy-on-write DELETE for one container file of a plain-path table
+    * (runs as one Spark task). A file with no matching rows is left
+    * byte-identical; a file whose every row matches is deleted; a mixed
+    * file is rewritten in the CURRENT table schema (so a delete also
+    * modernizes old-schema files) to a temp sibling then atomically
+    * moved over the original. */
   def rewriteFile(filePath: String, schema: StructType, filters: Array[Filter]): Unit = {
     val file = new File(filePath)
-    val (keep, deleted) = scanFile(file, schema, filters)
-    if (!deleted) return
-    if (keep.isEmpty) { file.delete(); return }
+    val p = pass(file, schema, filters, FileColumns.Deletes.none, -1L,
+      keepRows = true)
+    if (p.matched.isEmpty) return
+    if (p.survivors.isEmpty) { file.delete(); return }
     val tmp = new File(file.getParentFile, s".${file.getName}.rewrite")
-    writeRows(tmp, schema, keep)
+    writeRows(tmp, schema, p.survivors.toSeq)
     Files.move(tmp.toPath, file.toPath,
       StandardCopyOption.REPLACE_EXISTING)
     ()
   }
 
-  /** The VERSIONED delete flavor — data files are immutable (older
-    * snapshots reference them), so instead of mutating in place this
-    * reports what the next manifest should carry for this file:
-    *   - no matching rows  → Some((original name, None)), file
-    *     untouched (the caller carries its previous stats forward);
-    *   - every row matches → None (the file leaves the view but STAYS
+  /** The VERSIONED delete flavor for one manifest entry — data files
+    * are immutable (older snapshots reference them), so instead of
+    * mutating in place this reports what the next manifest should carry
+    * for this file:
+    *   - no matching rows and no deletion vector → Some((original name,
+    *     None)), file untouched (the caller keeps the original entry);
+    *   - no live row survives → None (the file leaves the view but STAYS
     *     on disk for time travel; snapshot expiry reclaims it);
-    *   - mixed             → survivors written to a NEW uniquely-named
-    *     sibling (`part-<jobId>-rw-<orig>`), Some((new name, fresh
-    *     exact stats JSON for the manifest)).
+    *   - otherwise → the surviving live rows written to a NEW
+    *     uniquely-named sibling (`part-<jobId>-rw-<orig>`), Some((new
+    *     name, fresh exact stats JSON for the manifest)). The rewrite
+    *     materializes the entry's deletion vector and equality deletes.
     * Runs as one Spark task per candidate file. */
-  def rewriteVersioned(dirPath: String, fileName: String, schema: StructType,
-      filters: Array[Filter], jobId: String,
-      dv: Set[Long] = Set.empty,
-      firstRowId: Long = -1L): Option[(String, Option[String])] = {
-    val file = AvroSnapshots.resolveFile(dirPath, fileName)
-    val (keep, deleted) =
-      scanFile(file, schema, filters, dv, firstRowId, withLineage = true)
+  def rewriteVersioned(dirPath: String, e: AvroSnapshots.FileEntry,
+      schema: StructType, filters: Array[Filter],
+      jobId: String): Option[(String, Option[String])] = {
+    val p = pass(AvroSnapshots.resolveFile(dirPath, e.name), schema, filters,
+      FileColumns.Deletes.read(dirPath, e.dv, e.eq), e.firstRowId,
+      keepRows = true)
     // an existing deletion vector counts as "something changed": the
     // rewrite MATERIALIZES it away, so the original entry (file + dv)
     // must not be carried forward verbatim
-    if (!deleted && dv.isEmpty) Some((fileName, None))
-    else if (keep.isEmpty) None
+    if (p.matched.isEmpty && e.dv.isEmpty) Some((e.name, None))
+    else if (p.survivors.isEmpty) None
     else {
       // a foreign reference's rewrite lands OWNED in this table's
       // directory under the foreign file's base name (absolute entry
       // names must never leak into new file names)
-      val newName = s"part-$jobId-rw-${new File(fileName).getName}"
+      val newName = s"part-$jobId-rw-${new File(e.name).getName}"
       // surviving rows keep their stable ids as a physical trailing
       // `_row_id` column (row lineage through COW DELETE — round 17)
       val schemaWithId = StructType(schema.fields :+
         org.apache.spark.sql.types.StructField(AvroDirSource.RowIdColumn,
           org.apache.spark.sql.types.LongType, nullable = true))
-      val stats = writeRows(new File(dirPath, newName), schemaWithId, keep)
+      val stats = writeRows(new File(dirPath, newName), schemaWithId,
+        p.survivors.toSeq)
       Some((newName, Some(stats)))
     }
   }

@@ -262,7 +262,7 @@ object AvroStats {
     // are null (values derive from row lineage), and a recorded
     // all-null column would wrongly prune value predicates — scans
     // synthesize exact identity bounds from the entry's row-id range
-    // instead ([[GeneratedColumns.identityBounds]])
+    // instead ([[FileColumns.Pruning]])
     private val track: Array[Boolean] =
       schema.fields.map(f =>
         trackable(f.dataType) && !GeneratedColumns.isIdentity(f))
@@ -282,10 +282,7 @@ object AvroStats {
       if (v == null) { nulls(i) += 1; return }
       val n = v match {
         case b: java.nio.ByteBuffer if decScale(i) >= 0 =>
-          val d = b.duplicate()
-          val bytes = new Array[Byte](d.remaining())
-          d.get(bytes)
-          new java.math.BigDecimal(new java.math.BigInteger(bytes), decScale(i))
+          FileColumns.decimal(b, decScale(i))
         // the writer hands strings as Avro Utf8 (UTF-8 bytes, no
         // java.lang.String detour on the encode path) — normalize here
         // so bounds/NDV keep their String domain exactly as before

@@ -286,11 +286,7 @@ object CheckConstraints {
       val v: String => Any = name => ord.get(name) match {
         case Some(i) => rec.get(i) match {
           case b: java.nio.ByteBuffer if decScale.contains(name) =>
-            val d = b.duplicate()
-            val bytes = new Array[Byte](d.remaining())
-            d.get(bytes)
-            new java.math.BigDecimal(
-              new java.math.BigInteger(bytes), decScale(name))
+            FileColumns.decimal(b, decScale(name))
           case u: org.apache.avro.util.Utf8 => u.toString
           case o => o
         }

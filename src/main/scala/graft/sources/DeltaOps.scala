@@ -50,14 +50,6 @@ class GraftDeltaOperation(path: String, tableSchema: StructType,
   private def currentEntries(): Seq[AvroSnapshots.FileEntry] =
     AvroSnapshots.head(path, branch).map(_.entries).getOrElse(Nil)
 
-  private def resolveStats(st: Map[String, AvroStats.ColStats])(
-      a: String): Option[AvroStats.ColStats] =
-    tableSchema.fields.find(_.name.equalsIgnoreCase(a)).flatMap { fld =>
-      (fld.name +: AvroDirSource.aliasesOf(fld)).iterator
-        .flatMap(st.get).nextOption()
-        .map(AvroStats.coerce(_, fld.dataType))
-    }
-
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan with Batch with SupportsPushDownRequiredColumns
@@ -67,9 +59,10 @@ class GraftDeltaOperation(path: String, tableSchema: StructType,
         required = requiredSchema
       // The UPDATE/MERGE condition pushes into THIS scan like any
       // other (V2ScanRelationPushDown), and manifest stats prune the
-      // candidate files — a one-key MOR UPDATE reads O(matching
-      // files), not the table. Every filter stays residual (pruning
-      // removes work, never rows).
+      // candidate files (the scan's pruning test: stats with the
+      // identity hull, and bloom) — a one-key MOR UPDATE reads
+      // O(matching files), not the table. Every filter stays residual
+      // (pruning removes work, never rows).
       private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
       override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
           : Array[org.apache.spark.sql.sources.Filter] = {
@@ -82,25 +75,8 @@ class GraftDeltaOperation(path: String, tableSchema: StructType,
       override def readSchema(): StructType = required
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val entries = currentEntries().filter { e =>
-          pushed.isEmpty || {
-            val st = e.stats.map(AvroStats.parse)
-              .getOrElse(Map.empty[String, AvroStats.ColStats])
-            // identity bounds synthesize from the entry's row-id range
-            // (identity columns record no stored stats by design)
-            val resolver: String => Option[AvroStats.ColStats] = a =>
-              resolveStats(st)(a).orElse {
-                tableSchema.fields.find(f => f.name.equalsIgnoreCase(a) &&
-                    GeneratedColumns.isIdentity(f)).flatMap { f =>
-                  val (s0, st0) = GeneratedColumns.identitySpec(f).get
-                  GeneratedColumns.identityBounds(s0, st0,
-                    st.get(AvroDirSource.RowIdColumn), e.firstRowId,
-                    e.stats.flatMap(AvroStats.rowCount))
-                }
-              }
-            AvroStats.fileMightMatch(pushed.toSeq, e.name, resolver)
-          }
-        }
+        val pruning = new FileColumns.Pruning(path, tableSchema)
+        val entries = currentEntries().filter(pruning.mightHold(_, pushed.toSeq))
         // rows are read THROUGH existing vectors and equality deletes
         // (already-deleted rows must not match again), but _pos stays
         // the physical index — new deletes land in the same
@@ -172,8 +148,7 @@ class GraftDeltaOperation(path: String, tableSchema: StructType,
                       val union = (existing ++ newPos).distinct
                       val rows = e.stats.flatMap(AvroStats.rowCount)
                       if (rows.contains(union.size.toLong)) None // fully dead
-                      else Some(e.copy(dv =
-                        Some(DeletionVectors.write(path, union))))
+                      else Some(e.copy(dv = Some(job.deletionVector(union))))
                   }
                 }
                 // UPDATE's delta commit is tagged `update`: its dv deltas

@@ -61,34 +61,6 @@ object GeneratedColumns {
     new MetadataBuilder().withMetadata(md)
       .putString(IdentityKey, s"$start,$step").build()
 
-  /** Identity affine bounds for one manifest entry, synthesized at
-    * plan time: physical `_row_id` stats (a rewrite output) win, else
-    * the entry's assigned [firstRowId, firstRowId + rows) range; None
-    * when the file has no lineage (no pruning — sound). */
-  def identityBounds(start: Long, step: Long,
-      rowIdStats: Option[AvroStats.ColStats],
-      firstRowId: Long, rows: Option[Long]): Option[AvroStats.ColStats] = {
-    def affine(lo: Long, hi: Long): AvroStats.ColStats = {
-      val a = start + step * lo
-      val b = start + step * hi
-      AvroStats.ColStats(Some(Long.box(math.min(a, b))),
-        Some(Long.box(math.max(a, b))), 0L)
-    }
-    rowIdStats match {
-      case Some(s) => (s.min, s.max) match {
-        case (Some(mn: java.lang.Long), Some(mx: java.lang.Long)) =>
-          Some(affine(mn.longValue, mx.longValue))
-        case _ => None
-      }
-      case None =>
-        rows match {
-          case Some(n) if firstRowId >= 0 && n > 0 =>
-            Some(affine(firstRowId, firstRowId + n - 1))
-          case _ => None
-        }
-    }
-  }
-
   /** Compile the schema's generated columns to BOUND (ordinal-based,
     * serializable) expressions against `writeSchema` — driver-side
     * only. `writeSchema` may carry trailing lineage columns beyond

@@ -689,16 +689,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val written = runWriteJob(job, ordered.queryExecution.toRdd,
       job.factory(schema, loadPartSpec(dir),
         GeneratedColumns.boundExprs(schema, session)))
-    def resolve(st: Map[String, AvroStats.ColStats])(
-        a: String): Option[AvroStats.ColStats] =
-      schema.fields.find(_.name.equalsIgnoreCase(a)).flatMap { fld =>
-        (fld.name +: AvroDirSource.aliasesOf(fld)).iterator
-          .flatMap(st.get).nextOption()
-          .map(AvroStats.coerce(_, fld.dataType))
-      }
-    // sidecar content is retry-invariant — write it at most once
-    lazy val eqName: String = EqualityDeletes.writeMulti(
-      dirPath, keyFields.map(_.name), kinds, keys.toSeq)
+    // sidecar content is retry-invariant — write it at most once; the
+    // job removes it only when the whole apply is refused
+    lazy val eqName: String =
+      job.equalityDelete(keyFields.map(_.name), kinds, keys.toSeq)
     var attempt = 0
     var applied: Option[(Long, Long, Long)] = None
     job.guarded(while (applied.isEmpty) {
@@ -713,8 +707,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               // attach pruning: per-column In over the batch's key
               // components — a NECESSARY condition of tuple membership
               // (sound; a composite tuple can only live in a file
-              // admitting every component), probed against stats and
-              // blooms per column
+              // admitting every component), probed by the one pruning
+              // test (stats and blooms) per column
               val inFs: Seq[org.apache.spark.sql.sources.Filter] =
                 keyFields.zipWithIndex.map { case (f, i) =>
                   val lits: Array[Any] =
@@ -723,26 +717,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                     else keys.map(t => t(i): Any).toArray[Any]
                   org.apache.spark.sql.sources.In(f.name, lits)
                 }
-              val probeBloom = BloomFilters.anySidecars(dirPath)
-              val keyNamesOf: Map[String, Seq[String]] = keyFields.map(f =>
-                f.name -> (f.name +: AvroDirSource.aliasesOf(f)).toSeq).toMap
               // a file predating a key column (or stats) cannot carry an
               // equality ref — its rows hold the exists-default the sidecar
               // cannot express. CDC keys exist from table creation; refuse
               // loudly instead of deleting the wrong rows.
               entries.foreach(e => require(
                 keyFields.forall(f => e.stats.exists(sj =>
-                  keyNamesOf(f.name).exists(AvroStats.parse(sj).contains))),
+                  FileColumns.recorded(f, AvroStats.parse(sj)).isDefined)),
                 s"apply_cdc: file ${e.name} predates stats or a key column " +
                   s"of '$keyCol' — compact the table first"))
-              val touched = entries.filter { e =>
-                val st = e.stats.map(AvroStats.parse)
-                  .getOrElse(Map.empty[String, AvroStats.ColStats])
-                AvroStats.fileMightMatch(inFs, e.name, resolve(st)) &&
-                (!probeBloom || BloomFilters.fileMightMatch(
-                  dirPath, e.name, inFs,
-                  a => keyNamesOf.getOrElse(a, Seq(a))))
-              }.map(_.name).toSet
+              val pruning = new FileColumns.Pruning(dirPath, schema)
+              val touched =
+                entries.filter(pruning.mightHold(_, inFs)).map(_.name).toSet
               if (touched.isEmpty) entries
               else entries.map(e =>
                 if (touched(e.name)) e.copy(eq = e.eq :+ eqName) else e)
@@ -910,9 +896,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     def keyEntry(e: AvroSnapshots.FileEntry): Option[AvroStats.ColStats] =
       e.stats.map(AvroStats.parse).flatMap { st =>
         if (zo) st.get(SortSpec.ZShadowName)
-        else (leadField.name +: AvroDirSource.aliasesOf(leadField)).iterator
-          .flatMap(st.get).nextOption()
-          .map(AvroStats.coerce(_, leadField.dataType))
+        else FileColumns.stats(schema, st)(leadField.name)
       }
     def hull(e: AvroSnapshots.FileEntry): Option[(Any, Any)] =
       keyEntry(e).flatMap(cs => for (mn <- cs.min; mx <- cs.max) yield (mn, mx))
@@ -1647,7 +1631,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           if (s.fieldNames.contains(rn.newName)) throw new IllegalArgumentException(
             s"column ${rn.newName} already exists in ${ident.name}")
           val f = s.fields(i)
-          val aliases = (old +: AvroDirSource.aliasesOf(f)).toArray
+          val aliases = (old +: FileColumns.aliasesOf(f)).toArray
           val md = new MetadataBuilder().withMetadata(f.metadata)
             .putStringArray(AvroDirSource.AliasKey, aliases).build()
           StructType(s.fields.updated(i, f.copy(name = rn.newName, metadata = md)))

@@ -39,7 +39,11 @@ import AvroSnapshots.FileEntry
   * truncated container. An unversioned truncate deletes every file no
   * message names, which also clears uncommitted streaming partials.
   *
-  * Abort. Deletes every file of the job.
+  * Sidecars. The deletion vectors and equality deletes a job writes on
+  * the driver for its commit ([[deletionVector]], [[equalityDelete]])
+  * belong to the job too.
+  *
+  * Abort. Deletes every file of the job, sidecars included.
   *
   * Refused commit. A publish that throws for any reason (a conflict
   * refusal, a failed guard, an I/O error) aborts the job before the
@@ -61,10 +65,24 @@ private[sources] final class WriteJob private (path: String, val id: String,
     }
   }
 
+  private val sidecars = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private def own(sidecar: String): String = { sidecars.add(sidecar); sidecar }
+
+  /** Writes a deletion vector of `positions` owned by this job. */
+  def deletionVector(positions: Seq[Long]): String =
+    own(DeletionVectors.write(path, positions))
+
+  /** Writes an equality-delete sidecar owned by this job. */
+  def equalityDelete(columns: Seq[String], kinds: Seq[String],
+      keys: Seq[Seq[String]]): String =
+    own(EqualityDeletes.writeMulti(path, columns, kinds, keys))
+
   /** Deletes every file of this job. */
-  def abort(): Unit =
+  def abort(): Unit = {
     AvroDirSource.listAllAvro(path).filter(f => owns(f.getName))
       .foreach(_.delete())
+    sidecars.forEach { n => new File(path, n).delete(); () }
+  }
 
   /** Runs `commit`; if it throws, aborts the job first. */
   def guarded[A](commit: => A): A =

@@ -14,7 +14,8 @@ import graft.sources.AvroSnapshots
   * (expectedParent), and the append auto-rebase. The suite replays
   * each worker's landed-op log serially and requires the final table
   * to equal the model exactly; every retained version must still load
-  * with every referenced file on disk.
+  * with every referenced file on disk, and every sidecar on disk must
+  * be referenced by a retained version.
   */
 class CrossJvmWriterFuzzSuite extends SparkSuiteBase {
 
@@ -112,6 +113,16 @@ class CrossJvmWriterFuzzSuite extends SparkSuiteBase {
         e.dv.foreach(d => assert(new File(dirp, d).isFile, s"v$v missing dv $d"))
         e.eq.foreach(q => assert(new File(dirp, q).isFile, s"v$v missing eq $q"))
       }
+    }
+    // and conversely: every deletion-vector and equality-delete sidecar
+    // on disk is referenced by a retained version (a refused commit
+    // removes the sidecars it wrote)
+    val referenced = AvroSnapshots.versions(dirp).flatMap(v =>
+      AvroSnapshots.load(dirp, v).get.entries.flatMap(e => e.dv.toSeq ++ e.eq)).toSet
+    for (sub <- Seq("_dv", "_eq");
+         f <- Option(new File(dirp, sub).listFiles()).getOrElse(Array.empty[File])) {
+      val name = s"$sub/${f.getName}"
+      assert(referenced(name), s"$name is referenced by no retained version")
     }
   }
 }

@@ -130,6 +130,26 @@ class EqualityDeleteSuite extends SparkSuiteBase {
     assert(spark.table("eqcat.db.e5").count() == 198)
   }
 
+  test("a copy-on-write DELETE never brings back an equality-deleted row") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS eqcat.db.c1")
+    spark.sql("CREATE TABLE eqcat.db.c1 (k BIGINT, v STRING)")
+    // one data file: the rewrite below is the file that holds k = 3
+    spark.sql("""INSERT INTO eqcat.db.c1
+                |SELECT /*+ COALESCE(1) */ id, CONCAT('r', id) FROM range(10)""".stripMargin)
+    assert(AvroSnapshots.head(tdir("c1")).get.files.size == 1)
+    spark.sql("CALL eqcat.system.set_delete_mode('db.c1', 'merge-on-read-equality')")
+    spark.sql("DELETE FROM eqcat.db.c1 WHERE k = 3")
+    assert(AvroSnapshots.head(tdir("c1")).get.eqs.nonEmpty)
+    assert(spark.table("eqcat.db.c1").count() == 9)
+    spark.sql("CALL eqcat.system.set_delete_mode('db.c1', 'copy-on-write')")
+    spark.sql("DELETE FROM eqcat.db.c1 WHERE k IN (2, 4)")
+    val got = spark.sql("SELECT k FROM eqcat.db.c1 ORDER BY k")
+      .collect().map(_.getLong(0)).toSeq
+    assert(got == Seq(0L, 1L, 5L, 6L, 7L, 8L, 9L),
+      s"the rewrite resurrected an equality-deleted row: $got")
+  }
+
   test("compaction materializes equality deletes away; expiry reclaims sidecars") {
     mk("e6", 300)
     spark.sql("DELETE FROM eqcat.db.e6 WHERE k IN (1, 2, 3)")
